@@ -10,17 +10,30 @@ import scala.jdk.CollectionConverters._
 /** Replays the reference's own captured fixtures through the real-text
   * pipeline, record-for-record.
   *
-  * Fixture provenance (all under /root/reference/test_events):
-  *  - `_raw_december-21-27-2020-…json` is a REAL captured WordPress
-  *    post. Its golden expectation (src/test/resources/
-  *    golden_december.json) is produced by running the reference's
-  *    CURRENT transforms.py over it — tools/capture_reference_golden.py,
-  *    rerunnable — because the shipped `weekly/2021-01-03__…json`
-  *    artifact belongs to a DIFFERENT post (its January program:
-  *    compare any segment's text) and predates the current date logic
-  *    (Sunday-anchored run-day dates that the current, slug-driven
-  *    code — pinned by the reference's own tests/test_transforms.py —
-  *    cannot emit).
+  * Fixture provenance:
+  *  - src/test/resources/golden_december.json (vendored) is the
+  *    reference's CURRENT transforms.py run over a REAL captured
+  *    WordPress post, `_raw_december-21-27-2020-…json` in the reference
+  *    checkout's test_events/ — tools/capture_reference_golden.py,
+  *    rerunnable. It holds the post's get_text() output
+  *    (`stripped_text`), the raw capture's file name (`source`), and
+  *    the expected records and cleaned records. The shipped
+  *    `weekly/2021-01-03__…json` artifact is no oracle for this post:
+  *    it belongs to a DIFFERENT post (its January program: compare any
+  *    segment's text) and predates the current date logic (Sunday-
+  *    anchored run-day dates that the current, slug-driven code —
+  *    pinned by the reference's own tests/test_transforms.py — cannot
+  *    emit).
+  *  - The December records and cleaned replays are hermetic: they start
+  *    from the vendored `stripped_text` as `content_html` (stripText
+  *    leaves it unchanged: no tags, no character references, only bare
+  *    "Clean & Jerk" ampersands) and from the slug in the capture's
+  *    file name (`_raw_<slug>.json`, asserted at capture time), with
+  *    title and post date null — so the expected dates come from the
+  *    slug parse plus the Sunday-before anchor alone. The raw HTML →
+  *    text step is the strip check's job.
+  *  - Only the strip check (the raw post) and the January replay still
+  *    read the reference checkout's test_events/ directly.
   *  - `segmented_sessions.json` + `weekly/2021-01-03__…json` ARE a
   *    consistent captured pair of that January program, so the January
   *    replay reconstructs post text from the segment capture and
@@ -58,6 +71,15 @@ class WodRealTextGoldenSpec extends SparkTestBase {
       postsSchema)
   }
 
+  /** The December post as the records and cleaned replays see it: its
+    * vendored get_text() output and the slug from the capture's name. */
+  private lazy val decemberStrippedPosts = {
+    val slug = golden.get("source").asText().stripPrefix("_raw_").stripSuffix(".json")
+    spark.createDataFrame(
+      java.util.List.of(Row(1L, golden.get("stripped_text").asText(), slug, null, null)),
+      postsSchema)
+  }
+
   test("december raw post: stripText matches BeautifulSoup get_text byte-for-byte") {
     val ours = decemberPosts.select(WodRealText.stripText(
       org.apache.spark.sql.functions.col("content_html"))).head.getString(0)
@@ -65,7 +87,7 @@ class WodRealTextGoldenSpec extends SparkTestBase {
   }
 
   test("december raw post: records match the reference pipeline record-for-record") {
-    val ours = WodRealText.records(decemberPosts)
+    val ours = WodRealText.records(decemberStrippedPosts)
       .orderBy("session_idx")
       .collect()
       .map(r => (r.getString(r.fieldIndex("date")),
@@ -82,7 +104,7 @@ class WodRealTextGoldenSpec extends SparkTestBase {
   }
 
   test("december raw post: cleaned records match the reference cleaner") {
-    val ours = WodRealText.cleaned(decemberPosts).orderBy("session_idx").collect()
+    val ours = WodRealText.cleaned(decemberStrippedPosts).orderBy("session_idx").collect()
     val expected = golden.get("cleaned").elements().asScala.toVector
     assert(ours.length == expected.size)
     val cols = Seq("date", "session", "warm_up", "segment_a", "segment_b",

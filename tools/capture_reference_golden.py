@@ -85,6 +85,9 @@ def main():
                             clean_sessions_df_records)
 
     post = json.load(open(RAW))
+    # WodRealTextGoldenSpec rebuilds the slug from `source`; keep the two equal.
+    assert os.path.basename(RAW) == f"_raw_{post['slug']}.json", (
+        f"{os.path.basename(RAW)} does not carry slug {post['slug']!r}")
     text = get_text(post["content"]["rendered"])
     stripped = {
         "text": text,
