@@ -23,68 +23,19 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // parsed BEFORE the session/warm-up so a malformed value fails fast
-    // with a NAMED error instead of an anonymous NumberFormatException
-    // after minutes of warm-up (min-of-THREE default: single-run sf0.1
-    // numbers on this VM swing up to ~2.4× with machine load)
+    // cpus and passes are parsed BEFORE the session/warm-up so a
+    // malformed value fails fast with a NAMED error instead of an
+    // anonymous NumberFormatException after minutes of warm-up
+    // (min-of-THREE default: single-run sf0.1 numbers on this VM swing
+    // up to ~2.4× with machine load)
     val passes = math.max(2, sys.env.get("SPARK_GRAFT_BENCH_PASSES") match {
       case None => 3
       case Some(v) => scala.util.Try(v.trim.toInt).getOrElse(
         sys.error(s"SPARK_GRAFT_BENCH_PASSES must be an integer, got '$v'"))
     })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Split broadcast thresholds by estimate quality. The STATIC
-      // planner sees compressed parquet footer sizes (~4× smaller than
-      // the in-memory rows) — a generous static threshold makes it
-      // broadcast million-row tables through the single-threaded
-      // driver-side relation build (measured: 64m static broadcast the
-      // whole 26 MB/1.5M-row sf1 orders table in q3/q5 and DOUBLED
-      // them vs. the shuffle plan). AQE decides from MEASURED
-      // post-shuffle sizes, so IT gets the node-sized 64 MB: a pruned
-      // join side (q3/q5's orders⋈customer) still converts to
-      // broadcast at runtime, and the estimate can't lie.
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "10m"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_BROADCAST_THRESHOLD", "64m"))
-      // File-split sizing for a fat local node: 16 MB split target and
-      // ~zero open cost (NVMe/page cache), so a 32-file scale table
-      // scans ~32-wide instead of being packed into 4×128 MB tasks.
-      // On a real cluster the same knobs are sized to executor count;
-      // the default 128 MB/4 MB assumes remote object-store opens.
-      // (The driver's sf0.1 tables are single-row-group files — there
-      // splits can't help either engine; this matters for ScaleGen
-      // layouts, which write 32 MB row groups.)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // Hash join over sort-merge when a build side exists: at 4 GiB
-      // per thread a per-partition hash build of the SMALLER side
-      // always fits (and SHJ spills since 3.x if it doesn't), so the
-      // two sorts around every big join are pure overhead — measured
-      // ~15-20% on q3/q5 at sf3. SMJ remains for non-equi/huge-both-
-      // sides cases; AQE skew splitting applies to SHJ the same way.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // set at construction (not lazily in ensureBucketed) so plan
-      // shapes are identical whether or not a bucketed query ran first
-      // in this session — see BucketedQueries.ensureBucketed
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // events.ts NTZ->TZ normalization (Tables.tsToNanos) is exact only
-      // under a pinned UTC session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      // fresh warehouse per run: bucketed saves from a previous JVM
-      // would otherwise collide (in-memory catalog forgets the table,
-      // its location on disk persists -> LOCATION_ALREADY_EXISTS)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_bench_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     // per-query JSON observability lines on stderr (stdout carries the
     // bench protocol line; see ObservabilityListener) AND into a .jsonl
     // next to the bench artifact, so per-query shuffle/spill is part of
@@ -199,10 +150,11 @@ object Bench {
     } catch { case _: Exception => -1.0 }
     val proto = s""""protocol":{"passes":$passes,"load1":$load1,"run_id":"$runId"}"""
     // "cpus" rides the artifact (ADDITIVE, r20 verdict #2): the bench
-    // honors $SPARK_GRAFT_CPUS (master/shuffle partitions above), and
+    // honors $SPARK_GRAFT_CPUS (master/shuffle partitions), and
     // carrying it in the JSON lets any consumer assert two runs really
     // came from different core counts instead of inferring it from
-    // flat small-SF scaling ratios.
+    // flat small-SF scaling ratios. GraftSession parsed it to a
+    // positive Int, so the field is always a JSON number.
     val json =
       s"""{"metric":"total","value":${r4(total)},"unit":"sec","cpus":$cpus,""" +
       s""""lanes":{"batch":${r4(total - streamTotal)},"streaming":${r4(streamTotal)}},""" +

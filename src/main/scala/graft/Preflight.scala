@@ -176,13 +176,7 @@ object Preflight {
     * queries start failing for no apparent reason. */
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus = 2)
     val drift = check(spark, dir)
     spark.stop()
     if (drift.isEmpty) println(s"PREFLIGHT OK: $dir matches the 10-table contract")

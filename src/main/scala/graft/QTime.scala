@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev tool: time individual queries by name (warm-up run + min of two
   * timed passes, mirroring Bench's steady-state protocol). Resolves
@@ -11,48 +11,20 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_WARMUP_DIR (skipped when absent or equal to sfDir).
   * SPARK_GRAFT_QTIME_OUT=<file> additionally writes one JSON object
   * {"sf":…, "queries":{name:{sec,rows},…}} — the machine-readable
-  * artifact for scale benches.
+  * artifact for scale benches. For the executed plan of a query, use
+  * PlanDump.
   */
 object QTime {
+  /** Declared queries plus the layout variants and their plain twins. */
+  def registry: Map[String, (SparkSession, String) => DataFrame] =
+    SparkEntry.queries ++ operators.BucketedQueries.all ++ operators.PartitionedLayout.all
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same split broadcast thresholds as Bench (see rationale there):
-      // conservative static (compressed-size estimates), node-sized AQE
-      // (measured sizes)
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BROADCAST_THRESHOLD", "10m"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_BROADCAST_THRESHOLD", "64m"))
-      // split/pack file scans toward one task per ~16 MB rather than
-      // the 128 MB default that packs a 32-file scale table into 4
-      // tasks on a 32-thread node; openCost ~0 on local NVMe/page
-      // cache (same settings as Bench — see rationale there)
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // set at construction (not lazily in ensureBucketed) so plan
-      // shapes are identical whether or not a bucketed query ran first
-      // in this session — see BucketedQueries.ensureBucketed
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // events.ts NTZ->TZ normalization (Tables.tsToNanos) is exact only
-      // under a pinned UTC session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      // fresh warehouse per run: bucketed saves from a previous JVM
-      // would otherwise collide (Bench.scala has the same rationale)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_qtime_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val registry = SparkEntry.queries ++ operators.BucketedQueries.all ++
-      operators.PartitionedLayout.all
+    val spark = GraftSession.build(cpus)
     val out = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long)]
     names.foreach { n =>
       val fn = registry(n)
@@ -84,14 +56,6 @@ object QTime {
       out(n) = (ts.min, cnt)
       val detail = ts.zipWithIndex.map { case (t, i) => f"p${i + 1}=$t%.2f" }.mkString(" ")
       println(f"QTIME $n%-24s ${ts.min}%8.2f s  ($detail) rows=$cnt")
-      // SPARK_GRAFT_QTIME_EXPLAIN=1: dump the POST-execution physical
-      // plan (AQE's final shape — coalesced reads, runtime join picks —
-      // which a pre-execution explain never shows)
-      if (sys.env.contains("SPARK_GRAFT_QTIME_EXPLAIN")) {
-        val executed = fn(spark, sfDir)
-        executed.collect(): Unit
-        println(executed.queryExecution.executedPlan.toString)
-      }
     }
     sys.env.get("SPARK_GRAFT_QTIME_OUT").foreach { f =>
       val qs = out.map { case (k, (sec, rows)) =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator: writes an N× replica of a source
@@ -54,17 +54,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleGen <srcDir> <dstDir> <replicas>")
     val (src, dst, n) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // events.ts NTZ->TZ normalization (Tables.tsToNanos) is exact only
-      // under a pinned UTC session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def write(t: String, df: DataFrame, files: Int,

@@ -84,18 +84,9 @@ object SkewBench {
     require(args.length == 3,
       "usage: SkewBench <srcSfDir> <dstDir> <replicas>  (replicas=0: real-edge lanes only)")
     val (src, dst, n) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val outFile = sys.env.getOrElse("SPARK_GRAFT_SKEW_OUT", "skewbench.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // events.ts NTZ->TZ normalization (Tables.tsToNanos) is exact only
-      // under a pinned UTC session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     if (n > 0) gen(spark, src, dst, n)
 
     def fact = spark.read.parquet(s"$dst/events_skew.parquet")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -17,28 +16,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: verify a comma-separated query subset (dev loop)
     val only: Option[String] = args.lift(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // legacy layouts ship events.ts as parquet TIMESTAMP(NANOS):
-      // read those as long nanos (current timestamp[us] data is
-      // normalized by Tables.events instead)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // set at construction (not lazily in ensureBucketed) so plan
-      // shapes are identical whether or not a bucketed query ran first
-      // in this session — see BucketedQueries.ensureBucketed
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      // layout-primary queries (SparkEntry.layoutPrimary) save bucketed
-      // tables: give them a fresh throwaway warehouse — the driver's
-      // cwd may not be writable, and a stale location from a previous
-      // JVM would collide (same rationale as Bench/QTime)
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_verify_wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's own session: the gate checks the plans Bench times
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // Testdata-contract preflight: on drift, emit ONE named error (to
     // stderr and the out dir) — then still attempt every query, so one

@@ -90,7 +90,9 @@ object WodRealText {
       }
     def fromPat(text: Column, pat: String): Column = {
       val m = monthNum(regexp_extract(text, pat, 1))
-      val day = regexp_extract(text, pat, 2).cast("int")
+      // try_cast: a text with no date extracts '' (and the ANSI cast
+      // would throw for the whole batch) — null falls through instead
+      val day = regexp_extract(text, pat, 2).try_cast("int")
       val firstOfMonth = when(regexp_extract(text, pat, 4) =!= "" && m.isNotNull,
         make_date(regexp_extract(text, pat, 4).cast("int"), m, lit(1)))
       when(day.between(1, dayofmonth(last_day(firstOfMonth))),

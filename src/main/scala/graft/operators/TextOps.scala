@@ -251,20 +251,7 @@ object TextOps {
     * shuffle is the per-doc re-assembly aggregate, keyed by doc_id.
     * Fully-boilerplate documents stay in the output with n_kept = 0
     * and md5('') — a pipeline must see what it emptied. */
-  def textCleanBoilerplate(s: SparkSession, d: String): DataFrame =
-    cleanBoilerplateCore(s, d, sharedExchange = true)
-
-  /** Lab-only A/B twin (r20 verdict #3): the pre-8419a1c chained-
-    * groupBy df build, identical rows. The r20 plan improvement
-    * (8→6 Exchange) was driver-measured SLOWER (1.12→1.41 s) against
-    * the builder's same-window QTime win — this probe exists so the
-    * two forms can be timed in ONE session under the bench protocol
-    * and the loser recorded. Not a declared query. */
-  private[graft] def textCleanBoilerplateChained(s: SparkSession, d: String): DataFrame =
-    cleanBoilerplateCore(s, d, sharedExchange = false)
-
-  private def cleanBoilerplateCore(s: SparkSession, d: String,
-      sharedExchange: Boolean): DataFrame = {
+  def textCleanBoilerplate(s: SparkSession, d: String): DataFrame = {
     import DedupOps.TruncOps
     // positional sentence occurrences, materialized once (df build +
     // re-assembly both consume them)
@@ -279,10 +266,7 @@ object TextOps {
     // (doc_id, sent_h) aggregate's ClusteredDistribution (partition
     // keys ⊂ clustering keys) AND the sent_h-grain df aggregate, so the
     // second exchange the chained groupBys planned is gone.
-    val grouped =
-      if (sharedExchange) sents.repartition(col("sent_h"))
-      else sents
-    val dfs = grouped
+    val dfs = sents.repartition(col("sent_h"))
       .groupBy("doc_id", "sent_h").agg(count(lit(1)).as("n_occ"))
       .groupBy(col("sent_h").as("sent_k")).agg(count(lit(1)).as("df"))
     sents.join(dfs, col("sent_h") === col("sent_k"))

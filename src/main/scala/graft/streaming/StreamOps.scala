@@ -546,42 +546,6 @@ object StreamOps {
     }).drop("p_us", "v_us")
   }
 
-  /** Lab decomposition probes for the outer-join lanes (r18): the
-    * attr_* discipline applied to streaming — (a) source floor: both
-    * filtered sides scanned, projected and parquet-sunk with NO join
-    * (file-stream source + sink cost); (b) inner: the same two
-    * watermarked streams through the stream-stream join and the
-    * parquet sink, no outer state. full-lane − inner ≈ outer-state
-    * hold/emit + null-lane sink volume; inner − floor ≈ join
-    * state-store commit + the user_id shuffle. */
-  private[graft] def probeSourceFloor(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
-    def src = Tables.normalizeEventTs(
-        s.readStream.schema(schema).parquet(streamDir(d, "events")))
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-    val both = src.filter(col("event_type") === "view")
-      .select(col("user_id"), col("event_id"), col("event_time"))
-      .unionByName(src.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("event_time")))
-    withStateParts(s) { runToParquet(s, both, "sjfloor") }
-  }
-
-  private[graft] def probeInner(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
-    def src = Tables.normalizeEventTs(
-        s.readStream.schema(schema).parquet(streamDir(d, "events")))
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("event_time").as("v_time"))
-      .withWatermark("v_time", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("event_time").as("p_time"))
-      .withWatermark("p_time", "1 hour")
-    withStateParts(s) { runToParquet(s, joinViewsPurchases(views, purchases), "sjinner") }
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_join" -> (streamJoin _),
     "stream_join_outer" -> (streamJoinOuter _),

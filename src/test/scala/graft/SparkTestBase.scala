@@ -3,22 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One SparkSession shared by every suite (tests fork a single JVM). */
+/** One SparkSession shared by every suite (tests fork a single JVM),
+  * built with the bench's confs so the specs run the plans Bench times. */
 object SharedSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession =
+    GraftSession.build(cpus = 4, logLevel = "ERROR")
   val sf = "/root/testdata/sf0.001"
 }
 

@@ -63,6 +63,10 @@ class WodRealTextSpec extends SparkTestBase {
     val out = recs(posts(Row(1L, html, "february-30-31-2024-x", null,
       "2024-06-03T00:00:00")))
     assert(out.head._2 == "2024-06-03")
+    // a dateless non-null slug falls through to the title's week
+    val dateless = recs(posts(Row(1L, html, "weightlifting-program-17",
+      "May 6-12, 2024 Program", "2024-06-03T00:00:00")))
+    assert(dateless.map(_._2).toSeq == Seq("2024-05-06", "2024-05-07"))
   }
 
   test("pairwise rules: <2 day markers yields zero records; pre-marker content dropped") {

@@ -45,6 +45,25 @@ class IdempotentSinkSpec extends SparkTestBase {
     // winner per key is the smallest doc_id (the deterministic tiebreak)
     assert(kept.agg(max(col("doc_id"))).head().getLong(0) <= 59)
   }
+
+  test("each incoming row is computed once per call") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("idem_sink_once").toString + "/t"
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val nDocs = docs.count()
+    // the input plan's filter counts every row it evaluates
+    val evals = spark.sparkContext.longAccumulator("idem_sink_input_rows")
+    val keep = udf { (id: Long) => evals.add(1); id < 100 }
+    val input = docs.filter(keep(col("doc_id")))
+      .select(col("doc_id"), sha2(col("doc_id").cast("string"), 256).as("idem_key"))
+
+    assert(IdempotentSink.writeKeyed(input, "idem_key", "doc_id", dir) == ((100L, 0L)))
+    assert(evals.sum == nDocs)
+    evals.reset()
+    // replay: the target exists, everything is skipped, still one pass
+    assert(IdempotentSink.writeKeyed(input, "idem_key", "doc_id", dir) == ((0L, 100L)))
+    assert(evals.sum == nDocs)
+  }
 }
 
 class CosineSimilaritySpec extends SparkTestBase {
