@@ -72,9 +72,8 @@ object GraftSession {
       // fresh warehouse per session: bucketed saves from a previous JVM
       // would otherwise collide (in-memory catalog forgets the table,
       // its location on disk persists -> LOCATION_ALREADY_EXISTS), and
-      // the caller's cwd may not be writable
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      // the caller's cwd may not be writable; deleted at JVM exit
+      .config("spark.sql.warehouse.dir", TempDirs.create("graft_wh").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel(logLevel)
     s

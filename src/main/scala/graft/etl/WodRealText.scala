@@ -1,8 +1,15 @@
 package graft.etl
 
+import java.util.regex.Pattern
+
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+/** One session record of a post: its 1-based index and the reference
+  * record's key→value map, in entry order. */
+private[etl] case class PostSession(session_idx: Long, entries: Map[String, String])
 
 /** The reference ETL over REAL WordPress post text (as opposed to
   * WodEtl's synthetic marker-token corpus): HTML post → stripped
@@ -35,16 +42,18 @@ import org.apache.spark.sql.functions._
   *    segment keys to fixed columns, drop the `s`/`r` accident
   *    columns, null session → 'Rest Day', missing → ''.
   *
-  * Scale shape: every stage is a window/groupBy plan keyed by
-  * (post_id[, session]) — posts process independently, so the same
-  * plan fans out over any number of executors; the only shuffles are
-  * one per sessionization level on the post key, same as WodEtl.
+  * Scale shape: the day grouping, segmentation and records steps are
+  * one walk over each post's own lines (a deterministic UDF), then an
+  * `inline` of that post's sessions. Posts are independent, so the
+  * plan has no shuffle, window, sort or join: it scales by input
+  * partitions alone, and its few generated classes compile once per
+  * JVM.
   */
 object WodRealText {
 
-  private val dayRegex =
+  private[etl] val dayRegex =
     "(?i)(Monday)|(Tuesday)|(Wednesday)|(Thursday)|(Friday)|(Saturday)|(Sunday)"
-  private val segRegex = "(?i)(Session)|(Suggested Warm-Up)|^[A-F].$"
+  private[etl] val segRegex = "(?i)(Session)|(Suggested Warm-Up)|^[A-F].$"
   private val monthNames = Seq("january", "february", "march", "april",
     "may", "june", "july", "august", "september", "october", "november",
     "december")
@@ -66,13 +75,13 @@ object WodRealText {
       "&nbsp;" -> " ", "&lt;" -> "<", "&gt;" -> ">",
       "&amp;" -> "&" // last: "&amp;lt;" must yield "&lt;" not "<"
     ).foldLeft(noTags) { case (c, (ent, ch)) =>
-      regexp_replace(c, java.util.regex.Pattern.quote(ent), ch)
+      regexp_replace(c, Pattern.quote(ent), ch)
     }
   }
 
   /** Week anchor: the Sunday before `start` (start − isoweekday).
     * Spark dayofweek is Sun=1..Sat=7; isoweekday is Mon=1..Sun=7. */
-  private def sundayBefore(d: Column): Column =
+  private[etl] def sundayBefore(d: Column): Column =
     date_sub(d, ((dayofweek(d) + lit(5)) % 7) + 1)
 
   /** Date-range start from slug (`month-d1-d2-yyyy`, searched anywhere)
@@ -83,7 +92,7 @@ object WodRealText {
     * make_date throws — so the day is bounds-checked against the
     * month's last_day and applied via date_add to the (always-valid)
     * first of month. */
-  private def startDate(slug: Column, title: Column, postDate: Column): Column = {
+  private[etl] def startDate(slug: Column, title: Column, postDate: Column): Column = {
     def monthNum(name: Column): Column =
       monthNames.zipWithIndex.foldLeft(lit(null).cast("int")) {
         case (acc, (n, i)) => when(lower(name) === n, lit(i + 1)).otherwise(acc)
@@ -105,97 +114,50 @@ object WodRealText {
       to_date(postDate))
   }
 
-  /** Lines with 1-based position per post. Input schema:
-    * (post_id, content_html, slug, title, post_date). */
-  private def lines(posts: DataFrame): DataFrame =
-    posts.select(col("post_id"), col("slug"), col("title"), col("post_date"),
-        posexplode(split(stripText(col("content_html")), "\n")).as(Seq("pos0", "line")))
-      .withColumn("pos", (col("pos0") + 1).cast("int"))
-      .drop("pos0")
+  private val dayPattern = Pattern.compile(dayRegex)
+  private val segPattern = Pattern.compile(segRegex)
 
-  /** Two-level grouping, then one row per (post, session, segment
-    * group): seg_key = the group's first line, seg_val = ' '.join of
-    * the rest. seg 1 is the session-name group. Sessions with <2
-    * segment markers are absent here (rest days — re-attached in
-    * records()). */
-  private[etl] def segments(posts: DataFrame): DataFrame = {
-    val byPost = Window.partitionBy("post_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val byPostAll = Window.partitionBy("post_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val isDay = when(col("line").rlike(dayRegex), 1).otherwise(0)
-    val sess = lines(posts)
-      .withColumn("session_id", sum(isDay).over(byPost))
-      .withColumn("n_day_markers", sum(isDay).over(byPostAll))
-      .filter(col("session_id") >= 1 && col("n_day_markers") >= 2)
-      .drop("n_day_markers")
-    val bySess = Window.partitionBy("post_id", "session_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val bySessAll = Window.partitionBy("post_id", "session_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val isSeg = when(col("line").rlike(segRegex), 1).otherwise(0)
-    val segStartW = Window.partitionBy("post_id", "session_id", "seg_id")
-    sess
-      .withColumn("seg_id", sum(isSeg).over(bySess))
-      .withColumn("n_seg_markers", sum(isSeg).over(bySessAll))
-      .filter(col("seg_id") >= 1 && col("n_seg_markers") >= 2)
-      .drop("n_seg_markers")
-      .withColumn("seg_start", min("pos").over(segStartW))
-      .groupBy("post_id", "session_id", "seg_id")
-      .agg(
-        min_by(col("line"), col("pos")).as("seg_key"),
-        concat_ws(" ",
-          transform(
-            array_sort(collect_list(when(col("pos") > col("seg_start"),
-              struct(col("pos").as("p"), col("line").as("t"))))),
-            x => x.getField("t"))).as("seg_val"))
+  /** The reference's pairwise walk (transforms.py:19-30): each line that
+    * matches `marker` (find(), as rlike) opens a group running to the
+    * next marker line or the end; fewer than two markers → no groups. */
+  private def groups(lines: IndexedSeq[String], marker: Pattern): IndexedSeq[IndexedSeq[String]] = {
+    val starts = lines.indices.filter(i => marker.matcher(lines(i)).find())
+    if (starts.length < 2) IndexedSeq.empty
+    else starts.zip(starts.tail :+ lines.length).map { case (a, b) => lines.slice(a, b) }
   }
+
+  /** One post's stripped text → its session records: weekday groups,
+    * then segment groups per session. `split(_, -1)` keeps trailing
+    * empty lines, as Spark's split does. Duplicate keys resolve
+    * last-wins and each key sits at its LAST position; a segment keyed
+    * `session` replaces the session name. */
+  private[etl] def walk(text: String): Seq[PostSession] =
+    if (text == null) Nil
+    else groups(text.split("\n", -1).toIndexedSeq, dayPattern).zipWithIndex.map { case (day, i) =>
+      val segs = groups(day, segPattern)
+      val entries =
+        if (segs.isEmpty) ListMap("session" -> "rest day")
+        else (("session" -> segs.head.head) +: segs.tail.map(g => g.head -> g.tail.mkString(" ")))
+          .foldLeft(ListMap.empty[String, String]) { case (m, kv) => m - kv._1 + kv }
+      PostSession(i + 1L, entries)
+    }
+
+  private val walkUdf = udf(walk _)
 
   /** One row per session record: (post_id, session_idx, date, entries)
     * where entries is the reference record's key→value map —
     * 'session' plus one entry per segment, duplicate keys last-wins.
     * Rest-day sessions (<2 segment markers) carry
-    * {'session': 'rest day'}. */
-  def records(posts: DataFrame): DataFrame = {
-    val segs = segments(posts)
-    // every (post, session) that exists at the day level, with its date
-    val byPost = Window.partitionBy("post_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val byPostAll = Window.partitionBy("post_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val isDay = when(col("line").rlike(dayRegex), 1).otherwise(0)
-    val sessions = lines(posts)
-      .withColumn("session_id", sum(isDay).over(byPost))
-      .withColumn("n_day_markers", sum(isDay).over(byPostAll))
-      .filter(col("session_id") >= 1 && col("n_day_markers") >= 2)
-      .groupBy("post_id", "session_id")
-      .agg(first(col("slug")).as("slug"), first(col("title")).as("title"),
-        first(col("post_date")).as("post_date"))
-      .withColumn("date",
-        date_format(
-          date_add(sundayBefore(startDate(col("slug"), col("title"),
-            col("post_date"))), col("session_id").cast("int")),
-          "yyyy-MM-dd"))
-    // session-name entry (seg 1's key line) + segment entries (seg ≥2);
-    // duplicate keys: LAST wins (max seg_id per key), dict semantics
-    val entries = segs
-      .select(col("post_id"), col("session_id"),
-        when(col("seg_id") === 1, lit("session")).otherwise(col("seg_key")).as("k"),
-        when(col("seg_id") === 1, col("seg_key")).otherwise(col("seg_val")).as("v"),
-        col("seg_id"))
-      .groupBy("post_id", "session_id", "k")
-      .agg(max_by(col("v"), col("seg_id")).as("v"), max("seg_id").as("ord"))
-      .groupBy("post_id", "session_id")
-      .agg(map_from_entries(
-        transform(
-          array_sort(collect_list(struct(col("ord").as("o"),
-            struct(col("k"), col("v")).as("kv")))),
-          x => x.getField("kv"))).as("entries"))
-    sessions.join(entries, Seq("post_id", "session_id"), "left")
-      .select(col("post_id"), col("session_id").as("session_idx"), col("date"),
-        coalesce(col("entries"),
-          map(lit("session"), lit("rest day"))).as("entries"))
-  }
+    * {'session': 'rest day'}. The week anchor is computed once per
+    * post, before the explode. */
+  def records(posts: DataFrame): DataFrame =
+    posts.select(col("post_id"),
+        sundayBefore(startDate(col("slug"), col("title"), col("post_date"))).as("anchor"),
+        walkUdf(stripText(col("content_html"))).as("sessions"))
+      .select(col("post_id"), col("anchor"), inline(col("sessions")))
+      .select(col("post_id"), col("session_idx"),
+        date_format(date_add(col("anchor"), col("session_idx").cast("int")), "yyyy-MM-dd").as("date"),
+        col("entries"))
 
   /** clean_sessions_df_records: fixed schema, renamed segment columns,
     * `s`/`r` dropped, null session → 'Rest Day', missing → ''. */

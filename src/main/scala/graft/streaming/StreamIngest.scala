@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Tables, TempDirs}
 import graft.sources.{IdempotentSink, MergeSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
@@ -51,11 +51,7 @@ object StreamIngest {
     q.awaitTermination()
   }
 
-  private def tmp(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    p.toFile.deleteOnExit()
-    p.toString
-  }
+  private def tmp(prefix: String): String = TempDirs.create(prefix).toString
 
   private def eventStream(s: SparkSession, d: String): DataFrame =
     Tables.normalizeEventTs(

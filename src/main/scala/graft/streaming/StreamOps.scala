@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -82,8 +82,7 @@ object StreamOps {
     * tables arrive as genuinely multi-file input). */
   private[streaming] def streamDir(d: String, table: String): String = {
     import java.nio.file._
-    val dir = Files.createTempDirectory(s"graft_stream_$table")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.create(s"graft_stream_$table")
     // absolutize: the symlinks below carry this path as their target,
     // and a RELATIVE target resolves against the LINK's directory
     // (/tmp/...), silently yielding broken links — the file stream
@@ -120,9 +119,7 @@ object StreamOps {
     * construction and the view registry keeps re-runs clean. */
   private def runToParquet(s: SparkSession, df: DataFrame,
                            prefix: String): DataFrame = {
-    import java.nio.file._
-    val dir = Files.createTempDirectory(s"graft_${prefix}_sink")
-    dir.toFile.deleteOnExit()
+    val dir = TempDirs.create(s"graft_${prefix}_sink")
     val out = s"$dir/data"
     val q = df.writeStream
       .option("checkpointLocation", s"$dir/chk")

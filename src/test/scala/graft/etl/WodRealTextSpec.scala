@@ -1,12 +1,19 @@
 package graft.etl
 
 import graft.SparkTestBase
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Edge semantics of the real-text pipeline, hand-checked against the
   * reference's list-walk rules (transforms.py:115,176,211,289). */
-class WodRealTextSpec extends SparkTestBase {
+class WodRealTextSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private val schema = StructType(Seq(
     StructField("post_id", LongType),
@@ -89,5 +96,57 @@ class WodRealTextSpec extends SparkTestBase {
       Row(2L, html2, "may-6-12-2024-x", null, null)))
     assert(out.count(_._1 == 1L) == 2 && out.count(_._1 == 2L) == 2)
     assert(out.filter(_._1 == 2L).map(_._2).toSeq == Seq("2024-05-06", "2024-05-07"))
+  }
+
+  test("stripText: tags vanish with no separator, the character references decode once") {
+    val html = Seq(
+      "<p><strong>Monday</strong> (Session&nbsp;One)</p>",
+      "<strong>A.</strong>",
+      "<span>Clean &amp; Jerk &#8211; coach&#8217;s &#8220;fast&#8221; pull&#8230;</span>",
+      "<strong>B.</strong>",
+      "<span>&lt;RPE 8&gt; then &amp;lt;tempo&amp;gt;</span>",
+      "<p><strong>Tuesday</strong> (Session Two)</p>",
+      "<strong>A.</strong>",
+      "Snatch&nbsp;<span>5</span>x<strong>2</strong>",
+      "<strong>B.</strong>",
+      "rest").mkString("\n")
+    val want = Seq(
+      "Monday (Session\u00a0One)",
+      "A.",
+      "Clean & Jerk \u2013 coach\u2019s \u201cfast\u201d pull\u2026",
+      "B.",
+      "<RPE 8> then &lt;tempo&gt;",
+      "Tuesday (Session Two)",
+      "A.",
+      "Snatch\u00a05x2",
+      "B.",
+      "rest").mkString("\n")
+    val in = posts(Row(1L, html, "april-1-7-2024-x", null, null))
+    assert(in.select(WodRealText.stripText(col("content_html"))).head().getString(0) == want)
+    val got = WodRealText.cleaned(in).orderBy("session_idx").collect()
+      .map(r => Seq("date", "session", "warm_up", "segment_a", "segment_b", "segment_c")
+        .map(c => r.getString(r.fieldIndex(c))))
+    assert(got.toSeq == Seq(
+      Seq("2024-04-01", "Monday (Session\u00a0One)", "",
+        "Clean & Jerk \u2013 coach\u2019s \u201cfast\u201d pull\u2026", "<RPE 8> then &lt;tempo&gt;", ""),
+      Seq("2024-04-02", "Tuesday (Session Two)", "", "Snatch\u00a05x2", "rest", "")))
+  }
+
+  test("cleaned plans no exchange, window, sort or join, and a repeat compiles no class") {
+    val html = "intro\nMonday (Session One)\nA.\nx\nB.\ny\nTuesday\nA.\nz"
+    def cleaned = WodRealText.cleaned(posts(
+      Row(1L, html, "april-1-7-2024-x", null, null),
+      Row(2L, html, null, "May 6-12, 2024 Program", null)))
+    val first = cleaned
+    first.collect()
+    val plan = first.queryExecution.executedPlan
+    val blocking = collect(plan) {
+      case p @ (_: Exchange | _: WindowExec | _: SortExec | _: BaseJoinExec) => p
+    }
+    assert(blocking.isEmpty, s"per-post plan must not shuffle, sort or join:\n$plan")
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(cleaned.collect().length == 4)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "a repeated cleaned() over the same rows must reuse the generated classes")
   }
 }
