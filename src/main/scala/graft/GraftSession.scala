@@ -78,4 +78,18 @@ object GraftSession {
     s.sparkContext.setLogLevel(logLevel)
     s
   }
+
+  /** Runs `body` with the session confs `kvs` set, then puts back each
+    * key's previous value, or unsets a key that had none, even when
+    * `body` throws. Session confs are session-global: any query planned
+    * on `s` meanwhile sees these values too. */
+  def withConfs[T](s: SparkSession, kvs: Map[String, String])(body: => T): T = {
+    val saved = kvs.keys.map(k => k -> s.conf.getOption(k)).toMap
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

@@ -117,10 +117,8 @@ object SkewBench {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-    def lane(name: String, confs: Map[String, String], mk: () => DataFrame): (String, Double) = {
-      val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
+    def lane(name: String, confs: Map[String, String], mk: () => DataFrame): (String, Double) =
+      GraftSession.withConfs(spark, confs) {
         mk().count() // warm: codegen + page cache, un-timed
         def timed(): Double = {
           val t0 = System.nanoTime(); mk().count(); (System.nanoTime() - t0) / 1e9
@@ -128,11 +126,7 @@ object SkewBench {
         val t = math.min(timed(), timed())
         println(f"SKEW $name%-12s $t%8.2f s")
         name -> math.rint(t * 10000) / 10000
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
       }
-    }
 
     // ---- r18: the real-edge RESOLVE join at AMPLIFIED skew -----------
     // The production realEdges build carries ~1.5n hot-URL probe rows

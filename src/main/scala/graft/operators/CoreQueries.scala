@@ -315,7 +315,7 @@ object CoreQueries {
     * spec-asserted equal to the Jackson path incl. nesting/escapes/
     * overflow) runs inside whole-stage codegen: 54 → ~1.7 s. */
   def qJsonExtract(s: SparkSession, d: String): DataFrame = {
-    graft.plans.JsonLongField.register(s)
+    graft.plans.Natives.ensure(s)
     events(s, d)
       .withColumn("k", call_function("graft_json_long", col("props"), lit("k")))
       .groupBy("event_type")

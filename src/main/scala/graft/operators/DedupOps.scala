@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftSession
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -57,6 +58,13 @@ object DedupOps {
     def truncEager: DataFrame = truncate(df, eager = true)
     def truncLazy: DataFrame = truncate(df, eager = false)
   }
+
+  /** The fixed-point loops' conf scope (CC here, PageRank in GraphOps):
+    * `parts` shuffle partitions, and AQE off in the co-partitioned gear,
+    * whose shuffle-hash joins must keep the planned partitioning. */
+  private[operators] def loopConfs(parts: Int, copart: Boolean): Map[String, String] =
+    Map("spark.sql.shuffle.partitions" -> parts.toString) ++
+      (if (copart) Map("spark.sql.adaptive.enabled" -> "false") else Map.empty)
 
   /** Per-doc distinct-shingle ARRAYS (pre-explode), built MAP-ONLY:
     * a materialized token array (its own projection — CollapseProject
@@ -224,7 +232,7 @@ object DedupOps {
     * one pass over each digest, no per-bit hex-table scans. Output:
     * (doc_id, sums array<long>[nBits]). */
   private def paritySums(s: SparkSession, d: String, nBits: Int): DataFrame = {
-    graft.plans.HexParitySums.register(s)
+    graft.plans.Natives.ensure(s)
     documents(s, d)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .groupBy("doc_id")
@@ -569,7 +577,6 @@ object DedupOps {
     val pairs = pairs0.toDF("doc_a", "doc_b")
     val s = pairs.sparkSession
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     // localCheckpoint truncates the candidate-generation lineage:
     // without it every iteration (and its convergence count) would
     // re-run the whole pair pipeline — O(rounds²) recomputes. On a
@@ -601,9 +608,7 @@ object DedupOps {
         (nEdges / CC_PART_ROWS).toInt))
     def hinted(df: DataFrame): DataFrame =
       if (copart) df.hint("shuffle_hash") else df
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    if (copart) s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConfs(s, loopConfs(loopParts, copart)) {
       val edges =
         if (copart) edges0.repartition(loopParts, col("doc_b")).truncEager
         else edges0.coalesce(
@@ -645,9 +650,6 @@ object DedupOps {
         rounds += 1
       }
       (reps.select("doc_id", "rep"), rounds, converged)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", sessionParts)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
 

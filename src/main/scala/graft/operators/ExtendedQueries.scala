@@ -171,8 +171,7 @@ object ExtendedQueries {
   private[graft] val FUZZY_BLOCK_CAP = 1000
 
   private[operators] def textFuzzyPairsCapped(s: SparkSession, d: String, cap: Int): DataFrame = {
-    graft.plans.BagLowerBound.register(s)
-    graft.plans.Lev64.register(s)
+    graft.plans.Natives.ensure(s)
     val docs = documents(s, d)
       .select(col("doc_id"), col("lang"), col("source"),
         expr("n_chars div 50").as("len_band"),
@@ -343,7 +342,7 @@ object ExtendedQueries {
   private[operators] def mgCandidates(s: SparkSession, d: String,
                                       capacity: Int): DataFrame = {
     import s.implicits._
-    graft.plans.ShingleExprs.register(s)
+    graft.plans.Natives.ensure(s)
     documents(s, d)
       .select(explode(expr("graft_shingle_hashes(text)")).as("h")).as[Long]
       .mapPartitions { it =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftSession
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -172,7 +173,6 @@ object GraphOps {
       copart: Boolean, maxIters: Int): PrState = {
     import DedupOps.TruncOps
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = s.conf.get("spark.sql.adaptive.enabled")
     val loopParts =
       if (!copart) 8
       else math.max(8, math.min(sessionParts.toInt,
@@ -192,9 +192,7 @@ object GraphOps {
     // sheds two exchanges per step).
     def hinted(df: DataFrame): DataFrame =
       if (copart) df.hint("shuffle_hash") else df.hint("broadcast")
-    s.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    if (copart) s.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConfs(s, DedupOps.loopConfs(loopParts, copart)) {
       val ids = keyed(idsIn, "doc_id").truncEager
       val edges = keyed(edgesOf(ids), "src").truncEager
       // the teleport term is a per-graph CONSTANT — (15·(SCALE DIV n))
@@ -229,9 +227,6 @@ object GraphOps {
         converged = delta <= PR_EPS
       }
       PrState(ids, edges, ranks, it)
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", sessionParts)
-      s.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
 
@@ -303,18 +298,10 @@ object GraphOps {
     * give skew-tuned lanes their own session (`s.newSession()` shares
     * the catalog, isolates confs) rather than interleave. Restore is
     * exception-safe; interleaving is the documented non-goal. */
-  private def withSkewTuned[T](s: SparkSession)(body: => T): T = {
-    val confs = Seq(
+  private def withSkewTuned[T](s: SparkSession)(body: => T): T =
+    GraftSession.withConfs(s, Map(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512k")
-    val saved = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512k"))(body)
 
   /** [[realEdges]] materialized once (localCheckpoint) under the
     * skew-tuned scope: the resolve join executes HERE, so the AQE

@@ -52,7 +52,7 @@ object PretrainOps {
     // native one-sweep token stats (plans/GramStatsExpr.scala): the
     // array-HOF form interpreted O(distinct·tokens) per doc and was
     // the dominant honest-timed cost of the quality lane at sf10
-    graft.plans.GramStatsExpr.register(s)
+    graft.plans.Natives.ensure(s)
     val stats = documents(s, d)
       .select(col("doc_id"), col("lang"),
         md5(lower(col("text"))).as("fp"), expr("graft_gram_stats(text, 1)").as("s1"))
@@ -108,7 +108,7 @@ object PretrainOps {
     // native gram stats (plans/GramStatsExpr.scala): one byte sweep
     // per n replaces the interpreted build-array/count-within-row HOF
     // chain; ≥3-token domain ≡ at least one 3-gram
-    graft.plans.GramStatsExpr.register(s)
+    graft.plans.Natives.ensure(s)
     val m = documents(s, d)
       .select(col("doc_id"),
         expr("graft_gram_stats(text, 2)").as("s2"),
@@ -498,7 +498,7 @@ object PretrainOps {
   private[operators] def qualityFracs(s: SparkSession, d: String): DataFrame = {
     // textRepetition's domain (≥3 tokens) — the composite's inner joins
     // restrict it the same way
-    graft.plans.GramStatsExpr.register(s)
+    graft.plans.Natives.ensure(s)
     val c = documents(s, d)
       .select(col("doc_id"),
         expr("graft_gram_stats(text, 1)").as("s1"),
@@ -739,8 +739,7 @@ object PretrainOps {
     * GramStatsExpr scan, domain ≥3 tokens (the repetition rules').
     * Everything downstream of this table is integer arithmetic. */
   private[operators] def qmCounts(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GramStatsExpr.register(s)
-    graft.plans.QmBuckets.register(s)
+    graft.plans.Natives.ensure(s)
     // bk rides the SAME scan (r21, guide §2.4): the hashed bag-of-words
     // counts used to be a second full document scan (explode to token
     // instances → 10-column partial-agg shuffle → inner join back onto

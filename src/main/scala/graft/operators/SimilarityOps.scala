@@ -26,7 +26,7 @@ object SimilarityOps {
     * .CosineSimilarity) — one fused loop per row, no intermediate
     * arrays; accumulation order identical to the fold form. */
   private def cosine(s: SparkSession, a: Column, b: Column): Column = {
-    graft.plans.CosineSimilarity.register(s)
+    graft.plans.Natives.ensure(s)
     round(call_function("graft_cosine", a, b), 6)
   }
 
@@ -87,7 +87,7 @@ object SimilarityOps {
     * are bit-identical (same planes, same double accumulation order),
     * so every bucket, candidate set and oracle row is unchanged. */
   private def lshSig(s: SparkSession, v: Column, bits: Int, dim: Int): Column = {
-    graft.plans.SignBits.register(s)
+    graft.plans.Natives.ensure(s)
     call_function("graft_sign_bits", v, lit(bits), lit(dim))
   }
 
@@ -352,7 +352,7 @@ object SimilarityOps {
     * identical rows (the kmeans spec and oracle did not move). */
   private def kmAssign(s: SparkSession, pts: DataFrame,
       cents: Seq[(Long, Array[Long])]): DataFrame = {
-    graft.plans.KmArgmin.register(s)
+    graft.plans.Natives.ensure(s)
     pts.withColumn("cid", call_function("graft_km_argmin", col("qe"),
       typedlit(cents.map(_._2.toSeq)), typedlit(cents.map(_._1))))
   }
@@ -403,7 +403,7 @@ object SimilarityOps {
     * contract): first-k seeding, integer argmin assignment, floored
     * integer means, stop at the exact fixpoint (Σ|Δ| = 0) or maxIter.
     * Returns the trained centroids and the executed depth. */
-  private[operators] def kmTrain(s: SparkSession, pts: DataFrame, k: Int,
+  private def kmTrain(s: SparkSession, pts: DataFrame, k: Int,
       maxIter: Int): (Seq[(Long, Array[Long])], Int) = {
     var cents: Seq[(Long, Array[Long])] = pts.filter(col("vec_id") < k)
       .orderBy("vec_id").collect()
@@ -435,43 +435,6 @@ object SimilarityOps {
       converged = delta <= KM_EPS
     }
     (cents, it)
-  }
-
-  /** Multiprobe k-NN through the TRAINED quantizer — the same lists/
-    * probes/rerank shape as [[simKnnMultiprobeCfg]], but cells are
-    * k-means centroids instead of the first-c corpus vectors, and
-    * assignment is the L2 argmin the training itself used. Spec-only
-    * lane (TextSimMmSpec measures its recall against the naive
-    * quantizer at equal candidate budget); the oracle-checked
-    * production keys stay on the deterministic first-c quantizer,
-    * whose SQL mirror does not need a 15-step training chain per ANN
-    * query. */
-  private[operators] def simKnnMultiprobeTrained(s: SparkSession, d: String,
-      k: Int, nprobe: Int): DataFrame = {
-    import DedupOps.TruncOps
-    val pts = kmPoints(s, d).truncEager
-    val (centsQ, _) = kmTrain(s, pts, k, KM_MAX)
-    val cents = centsQ.map { case (j, c) =>
-      (j, c.map(v => (v - KM_OFF).toDouble / KM_QS)) }
-    val emb = embeddings(s, d)
-    val cellsSorted = array_sort(array(cents.map { case (j, c) =>
-      struct(
-        aggregate(zip_with(col("embedding"), typedlit(c.toSeq),
-          (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v).as("d"),
-        lit(j).as("cid")) }: _*))
-    val base = emb.withColumn("cells", cellsSorted)
-    val lists = base.select(col("vec_id").as("vid"), col("embedding").as("ve"),
-      element_at(col("cells"), 1).getField("cid").as("cid"))
-    val probes = base.filter(col("vec_id") % KNN_STRIDE === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        explode(slice(col("cells"), 1, nprobe)).as("cell"))
-      .select(col("qid"), col("qe"), col("cell").getField("cid").as("cid"))
-    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("vid"))
-    lists.join(broadcast(probes), Seq("cid"))
-      .filter(col("vid") =!= col("qid"))
-      .select(col("qid"), col("vid"), cosine(s, col("qe"), col("ve")).as("cos_sim"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= KNN_K)
   }
 
   private val MP_C = 32      // multiprobe coarse cells
@@ -564,40 +527,12 @@ object SimilarityOps {
     pqSearch(s, pts, sub)
   }
 
-  /** The TRAINED-codebook variant (spec-only, the multiprobe-trained
-    * precedent): per-subspace Lloyd through the shared [[kmTrain]]
-    * loop (first-PQ_K sub-vector seeding, so training strictly refines
-    * the production codebook), then the identical compressed-domain
-    * search. Spec-measured recall lift over the first-k codebook at
-    * the same (M, K) budget; the production lane keeps first-k, whose
-    * SQL mirror needs no 8 × 25-step training chain per query.
-    *
-    * Promotion measured and REJECTED (r19, verdict #7 — Lab
-    * pq_firstk/pq_trained, sf10 same window, min-of-3): 2.19 s
-    * first-k vs 11.50 s trained end-to-end — per-CALL training is
-    * 5.3× the whole search lane for the recall@5 0.20→0.36 lift. A
-    * production PQ store trains offline and reuses the codebook
-    * across the query stream; a gated lane that retrains per call
-    * misrepresents that economics, and the 8× 25-step oracle chain
-    * would multiply divergence surface the sim_kmeans_converged gate
-    * already covers. Full numbers in SURVEY §5. */
-  private[graft] def simPqTopkTrained(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
-    val pts = kmPoints(s, d).truncEager
-    val sub: Array[Array[Array[Long]]] = Array.tabulate(PQ_M) { m =>
-      val ptsM = pts.select(col("vec_id"),
-        slice(col("qe"), m * PQ_SUB + 1, PQ_SUB).as("qe"))
-      kmTrain(s, ptsM, PQ_K, KM_MAX)._1.sortBy(_._1).map(_._2).toArray
-    }
-    pqSearch(s, pts, sub)
-  }
-
-  /** Encode + asymmetric-distance search shared by the first-k and
-    * trained codebooks (see [[simPqTopk]] for the plan shape). */
+  /** Encode + asymmetric-distance search over the codebooks `sub`
+    * (see [[simPqTopk]] for the plan shape). */
   private def pqSearch(s: SparkSession, pts: DataFrame,
       sub: Array[Array[Array[Long]]]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.KmArgmin.register(s)
+    graft.plans.Natives.ensure(s)
     val ids = (0 until PQ_K).map(_.toLong)
     val codes = pts.select(col("vec_id") +: (0 until PQ_M).map(m =>
       call_function("graft_km_argmin",

@@ -137,7 +137,7 @@ object TextOps {
       .agg(count(lit(1)).as("doc_freq"))
       .orderBy(col("doc_freq").desc, col("shingle"))
       .limit(20)
-    graft.plans.ShingleExprs.register(s)
+    graft.plans.Natives.ensure(s)
     // phase 1: candidate hashes — one native byte sweep per doc, the
     // explode emits per-doc-distinct longs
     val top = documents(s, d)
@@ -408,7 +408,7 @@ object TextOps {
     * and because both the count side and the probe side read this
     * stream, the plain form pays the byte sweep twice per query. */
   private[operators] def logprobDhc(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GramHashExpr.register(s)
+    graft.plans.Natives.ensure(s)
     documents(s, d)
       .select(col("doc_id"),
         explode(expr("graft_gram_hash_counts(text, 1)")).as("tc"))
@@ -416,7 +416,7 @@ object TextOps {
   }
 
   private[operators] def logprobDhc2(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GramHashExpr.register(s)
+    graft.plans.Natives.ensure(s)
     documents(s, d)
       .select(col("doc_id"),
         explode(expr("graft_gram_hash_counts(text, 2)")).as("b"))
@@ -467,7 +467,7 @@ object TextOps {
     * per-group input bounded by per-doc vocabulary). */
   def textKeywordsTfidf(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GramHashExpr.register(s)
+    graft.plans.Natives.ensure(s)
     val dhc = documents(s, d)
       .select(col("doc_id"),
         explode(expr("graft_gram_hash_counts(text, 1)")).as("tc"))
@@ -546,7 +546,7 @@ object TextOps {
     * aggregate, which shuffles every token. Fixed-point floor-round at
     * 4 decimals keeps the double engine-portable. */
   def textEntropy(s: SparkSession, d: String): DataFrame = {
-    graft.plans.EntropyExpr.register(s)
+    graft.plans.Natives.ensure(s)
     documents(s, d).select(
       col("doc_id"),
       (size(split(col("text"), " "))).cast("long").as("n_tokens"),

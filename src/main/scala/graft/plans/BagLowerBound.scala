@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -111,11 +110,4 @@ object BagLowerBound {
     }
     cnt
   }
-
-  /** Register `graft_bag_lb(a, b)`. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bag_lb",
-      (children: Seq[Expression]) => BagLowerBound(children(0), children(1)),
-      "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -86,13 +85,4 @@ case class TokenEntropy(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): TokenEntropy =
     copy(child = newChild)
-}
-
-object EntropyExpr {
-  /** Register in the session function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_entropy",
-      (children: Seq[Expression]) => TokenEntropy(children.head),
-      "built-in")
 }

@@ -1,39 +1,20 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session-extension entry point: a cluster deployment enables the
   * engine's native functions with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` — the
   * documented injection path, so every session (including SQL-only
-  * clients over Thrift/Connect) sees `graft_cosine` without any
-  * driver-side registration call.
+  * clients over Thrift/Connect) sees every `graft_*` function of
+  * [[Natives]] without any driver-side registration call.
   *
-  * `CosineSimilarity.register` remains for already-running sessions
-  * (the Verify/Bench mains use it).
+  * `Natives.ensure` remains for already-running sessions (the lanes
+  * call it).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_json_long"),
-      new ExpressionInfo(classOf[JsonLongField].getName, "graft_json_long"),
-      (children: Seq[Expression]) => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.types.StringType
-        import org.apache.spark.unsafe.types.UTF8String
-        val key = children(1) match {
-          case Literal(v: UTF8String, StringType) => v.toString
-          case other => throw new IllegalArgumentException(
-            s"graft_json_long: key must be a string literal, got $other")
-        }
-        JsonLongField(children(0), key)
-      }))
+    Natives.all.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(session => AsofJoinStrategy(session))
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
@@ -125,13 +124,4 @@ case class GramHashCounts(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GramHashCounts =
     copy(left = newLeft, right = newRight)
-}
-
-object GramHashExpr {
-  /** Register in the session function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_hash_counts",
-      (children: Seq[Expression]) => GramHashCounts(children(0), children(1)),
-      "built-in")
 }

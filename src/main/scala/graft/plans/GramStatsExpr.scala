@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -131,13 +130,4 @@ case class GramStats(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GramStats =
     copy(left = newLeft, right = newRight)
-}
-
-object GramStatsExpr {
-  /** Register in the session function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gram_stats",
-      (children: Seq[Expression]) => GramStats(children(0), children(1)),
-      "built-in")
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -118,18 +117,4 @@ case class HexParitySums(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HexParitySums =
     copy(child = newChild)
-}
-
-object HexParitySums {
-  /** Register `graft_parity_sums(str, nBits)` in the session's function
-    * registry (used via `call_function`). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_parity_sums",
-      (children: Seq[Expression]) => children match {
-        case Seq(c, Literal(n: Int, IntegerType)) => HexParitySums(c, n)
-        case _ => throw new IllegalArgumentException(
-          "graft_parity_sums(str, <int literal nBits>)")
-      },
-      "built-in")
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -213,19 +212,4 @@ object JsonLongField {
     }
     java.lang.Long.valueOf(if (neg) acc else -acc)
   }
-
-  /** Register `graft_json_long(json, 'key')` (key must be a string
-    * literal). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_json_long",
-      (children: Seq[Expression]) => {
-        val key = children(1) match {
-          case Literal(v: UTF8String, StringType) => v.toString
-          case other => throw new IllegalArgumentException(
-            s"graft_json_long: key must be a string literal, got $other")
-        }
-        JsonLongField(children(0), key)
-      },
-      "built-in")
 }

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -80,25 +79,4 @@ object KmArgmin {
     }
     bestC
   }
-
-  /** Register `graft_km_argmin(point, centroids_literal, ids_literal)`.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_km_argmin",
-      (children: Seq[Expression]) => {
-        val cents = children(1) match {
-          case Literal(v: ArrayData, ArrayType(ArrayType(LongType, _), _)) =>
-            (0 until v.numElements()).map(i => v.getArray(i).toLongArray()).toArray
-          case other => throw new IllegalArgumentException(
-            s"graft_km_argmin: centroids must be a literal array<array<long>>, got $other")
-        }
-        val cids = children(2) match {
-          case Literal(v: ArrayData, ArrayType(LongType, _)) => v.toLongArray()
-          case other => throw new IllegalArgumentException(
-            s"graft_km_argmin: centroid ids must be a literal array<long>, got $other")
-        }
-        KmArgmin(children(0), cents, cids)
-      },
-      "built-in")
 }

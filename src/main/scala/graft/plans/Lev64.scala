@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -134,19 +133,4 @@ object Lev64 {
     else if (score <= threshold) score
     else -1
   }
-
-  /** Register `graft_lev64(a, b, k)` (k must be an int literal).
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lev64",
-      (children: Seq[Expression]) => {
-        val k = children(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_lev64: threshold must be an int literal, got $other")
-        }
-        Lev64(children(0), children(1), k)
-      },
-      "built-in")
 }

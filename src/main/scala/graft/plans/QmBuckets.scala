@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -87,13 +86,4 @@ case class QmBuckets(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): QmBuckets =
     copy(left = newLeft, right = newRight)
-}
-
-object QmBuckets {
-  /** Register in the session function registry. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_qm_buckets",
-      (children: Seq[Expression]) => QmBuckets(children(0), children(1)),
-      "built-in")
 }

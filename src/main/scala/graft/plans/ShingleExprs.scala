@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
@@ -223,22 +222,4 @@ case class CandidateShingles(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CandidateShingles =
     copy(left = newLeft, right = newRight)
-}
-
-object ShingleExprs {
-  /** Register both functions in the session registry. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      (children: Seq[Expression]) => ShingleHashes64(children.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_candidate_shingles",
-      (children: Seq[Expression]) => CandidateShingles(children(0), children(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_hashes",
-      (children: Seq[Expression]) => TokenHashes64(children.head),
-      "built-in")
-  }
 }

@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd LSH signature over an `array<float>` column: the
@@ -130,19 +129,4 @@ object SignBits {
     }
     out
   }
-
-  /** Register `graft_sign_bits(vec, nBits, dim)` (int args must be
-    * literals). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sign_bits",
-      (children: Seq[Expression]) => {
-        def lit(e: Expression, name: String): Int = e match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_sign_bits: $name must be an integer literal, got $other")
-        }
-        SignBits(children(0), lit(children(1), "nBits"), lit(children(2), "dim"))
-      },
-      "built-in")
 }

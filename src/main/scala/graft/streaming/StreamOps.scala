@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Tables, TempDirs}
+import graft.{GraftSession, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -65,13 +65,9 @@ object StreamOps {
     * `spark.graft.streamStateParts` overrides — on a real cluster this
     * is sized to the executor count, and state-partition count never
     * changes results (keyed state is partition-location-agnostic). */
-  private def withStateParts[T](s: SparkSession)(body: => T): T = {
-    val parts = s.conf.getOption("spark.graft.streamStateParts").getOrElse("8")
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts)
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withStateParts[T](s: SparkSession)(body: => T): T =
+    GraftSession.withConfs(s, Map("spark.sql.shuffle.partitions" ->
+      s.conf.getOption("spark.graft.streamStateParts").getOrElse("8")))(body)
 
   /** The file stream source requires a directory of data FILES; expose
     * the table through a temp dir (symlink, copy as fallback). The

@@ -21,4 +21,21 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.files.maxPartitionBytes") == "16m")
     assert(conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering") == "true")
   }
+
+  test("withConfs restores a set key and unsets an unset key when body throws") {
+    val s = SharedSpark.spark.newSession()
+    val set = "spark.sql.shuffle.partitions"
+    val unset = "spark.graftspec.withconfs.unset"
+    val before = s.conf.get(set)
+    assert(s.conf.getOption(unset).isEmpty)
+    val e = intercept[IllegalStateException] {
+      GraftSession.withConfs(s, Map(set -> "7", unset -> "on")) {
+        assert(s.conf.get(set) == "7" && s.conf.get(unset) == "on")
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(s.conf.get(set) == before)
+    assert(s.conf.getOption(unset).isEmpty)
+  }
 }

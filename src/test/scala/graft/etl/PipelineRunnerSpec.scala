@@ -22,7 +22,7 @@ class PipelineRunnerSpec extends SparkTestBase {
     .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
   test("stepwise run equals the fused single-plan composition") {
-    val wd = Files.createTempDirectory("graft_steps").toString
+    val wd = graft.TempDirs.create("graft_steps").toString
     val (out, reports) = PipelineRunner.run(docs, Seq(
       PipelineRunner.Step("tokenize", tokenize),
       PipelineRunner.Step("keep_short", keepShort),
@@ -32,7 +32,7 @@ class PipelineRunnerSpec extends SparkTestBase {
   }
 
   test("a flaky step retries in place — the chain survives without recompute") {
-    val wd = Files.createTempDirectory("graft_steps_flaky").toString
+    val wd = graft.TempDirs.create("graft_steps_flaky").toString
     val calls = new AtomicInteger(0)
     val flakyFilter: DataFrame => DataFrame = df => {
       if (calls.incrementAndGet() == 1) sys.error("transient step failure")
@@ -49,7 +49,7 @@ class PipelineRunnerSpec extends SparkTestBase {
   }
 
   test("a re-run resumes from completed checkpoints instead of recomputing") {
-    val wd = Files.createTempDirectory("graft_steps_resume").toString
+    val wd = graft.TempDirs.create("graft_steps_resume").toString
     val steps = Seq(
       PipelineRunner.Step("tokenize", tokenize),
       PipelineRunner.Step("keep_short", keepShort),
@@ -64,7 +64,7 @@ class PipelineRunnerSpec extends SparkTestBase {
   }
 
   test("fatal errors escape immediately — no retry, no backoff sleep") {
-    val wd = Files.createTempDirectory("graft_steps_fatal").toString
+    val wd = graft.TempDirs.create("graft_steps_fatal").toString
     val calls = new AtomicInteger(0)
     val fatal: DataFrame => DataFrame = _ => {
       calls.incrementAndGet()
@@ -79,7 +79,7 @@ class PipelineRunnerSpec extends SparkTestBase {
   }
 
   test("a step that exhausts its retries fails the pipeline with the cause attached") {
-    val wd = Files.createTempDirectory("graft_steps_fail").toString
+    val wd = graft.TempDirs.create("graft_steps_fail").toString
     val always: DataFrame => DataFrame = _ => sys.error("permanent failure")
     val e = intercept[IllegalStateException] {
       PipelineRunner.run(docs, Seq(
@@ -92,7 +92,7 @@ class PipelineRunnerSpec extends SparkTestBase {
   test("completion notify fires exactly once per completed run — fresh, resumed, and never on failure") {
     // the NotifyWhenComplete analogue: terminal RunReport through a
     // counting notifier + the default durable _complete/<runId>.json
-    val wd = Files.createTempDirectory("graft_steps_notify").toString
+    val wd = graft.TempDirs.create("graft_steps_notify").toString
     val steps = Seq(
       PipelineRunner.Step("tokenize", tokenize),
       PipelineRunner.Step("aggregate", aggregate))
@@ -113,12 +113,12 @@ class PipelineRunnerSpec extends SparkTestBase {
     intercept[IllegalStateException] {
       PipelineRunner.run(docs,
         Seq(PipelineRunner.Step("boom", _ => sys.error("no"), maxRetries = 0)),
-        Files.createTempDirectory("graft_steps_notify2").toString,
+        graft.TempDirs.create("graft_steps_notify2").toString,
         runId = "run-n3", notify = fired.add(_): Unit)
     }
     assert(fired.size == 2, "failed run must not notify")
     // default sink: the durable JSON marker lands under workDir/_complete
-    val wd2 = Files.createTempDirectory("graft_steps_notify3").toString
+    val wd2 = graft.TempDirs.create("graft_steps_notify3").toString
     PipelineRunner.run(docs, steps.take(1), wd2, runId = "run-n4")
     val marker = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$wd2/_complete/run-n4.json")), "UTF-8")
@@ -129,7 +129,7 @@ class PipelineRunnerSpec extends SparkTestBase {
     // r16 ADVICE fix: 'run:1' and 'run/1' both sanitized to 'run_1' —
     // the second overwrote the first's marker and the JSON recorded
     // the mangled id
-    val wd = Files.createTempDirectory("graft_steps_collide").toString
+    val wd = graft.TempDirs.create("graft_steps_collide").toString
     val steps = Seq(PipelineRunner.Step("tokenize", tokenize))
     PipelineRunner.run(docs, steps, wd, runId = "run:1")
     PipelineRunner.run(docs, steps, wd, runId = "run/1")
@@ -146,14 +146,14 @@ class PipelineRunnerSpec extends SparkTestBase {
     // sanitized filenames stay path-safe
     assert(names.forall(_.matches("[A-Za-z0-9._-]+")), names.mkString(","))
     // a clean id keeps its plain marker name (no hash suffix)
-    val wd2 = Files.createTempDirectory("graft_steps_collide2").toString
+    val wd2 = graft.TempDirs.create("graft_steps_collide2").toString
     PipelineRunner.run(docs, steps, wd2, runId = "clean-id.1")
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$wd2/_complete/clean-id.1.json")))
   }
 
   test("one correlation id threads step reports, observability lines and errors") {
-    val wd = Files.createTempDirectory("graft_steps_runid").toString
+    val wd = graft.TempDirs.create("graft_steps_runid").toString
     val (_, lines) = graft.ObservabilityListener.buffering(spark)
     val (_, reports) = PipelineRunner.run(docs, Seq(
       PipelineRunner.Step("tokenize", tokenize),
@@ -170,7 +170,7 @@ class PipelineRunnerSpec extends SparkTestBase {
     assert(runLines.forall(_.contains(""""run_id":"run-abc-123"""")),
       s"unstamped line: ${runLines.find(!_.contains("run-abc-123"))}")
     // a fresh run mints a fresh id (distinct per invocation)
-    val wd2 = Files.createTempDirectory("graft_steps_runid2").toString
+    val wd2 = graft.TempDirs.create("graft_steps_runid2").toString
     val (_, r2) = PipelineRunner.run(docs,
       Seq(PipelineRunner.Step("tokenize", tokenize)), wd2)
     assert(r2.head.runId.nonEmpty && r2.head.runId != "run-abc-123")
@@ -178,7 +178,7 @@ class PipelineRunnerSpec extends SparkTestBase {
     val e = intercept[IllegalStateException] {
       PipelineRunner.run(docs,
         Seq(PipelineRunner.Step("boom", _ => sys.error("nope"), maxRetries = 0)),
-        Files.createTempDirectory("graft_steps_runid3").toString, runId = "run-err-9")
+        graft.TempDirs.create("graft_steps_runid3").toString, runId = "run-err-9")
     }
     assert(e.getMessage.contains("run-err-9"))
   }

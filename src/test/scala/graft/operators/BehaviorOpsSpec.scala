@@ -100,7 +100,7 @@ class BehaviorOpsSpec extends SparkTestBase {
       (6L, 85L, 11_000_000_900L, "purchase", 7.0),
       (6L, 90L, 11_000_000_100L, "view", 0.0)
     ).toDF("user_id", "event_id", "ts", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_ns").toString
+    val dir = graft.TempDirs.create("graft_attr_ns").toString
     rows.write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = BehaviorOps.qAttribution(spark, dir).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -141,7 +141,7 @@ class BehaviorOpsSpec extends SparkTestBase {
     val evs = rows.result()
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr_rand").toString
+    val dir = graft.TempDirs.create("graft_attr_rand").toString
     evs.toDF("user_id", "event_id", "ts", "event_type", "value")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     // naive per-purchase walk under the declared (ts DIV 1000, event_id)

@@ -123,7 +123,7 @@ class DedupOpsSpec extends SparkTestBase {
   test("reliable checkpoint dir config: same clusters, checkpoints land on the configured path") {
     val base = DedupOps.dedupClusters(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_rep"))).toSet
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = graft.TempDirs.create("graft-ckpt").toString
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
       val reliable = DedupOps.dedupClusters(spark, sf).collect()

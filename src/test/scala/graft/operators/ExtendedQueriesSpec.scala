@@ -130,7 +130,7 @@ class ExtendedQueriesSpec extends SparkTestBase {
     // so the bound is checked on the HASH stream — same N (the hash
     // expression emits per-doc-distinct hashes exactly as shingleRows
     // emits per-doc-distinct strings), heavy set from the hash counts
-    graft.plans.ShingleExprs.register(spark)
+    graft.plans.Natives.ensure(spark)
     val hashMap = graft.Tables.documents(spark, sf)
       .select(explode(expr("graft_shingle_hashes(text)")).as("h"))
       .groupBy("h").agg(count(lit(1)).as("hc"))

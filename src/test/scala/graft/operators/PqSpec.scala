@@ -3,10 +3,9 @@ package graft.operators
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 
-/** Product-quantized search: contract mechanics, recall vs the exact
-  * integer-L2 top-k, and the trained-codebook lift at the same
-  * (M, K) budget. sf0.01 (500 vectors, 5 probes): the spec SF's 50
-  * vectors make recall a coin flip. */
+/** Product-quantized search: contract mechanics and recall vs the
+  * exact integer-L2 top-k. sf0.01 (500 vectors, 5 probes): the spec
+  * SF's 50 vectors make recall a coin flip. */
 class PqSpec extends SparkTestBase {
   private val d = "/root/testdata/sf0.01"
 
@@ -49,19 +48,14 @@ class PqSpec extends SparkTestBase {
     }
   }
 
-  test("pq recall beats chance; trained sub-codebooks lift it at the same budget") {
+  test("pq recall beats chance with the first-k codebook") {
     val exact = exactTop(5)
     val firstK = SimilarityOps.queries("sim_pq_topk")(spark, d).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id")))
-    val trained = SimilarityOps.simPqTopkTrained(spark, d).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id")))
     val rF = recallOf(firstK, exact)
-    val rT = recallOf(trained, exact)
-    info(s"recall@5: first-k codebook $rF, trained $rT")
-    // chance = 5/499 ≈ 0.01; the first-k codebook measured 0.20 and
-    // the per-subspace-trained one 0.36 at this SF — assert with margin
+    info(s"recall@5: first-k codebook $rF")
+    // chance = 5/499 ≈ 0.01; the first-k codebook measured 0.20 at
+    // this SF — assert with margin
     assert(rF >= 0.1, s"first-k recall $rF")
-    assert(rT > rF, s"training must lift recall: $rT !> $rF")
-    assert(rT >= 0.3, s"trained recall $rT")
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class BagLowerBoundSpec extends SparkTestBase {
 
   test("bound <= levenshtein on 2000 seeded random string pairs") {
-    BagLowerBound.register(spark)
+    Natives.ensure(spark)
     val rnd = new scala.util.Random(42)
     // alphabet includes MULTI-BYTE code points (r17, per advice): the
     // bound must hold against code-point levenshtein, not byte counts —
@@ -49,7 +49,7 @@ class BagLowerBoundSpec extends SparkTestBase {
   }
 
   test("the screen is effective AND the screened pipeline is row-identical") {
-    BagLowerBound.register(spark)
+    Natives.ensure(spark)
     // identical rows with and without the prescreen (lossless)
     val screened = graft.operators.ExtendedQueries
       .queries("text_fuzzy_pairs")(spark, sf).collect()

@@ -39,7 +39,7 @@ class GramExprSpec extends SparkTestBase {
     .filter(col("id") < 50)
 
   private def checkStats(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-    GramStatsExpr.register(spark)
+    Natives.ensure(spark)
     val got = df.select(col("id"), expr(s"graft_gram_stats(text, $n)").as("g"))
       .select(col("id"), col("g.n_grams"), col("g.n_distinct"),
         col("g.top_cnt"), col("g.dup_inst"), col("g.sum_tok_len"))
@@ -72,7 +72,7 @@ class GramExprSpec extends SparkTestBase {
   }
 
   private def checkHashes(df: org.apache.spark.sql.DataFrame, n: Int): Unit = {
-    GramHashExpr.register(spark)
+    Natives.ensure(spark)
     val got = df
       .select(col("id"), explode(expr(s"graft_gram_hash_counts(text, $n)")).as("g"))
       .select(col("id"), col("g.h1"), col("g.h2"), col("g.c"))

@@ -7,7 +7,7 @@ class HexParitySumsSpec extends SparkTestBase {
 
   test("fused parity sums equal the composed 32-column aggregate") {
     val s = spark
-    HexParitySums.register(s)
+    Natives.ensure(s)
     val tok = s.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .withColumn("m", md5(col("tok")))
@@ -33,7 +33,7 @@ class HexParitySumsSpec extends SparkTestBase {
 
   test("nBits=16 prefix matches the first 16 of nBits=32") {
     val s = spark
-    HexParitySums.register(s)
+    Natives.ensure(s)
     val tok = s.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), md5(col("text")).as("m"))
     val both = tok.groupBy("doc_id")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class JsonLongFieldSpec extends SparkTestBase {
 
   test("agrees with get_json_object on the events corpus at sf0.001") {
-    JsonLongField.register(spark)
+    Natives.ensure(spark)
     val diff = graft.Tables.events(spark, sf)
       .select(
         expr("try_cast(get_json_object(props, '$.k') AS bigint)").as("jackson"),
@@ -23,7 +23,7 @@ class JsonLongFieldSpec extends SparkTestBase {
   }
 
   test("adversarial documents: nesting, escapes, floats, overflow, malformed") {
-    JsonLongField.register(spark)
+    Natives.ensure(spark)
     val docs = Seq(
       """{"k": 42}""",                        // plain
       """{ "k" : -7 , "x": 1}""",             // ws + negative + sibling
@@ -77,7 +77,7 @@ class JsonLongFieldSpec extends SparkTestBase {
     // parse this expression exists to avoid; divergence is confined to
     // malformed input (scaladoc posture). Pinned HERE so a behavior
     // change on either side is caught.
-    JsonLongField.register(spark)
+    Natives.ensure(spark)
     val s = spark
     import s.implicits._
     val rows = Seq("""{"k": 7, }""", """{"k": 7, "x": }""")
@@ -96,7 +96,7 @@ class JsonLongFieldSpec extends SparkTestBase {
     val cases = Seq("""{"k": 42}""", """{"x": {"k": 9}}""", """{"k": -3}""")
     for (c <- cases) {
       val viaEval = JsonLongField.extract(c.getBytes("UTF-8"), "k".getBytes("UTF-8"))
-      JsonLongField.register(spark)
+      Natives.ensure(spark)
       val viaSql = spark.sql(s"""SELECT graft_json_long('$c', 'k')""")
         .collect().head
       val sqlVal = if (viaSql.isNullAt(0)) null else java.lang.Long.valueOf(viaSql.getLong(0))

@@ -31,7 +31,7 @@ class KmArgminSpec extends SparkTestBase {
   }
 
   test("codegen path through SQL agrees with eval on corpus-shaped rows") {
-    KmArgmin.register(spark)
+    Natives.ensure(spark)
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(11)

@@ -67,8 +67,7 @@ class Lev64Spec extends SparkTestBase {
   }
 
   test("fuzzy pipeline rows are identical through graft_lev64 and levenshtein") {
-    Lev64.register(spark)
-    BagLowerBound.register(spark)
+    Natives.ensure(spark)
     val viaLev64 = graft.operators.ExtendedQueries
       .queries("text_fuzzy_pairs")(spark, sf).collect()
       .map(_.toString).sorted.toSeq
@@ -92,7 +91,7 @@ class Lev64Spec extends SparkTestBase {
   }
 
   test("interpreted eval agrees with codegen") {
-    Lev64.register(spark)
+    Natives.ensure(spark)
     val rows = spark.sql(
       """SELECT graft_lev64('kitten', 'sitting', 20),
         |       graft_lev64('abcdef', 'xyzxyz', 3),

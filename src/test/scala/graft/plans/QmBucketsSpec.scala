@@ -26,7 +26,7 @@ class QmBucketsSpec extends SparkTestBase {
   )
 
   test("graft_qm_buckets equals explode → filter('') → md5-bucket counts") {
-    QmBuckets.register(spark)
+    Natives.ensure(spark)
     val corpus = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
     val docs = spark.createDataFrame(
@@ -66,5 +66,17 @@ class QmBucketsSpec extends SparkTestBase {
       }
     }
     assert(want.keySet.subsetOf(got.keySet))
+  }
+
+  test("graft_qm_buckets rejects a non-positive or non-literal nBuckets before any job runs") {
+    Natives.ensure(spark)
+    val docs = spark.range(3).selectExpr("CAST(id AS STRING) AS text", "CAST(id AS INT) AS n")
+    for (call <- Seq("graft_qm_buckets(text, 0)", "graft_qm_buckets(text, n)")) {
+      val e = intercept[Exception](docs.selectExpr(call))
+      assert(e.getMessage.contains("graft_qm_buckets expects") &&
+        e.getMessage.contains("positive int literal nBuckets"), s"$call: ${e.getMessage}")
+    }
+    val ok = docs.selectExpr("graft_qm_buckets(text, 3)").collect()
+    assert(ok.forall(_.getSeq[Long](0).length == 4))
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
 class SignBitsSpec extends SparkTestBase {
 
   test("null element or wrong length yields NULL via codegen") {
-    SignBits.register(spark)
+    Natives.ensure(spark)
     val out = spark.sql(
       """SELECT id, graft_sign_bits(v, 4, 2) AS sig FROM VALUES
         |  (1, array(CAST(1.0 AS FLOAT), CAST(-2.0 AS FLOAT))),
@@ -38,7 +38,7 @@ class SignBitsSpec extends SparkTestBase {
     assert(ev(Array[Any](1.0f, null)) == null, "null element must yield NULL")
     assert(ev(Array[Any](1.0f)) == null, "wrong length must yield NULL")
     // the two paths agree on the clean vector
-    SignBits.register(spark)
+    Natives.ensure(spark)
     val viaSql = spark.sql(
       "SELECT graft_sign_bits(array(CAST(1.0 AS FLOAT), CAST(-2.0 AS FLOAT)), 4, 2)")
       .collect().head.getString(0)

@@ -13,7 +13,7 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("size-only compaction: shuffle-free, content-preserving, file count from bytes") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val base = graft.TempDirs.create("graft_compact").toString
     val rows = fragment(s"$base/frag", 64)
     val rep = Compaction.compact(spark, s"$base/frag", s"$base/out",
       targetBytes = 512L * 1024)
@@ -39,7 +39,7 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("sort-compaction buys file-level pruning: a point filter touches one file") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_sort").toString
+    val base = graft.TempDirs.create("graft_compact_sort").toString
     fragment(s"$base/frag", 32)
     val rep = Compaction.compact(spark, s"$base/frag", s"$base/sorted",
       targetBytes = 48L * 1024, sortKeys = Seq("l_orderkey"))
@@ -65,7 +65,7 @@ class CompactionSpec extends SparkTestBase {
   }
 
   test("z-order compaction: a point filter on EITHER key touches a bounded file subset") {
-    val base = java.nio.file.Files.createTempDirectory("graft_compact_z").toString
+    val base = graft.TempDirs.create("graft_compact_z").toString
     // sf0.01: enough rows (~60k) that per-value row counts and file
     // counts are stable — the sf0.001 grid made the touched-file
     // assertion hostage to 3-4 row point values

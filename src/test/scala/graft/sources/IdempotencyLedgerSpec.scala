@@ -1,12 +1,11 @@
 package graft.sources
 
 import graft.SparkTestBase
-import java.nio.file.Files
 
 class IdempotencyLedgerSpec extends SparkTestBase {
 
   private def freshLedger(): IdempotencyLedger =
-    new IdempotencyLedger(Files.createTempDirectory("graft_ledger").toString,
+    new IdempotencyLedger(graft.TempDirs.create("graft_ledger").toString,
       spark.sessionState.newHadoopConf())
 
   test("key lifecycle: absent -> pending -> complete, claims are exclusive") {
@@ -76,7 +75,7 @@ class IdempotencyLedgerSpec extends SparkTestBase {
     // injectable clock: complete at t0, sweep with the clock advanced
     var clock = 1000000000L
     val led = new IdempotencyLedger(
-      Files.createTempDirectory("graft_ledger_ttl").toString,
+      graft.TempDirs.create("graft_ledger_ttl").toString,
       spark.sessionState.newHadoopConf(), () => clock)
     val ttl = 24L * 3600 * 1000 // the reference's ttl_hours=24
     assert(led.withOperation("op:old") {})
@@ -99,7 +98,7 @@ class IdempotencyLedgerSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val led = freshLedger()
-    val target = Files.createTempDirectory("graft_ledger_t").toString + "/t.parquet"
+    val target = graft.TempDirs.create("graft_ledger_t").toString + "/t.parquet"
     val batch = Seq((1L, 10L, "a"), (2L, 10L, "b")).toDF("k", "tie", "p")
     def attempt(): Boolean = led.withOperation("dump:page:1") {
       IdempotentSink.writeKeyed(batch, "k", "tie", target): Unit

@@ -7,7 +7,7 @@ class IdempotentSinkSpec extends SparkTestBase {
 
   test("first write lands, replay skips everything, new keys append") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("idem_sink").toString + "/t"
+    val dir = graft.TempDirs.create("idem_sink").toString + "/t"
     // per-doc unique keys, reference formula (sha256 of op:identifier)
     val keyed = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
@@ -33,7 +33,7 @@ class IdempotentSinkSpec extends SparkTestBase {
 
   test("duplicate keys inside one batch resolve first-writer-wins") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("idem_sink_dup").toString + "/t"
+    val dir = graft.TempDirs.create("idem_sink_dup").toString + "/t"
     // WodEtl's synthetic slugs cycle with period lcm(12,20,5)=60, so the
     // reference-derived keys genuinely collide — exactly the case the
     // in-batch dedupe covers.
@@ -48,7 +48,7 @@ class IdempotentSinkSpec extends SparkTestBase {
 
   test("each incoming row is computed once per call") {
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("idem_sink_once").toString + "/t"
+    val dir = graft.TempDirs.create("idem_sink_once").toString + "/t"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val nDocs = docs.count()
     // the input plan's filter counts every row it evaluates
@@ -70,7 +70,7 @@ class CosineSimilaritySpec extends SparkTestBase {
   import org.apache.spark.sql.functions._
 
   test("native expression matches the fold form bit-for-bit and codegens") {
-    graft.plans.CosineSimilarity.register(spark)
+    graft.plans.Natives.ensure(spark)
     val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(200)
     val a = emb.select(col("vec_id").as("ida"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("idb"), col("embedding").as("eb"))

@@ -2,15 +2,10 @@ package graft.sources
 
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class MergeSinkSpec extends SparkTestBase {
 
-  private def tmpTarget(): String = {
-    val dir = Files.createTempDirectory("graft_merge").toFile
-    dir.deleteOnExit()
-    s"${dir.getAbsolutePath}/t.parquet"
-  }
+  private def tmpTarget(): String = s"${graft.TempDirs.create("graft_merge")}/t.parquet"
 
   test("merge upserts by key: higher version wins, new keys append") {
     val s = spark
@@ -42,8 +37,7 @@ class MergeSinkSpec extends SparkTestBase {
   test("swap goes through the path's Hadoop filesystem (explicit file: scheme)") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_merge_fs").toFile
-    dir.deleteOnExit()
+    val dir = graft.TempDirs.create("graft_merge_fs").toFile
     val path = s"file://${dir.getAbsolutePath}/t.parquet"
     assert(MergeSink.mergeKeyed(Seq((1L, 1L, "a")).toDF("k", "v", "p"), "k", "v", path) == 1)
     assert(MergeSink.mergeKeyed(Seq((1L, 2L, "b")).toDF("k", "v", "p"), "k", "v", path) == 1)

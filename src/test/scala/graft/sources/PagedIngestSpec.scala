@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkTestBase
-import java.nio.file.Files
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
@@ -29,7 +28,7 @@ class PagedIngestSpec extends SparkTestBase {
   }
 
   private def fresh(): (String, IdempotencyLedger) = {
-    val dir = Files.createTempDirectory("graft_ingest").toString
+    val dir = graft.TempDirs.create("graft_ingest").toString
     (dir + "/staging",
       new IdempotencyLedger(dir + "/ledger", spark.sessionState.newHadoopConf()))
   }

@@ -37,7 +37,7 @@ class ScalePatternsSpec extends SparkTestBase {
   }
 
   test("date-partitioned output prunes partitions on read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/weekly"
+    val dir = graft.TempDirs.create("graft_part").toString + "/weekly"
     val records = graft.etl.WodEtl.pipelineE2E(spark, sf)
     records.write.mode("overwrite").partitionBy("date").parquet(dir)
     val someDate = records.select("date").head().getString(0)
@@ -49,7 +49,7 @@ class ScalePatternsSpec extends SparkTestBase {
   }
 
   test("json-lines round-trip preserves the weekly records; corrupt lines quarantined") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString + "/weekly"
+    val dir = graft.TempDirs.create("graft_jsonl").toString + "/weekly"
     val records = graft.etl.WodEtl.pipelineE2E(spark, sf)
     JsonLines.write(records, dir)
     val back = JsonLines.read(spark, dir, records.schema).cache()
@@ -71,7 +71,7 @@ class ScalePatternsSpec extends SparkTestBase {
   }
 
   test("csv round-trip with explicit schema; malformed rows quarantined") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/t"
+    val dir = graft.TempDirs.create("graft_csv").toString + "/t"
     val src = spark.read.parquet(s"$sf/customer.parquet")
     CsvSource.write(src, dir)
     val back = CsvSource.read(spark, dir, src.schema).cache()
@@ -90,7 +90,7 @@ class ScalePatternsSpec extends SparkTestBase {
   }
 
   test("orc round-trip preserves schema and rows; predicates push into the ORC scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString + "/t"
+    val dir = graft.TempDirs.create("graft_orc").toString + "/t"
     val src = spark.read.parquet(s"$sf/orders.parquet")
     OrcSource.write(src, dir)
     // schema-pinned read: the production posture (see OrcSource)
@@ -127,7 +127,7 @@ class ScalePatternsSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_sink").toString + "/t"
+    val dir = graft.TempDirs.create("graft_stream_sink").toString + "/t"
     val input = MemoryStream[Ev]
     val q = input.toDS().writeStream
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0))

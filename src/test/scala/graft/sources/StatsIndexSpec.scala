@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class StatsIndexSpec extends SparkTestBase {
 
   private lazy val base = {
-    val b = java.nio.file.Files.createTempDirectory("graft_statsidx").toString
+    val b = graft.TempDirs.create("graft_statsidx").toString
     val li = graft.Tables.lineitem(spark, "/root/testdata/sf0.01")
       .select("l_orderkey", "l_partkey", "l_quantity")
     li.repartition(32).write.mode("overwrite").parquet(s"$b/frag")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkTestBase
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import java.nio.file.Files
 
 /** The reference's continuous fetch→check→write loop, end to end:
   * micro-batches through foreachBatch into the keyed sinks, including a
@@ -10,11 +9,7 @@ import java.nio.file.Files
   * the exact at-least-once failure mode the sinks must absorb. */
 class StreamIngestSpec extends SparkTestBase {
 
-  private def tmp(p: String): String = {
-    val d = Files.createTempDirectory(p).toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmp(p: String): String = graft.TempDirs.create(p).toString
 
   /** Remove the newest commit marker (and its local-FS checksum shadow,
     * which would otherwise block the re-write) so a restart believes

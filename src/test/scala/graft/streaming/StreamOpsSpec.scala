@@ -318,7 +318,7 @@ class StreamOpsSpec extends SparkTestBase {
     // advances past an empty input, so NO outer emission is provable.
     // The operator must emit nothing; the oracle's CASE-NULL horizon
     // mirrors it (a NULL comparison admits no null-lane rows).
-    val base = java.nio.file.Files.createTempDirectory("graft_oneside").toString
+    val base = graft.TempDirs.create("graft_oneside").toString
     graft.Tables.eventsRaw(spark, sf)
       .filter(col("event_type") === "purchase")
       .write.mode("overwrite").parquet(s"$base/events.parquet")
@@ -327,7 +327,7 @@ class StreamOpsSpec extends SparkTestBase {
     // symmetric: views only — the full-outer view null lane is equally
     // unprovable (and the two-NULL NPE path is exercised nowhere:
     // at least one side exists in any non-empty corpus)
-    val base2 = java.nio.file.Files.createTempDirectory("graft_oneside_v").toString
+    val base2 = graft.TempDirs.create("graft_oneside_v").toString
     graft.Tables.eventsRaw(spark, sf)
       .filter(col("event_type") === "view")
       .write.mode("overwrite").parquet(s"$base2/events.parquet")
