@@ -70,12 +70,18 @@ object Bench {
     // below measures steady-state throughput (whole-stage codegen classes
     // compiled, JIT warm) instead of one-time JVM costs — which otherwise
     // dominate and add multi-x run-to-run noise at these data sizes.
+    // A warm-up failure is reported and counted (n_warmup_failed), not
+    // timed; a fatal error (OOM) is not caught and ends the run.
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    if (new java.io.File(warmupDir).isDirectory && warmupDir != sfDir) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try { fn(spark, warmupDir).collect() } catch { case _: Throwable => () }
+    val nWarmupFailed =
+      if (!new java.io.File(warmupDir).isDirectory || warmupDir == sfDir) 0
+      else SparkEntry.queries.count { case (name, fn) =>
+        try { fn(spark, warmupDir).collect(); false }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"bench: warmup $name FAILED: $e")
+          true
+        }
       }
-    }
     // Two timed passes, keep the per-query minimum: the first pass at
     // the target SF still pays one-time costs the sf0.001 warm-up can't
     // cover (page cache for the bigger files, size-specific JIT tiers),
@@ -158,7 +164,8 @@ object Bench {
     val json =
       s"""{"metric":"total","value":${r4(total)},"unit":"sec","cpus":$cpus,""" +
       s""""lanes":{"batch":${r4(total - streamTotal)},"streaming":${r4(streamTotal)}},""" +
-      s""""n_queries":${results.size},"n_failed":$nFailed,$proto,"queries":$qs,"sf":"$sfDir"}"""
+      s""""n_queries":${results.size},"n_failed":$nFailed,"n_warmup_failed":$nWarmupFailed,""" +
+      s"""$proto,"queries":$qs,"sf":"$sfDir"}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
@@ -174,8 +181,8 @@ object Bench {
     val summary =
       s"""{"metric":"total","value":${r4(total)},"unit":"sec","cpus":$cpus,""" +
       s""""lanes":{"batch":${r4(total - streamTotal)},"streaming":${r4(streamTotal)}},""" +
-      s""""n_queries":${results.size},"n_failed":$nFailed,$proto,""" +
-      s""""queries_file":"$outFile","sf":"$sfDir"}"""
+      s""""n_queries":${results.size},"n_failed":$nFailed,"n_warmup_failed":$nWarmupFailed,""" +
+      s"""$proto,"queries_file":"$outFile","sf":"$sfDir"}"""
     println(summary)
     // stop() drains the async listener bus before the writer closes
     spark.stop()

@@ -175,7 +175,7 @@ object BehaviorOps {
     * is exact regardless of sampling. */
   private def ntileDist(df0: DataFrame, order: Seq[Column], k: Int,
                         scoreCol: String): DataFrame = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     val ranged = df0.repartitionByRange(order: _*)
       .withColumn("pid", spark_partition_id()).truncEager
     val counts = ranged.groupBy("pid").agg(count(lit(1)).as("cnt"))
@@ -212,7 +212,7 @@ object BehaviorOps {
     * every customer). Tiebreak o_custkey on every ordering keeps the
     * bucket split deterministic and the oracle's ntile bit-identical. */
   def qRfm(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     val ref = orders(s, d).agg(max(col("o_orderdate").cast("date")).as("ref_date"))
     // checkpointed BEFORE the first ntileDist (r21, guide §2.4):
     // repartitionByRange SAMPLES its child to pick range bounds, so an

@@ -67,7 +67,7 @@ object BpeTrain {
         col("cnt").as("pair_count"))
 
   def textBpeTrain(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     val s2 = s
     import s2.implicits._
     val words = wordSyms(s, d).truncEager

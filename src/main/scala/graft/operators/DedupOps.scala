@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.GraftSession
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,6 +22,7 @@ import org.apache.spark.sql.functions._
   * engine) so every step is oracle-checkable.
   */
 object DedupOps {
+  import Loop.TruncOps
 
   private val H = 8 // minhash functions
   private val BANDS = 4 // 4 bands × 2 rows
@@ -35,36 +35,6 @@ object DedupOps {
     * pair expansion at cap²); the corpus-realistic dfs here (max 14 at
     * sf0.1) sit far below it, so results are unchanged at test scale. */
   private val STOP_SHINGLE_DF_CAP = 64
-
-  /** Lineage truncation for shared/iterative intermediates. Default is
-    * `localCheckpoint` — executor-local blocks, fast, but an executor
-    * loss on a real cluster kills the job. Set
-    * `spark.graft.checkpointDir` to a fault-tolerant path (HDFS/object
-    * store) and the same sites write reliable `checkpoint()`s instead —
-    * the cluster-grade option, same plans otherwise. */
-  private def truncate(df: DataFrame, eager: Boolean): DataFrame = {
-    val sess = df.sparkSession
-    sess.conf.getOption("spark.graft.checkpointDir") match {
-      case Some(dir) =>
-        // setCheckpointDir stores dir/<uuid>, so match on the prefix
-        if (!sess.sparkContext.getCheckpointDir.exists(_.contains(dir)))
-          sess.sparkContext.setCheckpointDir(dir)
-        df.checkpoint(eager)
-      case None => df.localCheckpoint(eager)
-    }
-  }
-
-  private[operators] implicit class TruncOps(df: DataFrame) {
-    def truncEager: DataFrame = truncate(df, eager = true)
-    def truncLazy: DataFrame = truncate(df, eager = false)
-  }
-
-  /** The fixed-point loops' conf scope (CC here, PageRank in GraphOps):
-    * `parts` shuffle partitions, and AQE off in the co-partitioned gear,
-    * whose shuffle-hash joins must keep the planned partitioning. */
-  private[operators] def loopConfs(parts: Int, copart: Boolean): Map[String, String] =
-    Map("spark.sql.shuffle.partitions" -> parts.toString) ++
-      (if (copart) Map("spark.sql.adaptive.enabled" -> "false") else Map.empty)
 
   /** Per-doc distinct-shingle ARRAYS (pre-explode), built MAP-ONLY:
     * a materialized token array (its own projection — CollapseProject
@@ -549,25 +519,16 @@ object DedupOps {
   private[operators] def connectedComponents(pairs0: DataFrame): DataFrame =
     connectedComponentsWithRounds(pairs0)._1
 
-  /** [[connectedComponents]] + (rounds taken, converged?) — the
-    * instrumentation behind the §2 star-vs-min-label decision record:
-    * production graphs' measured round counts are what justify keeping
-    * the oracle-mirrored min-label loop as THE path (see
-    * [[connectedComponentsStar]]'s scaladoc and the StarCcSpec round
-    * measurements). */
-  // CC loop physical gears (r21, the prCore discipline applied to the
-  // min-label loop per the r20 verdict #5): rows/task for the loop's
-  // scans of the checkpointed tables, and the edge count past which
-  // the loop co-partitions instead of relying on AQE + broadcast.
-  // The threshold is deliberately HIGH: unlike PageRank (3 joins/step
-  // × 20+ steps made per-step broadcasts the sf10 loser), the CC loop
-  // broadcasts its label vector once per round for a handful of
-  // rounds — measured at sf10 (1.8M edges, 500k labels ≈ 12 MB
-  // broadcast) the broadcast loop still beats copart 8.2 s vs 9.6 s.
-  // Copart exists for graphs whose label vector stops being a sane
-  // broadcast (hundreds of MB per round; hard cap 8 GB / 512M rows) —
-  // there the co-partitioned join is the only shape that survives,
-  // and gear equality is spec-proven (forceCopart below).
+  /** [[connectedComponents]] + (rounds taken, converged?): the
+    * instrumentation behind the min-label decision record (production
+    * graphs' measured round counts, pinned in CcLoopSpec, are why the
+    * oracle-mirrored min-label loop is the only CC). */
+  // CC loop widths: rows per task and per shuffle partition for the
+  // loop's scans, and the edge count past which the loop co-partitions.
+  // The threshold is deliberately HIGH: the CC loop broadcasts its label
+  // vector once per round for a handful of rounds, and at sf10 (1.8M
+  // edges, ≈ 12 MB broadcast) the broadcast loop still beat copart
+  // 8.2 s vs 9.6 s. Copart is for label vectors of hundreds of MB.
   private[operators] val CC_PART_ROWS = 65536L
   private[operators] val CC_COPART_EDGES = 64000000L
 
@@ -575,45 +536,24 @@ object DedupOps {
       pairs0: DataFrame,
       forceCopart: Option[Boolean] = None): (DataFrame, Int, Boolean) = {
     val pairs = pairs0.toDF("doc_a", "doc_b")
-    val s = pairs.sparkSession
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
-    // localCheckpoint truncates the candidate-generation lineage:
-    // without it every iteration (and its convergence count) would
-    // re-run the whole pair pipeline — O(rounds²) recomputes. On a
-    // cluster this is a reliable-checkpoint (or cached) edge list,
-    // same shape.
+    // truncation cuts the candidate-generation lineage: without it every
+    // round (and its convergence probe) would re-run the whole pair
+    // pipeline, O(rounds²) recomputes
     val edges0 = pairs
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .distinct()
       .truncEager
-    // one cheap count over the materialized checkpoint picks the gear
-    // (the qPagerankConverged shape). TWO physical gears, identical
-    // rows out (labels never depend on partitioning):
-    //  - small graphs: AQE + broadcast loop joins, shuffle partitions
-    //    scoped to 8, loop scans coalesced to compute-sized tasks —
-    //    at bench scale the wall is per-round fixed cost (32 near-empty
-    //    tasks per scan/shuffle), not work;
-    //  - large graphs: edges co-partitioned ONCE on the probe key
-    //    (doc_b) at a row-count-derived width, reps emerging from each
-    //    round's groupBy(doc_id) at the SAME width (checkpoint
-    //    preserves partitioning), shuffle-hash hints + AQE off — the
-    //    per-round label join then reuses both sides' partitioning and
-    //    each round's only exchange is the min() aggregate. No O(n)
-    //    label broadcast per round: the posture that survives 100×.
+    // one cheap count over the materialized checkpoint picks the gear.
+    // The copart gear partitions edges once on the probe key (doc_b);
+    // reps emerge from each round's groupBy(doc_id) at the same width,
+    // so a round's only exchange is the min() aggregate.
     val nEdges = edges0.count()
-    val copart = forceCopart.getOrElse(nEdges > CC_COPART_EDGES)
-    val loopParts =
-      if (!copart) 8
-      else math.max(8, math.min(sessionParts.toInt,
-        (nEdges / CC_PART_ROWS).toInt))
-    def hinted(df: DataFrame): DataFrame =
-      if (copart) df.hint("shuffle_hash") else df
-    GraftSession.withConfs(s, loopConfs(loopParts, copart)) {
+    val gear = Loop.gear(pairs.sparkSession, nEdges,
+      forceCopart.getOrElse(nEdges > CC_COPART_EDGES), CC_PART_ROWS, smallHint = None)
+    gear {
       val edges =
-        if (copart) edges0.repartition(loopParts, col("doc_b")).truncEager
-        else edges0.coalesce(
-          math.max(1L, math.min(sessionParts.toLong,
-            nEdges / CC_PART_ROWS)).toInt)
+        if (gear.copart) gear.keyed(edges0, "doc_b").truncEager
+        else edges0.coalesce(Loop.width(nEdges, CC_PART_ROWS))
       // Seed with min(self, neighbors) straight from the edge list — the
       // result identity-init + one propagation round would produce, for
       // free (edges are symmetric, so every node appears as doc_a).
@@ -622,21 +562,17 @@ object DedupOps {
         .agg(min("doc_b").as("mn"))
         .select(col("doc_id"), least(col("doc_id"), col("mn")).as("rep"))
         .truncEager
-      // Convergence check without a per-round diff join: reps only ever
+      // Convergence probe without a per-round diff join: reps only ever
       // DECREASE (min semilattice), so Σrep is strictly monotone until
-      // the fixpoint — equal consecutive sums ⟺ no rep changed. The sum
-      // is one cheap agg over the just-checkpointed (in-memory) table vs
-      // a join + count job per round. Decimal sum: overflow-proof at any
-      // node-id magnitude/count.
+      // the fixpoint — equal consecutive sums ⟺ no rep changed. Decimal
+      // sum: overflow-proof at any node-id magnitude/count.
       def repSum(df: DataFrame): java.math.BigDecimal =
         df.agg(coalesce(sum(col("rep").cast("decimal(38,0)")),
           lit(0).cast("decimal(38,0)"))).head().getDecimal(0)
       var prevSum = repSum(reps)
-      var converged = false
-      var rounds = 0
-      while (!converged && rounds < CC_MAX) {
+      val (rounds, converged) = Loop.converge(CC_MAX) {
         val viaNeighbor = edges
-          .join(hinted(reps), edges("doc_b") === reps("doc_id"))
+          .join(gear.hinted(reps), edges("doc_b") === reps("doc_id"))
           .select(edges("doc_a").as("doc_id"), col("rep"))
         // lazy checkpoint: the repSum action below materializes it, so
         // each round costs ONE job instead of checkpoint-job + agg-job
@@ -645,136 +581,12 @@ object DedupOps {
           .truncLazy
         val sm = repSum(next)
         reps = next
-        converged = sm == prevSum
+        val same = sm == prevSum
         prevSum = sm
-        rounds += 1
+        same
       }
       (reps.select("doc_id", "rep"), rounds, converged)
     }
-  }
-
-  /** Hard round bound of the star loop: Kiveris et al. prove
-    * O(log² n) alternating rounds, with O(log n) observed in practice
-    * — so 25 is a practical budget (the 4000-hop chain spec converges
-    * in ≤15), not a proof-backed universal cover. Unlike the
-    * min-label loop (whose mid-flight labels are a DOCUMENTED
-    * CC_MAX-unrolled contract the oracles mirror), the star loop has
-    * no unrolled oracle, so a non-converged exit would silently
-    * return wrong labels — [[connectedComponentsStarRounds]] throws
-    * instead. NOT the min-label CC_MAX — that bound is
-    * diameter-limited, this one is not. */
-  private[operators] val CC_STAR_MAX = 25
-
-  /** Alternating large-star/small-star connected components (Kiveris
-    * et al., "Connected Components in MapReduce and Beyond", SoCC
-    * 2014) — the O(log n)-round twin of [[connectedComponents]] for
-    * graphs where O(diameter) is the wrong bound (long chains, lattice
-    * crawls). The production lanes keep the min-label loop: their
-    * near-dup / power-law graphs converge in a handful of rounds and
-    * its 20-step unroll is what the DuckDB oracles mirror bit-for-bit.
-    * This twin exists because CC_MAX is an HONEST limit — a
-    * 4000-node path needs 4000 min-label rounds and the bounded loop
-    * returns mid-flight labels there — and the star algorithm closes
-    * exactly that gap: each round re-roots every node toward its
-    * neighborhood minimum, halving component depth, so convergence is
-    * logarithmic in component size, never linear in diameter.
-    *
-    * Per round (both phases are one groupBy + one join over the edge
-    * list — the same shuffle budget as a min-label round):
-    *  - large-star: every strictly-larger neighbor of each center
-    *    attaches to the center's neighborhood minimum;
-    *  - small-star: each node and its not-larger neighbors attach to
-    *    their minimum.
-    * Convergence = BOTH phases left the canonical edge set unchanged
-    * (checked exactly — count + except — not via a checksum: at the
-    * fixpoint the set is a min-rooted star forest and both phases are
-    * identities); hitting CC_STAR_MAX without converging THROWS
-    * rather than returning mid-flight labels (the min-label loop's
-    * bounded exit is a mirrored oracle contract; this one would just
-    * be wrong). Output matches [[connectedComponents]]: (doc_id,
-    * rep=component min) for every node appearing in a pair —
-    * including nodes whose only pair is a self-pair (x,x), which
-    * canon() drops from the edge set and the rep union restores as
-    * singletons. Spec-proven equal on the near-dup, semantic, and
-    * real-edge graphs, and correct on the pathological chain the
-    * min-label bound cannot finish. */
-  private[operators] def connectedComponentsStar(pairs0: DataFrame): DataFrame =
-    connectedComponentsStarRounds(pairs0)._1
-
-  private[operators] def connectedComponentsStarRounds(
-      pairs0: DataFrame): (DataFrame, Int) = {
-    // materialize the pair stream ONCE: both the canonical edge seed
-    // and the self-pair-only singleton restore below read it, and an
-    // un-truncated `pairs` would re-run the whole candidate-generation
-    // pipeline (LSH banding at production grain) a second time for
-    // the singleton anti-join
-    val pairs = pairs0.toDF("doc_a", "doc_b").truncEager
-    def canon(e: DataFrame): DataFrame = e
-      .filter(col("u") =!= col("v"))
-      .select(least(col("u"), col("v")).as("u"),
-        greatest(col("u"), col("v")).as("v"))
-      .distinct()
-    var edges = canon(pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
-      .truncEager
-    def bothDirs(e: DataFrame): DataFrame =
-      e.union(e.select(col("v").as("u"), col("u").as("v")))
-    // large-star: center c over ALL neighbors n; m = min(c, min n);
-    // every n > c re-attaches to m (edges (m, n) are canonical: m < n)
-    def largeStar(e: DataFrame): DataFrame = {
-      val nbrs = bothDirs(e)
-      val mins = nbrs.groupBy(col("u").as("c"))
-        .agg(min("v").as("mn"))
-        .select(col("c"), least(col("c"), col("mn")).as("m"))
-      canon(nbrs.join(mins, nbrs("u") === mins("c"))
-        .filter(col("v") > col("u"))
-        .select(col("m").as("u"), col("v")))
-    }
-    // small-star: center = the LARGER endpoint of each canonical edge,
-    // neighbors all smaller; m = their min; neighbors and the center
-    // itself re-attach to m
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy(col("v").as("c")).agg(min("u").as("m"))
-      val withM = e.join(mins, e("v") === mins("c"))
-      canon(
-        withM.select(col("m").as("u"), col("u").as("v"))
-          .union(withM.select(col("m").as("u"), col("v"))))
-    }
-    // exact set equality (inputs are distinct): a checksum could
-    // theoretically stall the loop early; the diff runs on the
-    // shrinking edge list, once per phase
-    def same(a: DataFrame, b: DataFrame): Boolean =
-      b.count() == a.count() && b.except(a).isEmpty
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < CC_STAR_MAX) {
-      val afterLarge = largeStar(edges).truncEager
-      val largeStable = same(edges, afterLarge)
-      val afterSmall = smallStar(afterLarge).truncEager
-      converged = largeStable && same(afterLarge, afterSmall)
-      edges = afterSmall
-      rounds += 1
-    }
-    // wrong labels must not come out of this loop quietly: the
-    // min-label loop's bounded exit is a documented, oracle-mirrored
-    // contract; a star loop cut mid-flight has no such contract
-    require(converged,
-      s"star CC did not converge within CC_STAR_MAX=$CC_STAR_MAX rounds — " +
-        "raise the budget; O(log² n) is the proven bound, not ≤25")
-    // at the fixpoint the edge set is a star forest rooted at each
-    // component's min: rep = min(self, neighbors) names the root for
-    // members AND for the root itself
-    val reps = bothDirs(edges)
-      .groupBy(col("u").as("doc_id")).agg(min("v").as("mn"))
-      .select(col("doc_id"), least(col("doc_id"), col("mn")).as("rep"))
-    // canon() drops self-pairs, so a node whose ONLY appearance is
-    // (x,x) has no edge and no rep row yet — restore it as its own
-    // singleton, matching the min-label contract ("every node
-    // appearing in a pair"); anti-join keeps nodes already labeled
-    val selfOnly = pairs.filter(col("doc_a") === col("doc_b"))
-      .select(col("doc_a").as("doc_id")).distinct()
-      .join(reps, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("rep"))
-    (reps.union(selfOnly), rounds)
   }
 
   /** Cluster election over the near-dup pair graph: connected

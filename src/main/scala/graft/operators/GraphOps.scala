@@ -33,6 +33,7 @@ import org.apache.spark.sql.functions._
   * the same exactness discipline as Money.
   */
 object GraphOps {
+  import Loop.TruncOps
 
   private val SCALE = 1000000000000L // total rank mass, fixed-point
   private[operators] val K = 3       // out-degree of every doc (specs reuse it)
@@ -108,12 +109,9 @@ object GraphOps {
     * smoke-depth twin). The loop applies the identical integer
     * fixed-point step, but stops on an integer-mass delta rule:
     * Σ|p_i − p_{i−1}| ≤ PR_EPS (1e-6 of total mass), hard-bounded at
-    * PR_MAX. Per iteration the driver sees ONE scalar (the delta) —
-    * the CC-loop posture; edges and each iterate are
-    * lineage-truncated (localCheckpoint; `spark.graft.checkpointDir`
-    * upgrades to reliable checkpoints on a cluster) so iteration d
-    * never recomputes iterations 1..d−1, and the delta job itself
-    * materializes the lazily-checkpointed iterate — one job per step.
+    * PR_MAX. Per iteration the driver sees ONE scalar (the delta),
+    * whose action also materializes the lazily-truncated iterate: one
+    * action per step ([[Loop]]).
     *
     * The ORACLE mirrors the stopping rule, not a pinned depth: the
     * chained-CTE rank steps unroll to PR_MAX, per-step deltas are
@@ -126,25 +124,19 @@ object GraphOps {
     * flattens near O(n_docs) mass units) is why the rule is a
     * threshold, not a fixpoint test.
     *
-    * TWO physical gears, picked by a metadata row count (both produce
-    * identical rows — spec-asserted):
-    *  - small corpora (≤ PR_COPART_DOCS): AQE + broadcast loop joins,
-    *    shuffle partitions scoped to 8 — at bench scale the wall is
-    *    per-job overhead, not work (sf0.1: 10.5 s at 32 parts → 4.4 s);
-    *  - large corpora: ids/edges/ranks CO-PARTITIONED once on the join
-    *    keys (localCheckpoint preserves partitioning), shuffle-hash
-    *    hints, AQE off inside the loop — every iteration then has
-    *    exactly ONE exchange (the groupBy(dst)) and ZERO per-iteration
-    *    broadcast builds of the O(n) rank vector, which is what ate the
-    *    AQE gear at sf10 (three 500k-row broadcasts per step: 33.8 s →
-    *    13.8 s measured). The co-partitioned gear IS the 100 TB shape:
-    *    broadcast-per-iteration dies first at scale. */
+    * Gears ([[Loop.Gear]], picked by a metadata row count, rows
+    * spec-asserted identical): up to PR_COPART_DOCS the small gear with
+    * broadcast loop joins (sf0.1: 10.5 s at 32 parts → 4.4 s at 8);
+    * beyond it ids/edges/ranks co-partitioned once, so a step has one
+    * exchange (the groupBy(dst)) and no O(n) rank broadcast, which is
+    * what ate the AQE gear at sf10 (33.8 s → 13.8 s measured). */
   def qPagerankConverged(s: SparkSession, d: String): DataFrame = {
     val nDocs = documents(s, d).count() // one metadata count serves both gear checks
     prConverged(s, d, copart = nDocs > PR_COPART_DOCS, nDocs = nDocs)
   }
 
   private[operators] val PR_COPART_DOCS = 100000L
+  private val PR_PART_ROWS = PR_COPART_DOCS / 8 // copart gear: 8 partitions per 100k docs
 
   private[operators] def prConverged(s: SparkSession, d: String,
       copart: Boolean, nDocs: Long = -1L): DataFrame = {
@@ -164,37 +156,20 @@ object GraphOps {
     * the derived K-regular lane passes outdeg = K, the real-edge lane
     * its variable resolver output. Identical posture to the r16 loop:
     * per iteration the driver sees ONE scalar (the delta); edges and
-    * each iterate are lineage-truncated; two physical gears (AQE +
-    * broadcast at bench scale, co-partitioned shuffle-hash with AQE off
-    * beyond PR_COPART_DOCS). `edgesOf` receives the MATERIALIZED ids so
-    * derived-edge callers reuse that checkpoint. */
+    * each iterate are lineage-truncated; the [[Loop.Gear]] switches to
+    * the co-partitioned gear beyond PR_COPART_DOCS. `edgesOf` receives
+    * the MATERIALIZED ids so derived-edge callers reuse that checkpoint. */
   private def prCore(s: SparkSession, idsIn: DataFrame,
       edgesOf: DataFrame => DataFrame, nDocs: Long,
       copart: Boolean, maxIters: Int): PrState = {
-    import DedupOps.TruncOps
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions")
-    val loopParts =
-      if (!copart) 8
-      else math.max(8, math.min(sessionParts.toInt,
-        (nDocs / PR_COPART_DOCS).toInt * 8))
-    def keyed(df: DataFrame, key: String): DataFrame =
-      if (copart) df.repartition(loopParts, col(key)) else df
-    // small gear (r21, verdict #7): the loop joins' build sides (the
-    // rank vector / per-dst sums, ≤ PR_COPART_DOCS rows ≈ a few MB)
-    // were ALREADY becoming broadcasts — but only after AQE shuffled
-    // them to measure their size, so every step paid the exchange map
-    // stage + a replan it never needed. The explicit hint makes the
-    // join map-side from the static plan: per step, the only exchange
-    // left is the groupBy(dst). Row-identical (a join strategy cannot
-    // change join results); the gear bound keeps the broadcast small
-    // (measured sf0.1 same-window: 4.15→4.05 / 3.87→3.62 s — modest,
-    // the per-step wall is checkpoint+job fixed cost, but the plan
-    // sheds two exchanges per step).
-    def hinted(df: DataFrame): DataFrame =
-      if (copart) df.hint("shuffle_hash") else df.hint("broadcast")
-    GraftSession.withConfs(s, DedupOps.loopConfs(loopParts, copart)) {
-      val ids = keyed(idsIn, "doc_id").truncEager
-      val edges = keyed(edgesOf(ids), "src").truncEager
+    // small gear (r21): the explicit broadcast hint makes the loop joins
+    // map-side from the static plan (AQE alone broadcast the small build
+    // sides only after shuffling them to measure them), so a step's only
+    // exchange is the groupBy(dst)
+    val gear = Loop.gear(s, nDocs, copart, PR_PART_ROWS, smallHint = Some("broadcast"))
+    gear {
+      val ids = gear.keyed(idsIn, "doc_id").truncEager
+      val edges = gear.keyed(edgesOf(ids), "src").truncEager
       // the teleport term is a per-graph CONSTANT — (15·(SCALE DIV n))
       // DIV 100 in the same truncating arithmetic the SQL form used
       // (all operands non-negative, so Scala / ≡ SQL DIV). Folding it
@@ -207,13 +182,11 @@ object GraphOps {
         if (nDocs <= 0) 0L else (15L * (SCALE / nDocs)) / 100L
       var ranks = ids.select(col("doc_id").as("rid"),
         expr(s"$SCALE DIV n_docs").as("p")).truncEager
-      var it = 0
-      var converged = false
-      while (!converged && it < maxIters) {
-        val insum = edges.join(hinted(ranks), col("src") === col("rid"))
+      val (it, _) = Loop.converge(maxIters) {
+        val insum = edges.join(gear.hinted(ranks), col("src") === col("rid"))
           .groupBy(col("dst")).agg(sum(expr("p DIV outdeg")).as("insum"))
         val pair = ranks.select(col("rid"), col("p").as("p0"))
-          .join(hinted(insum), col("rid") === col("dst"), "left")
+          .join(gear.hinted(insum), col("rid") === col("dst"), "left")
           .select(col("rid"),
             (lit(teleport) +
               expr("(85 * coalesce(insum, 0)) DIV 100")).as("p"),
@@ -223,8 +196,7 @@ object GraphOps {
         // materializes `pair`'s checkpoint (no separate job)
         val delta = pair.agg(sum(abs(col("p") - col("p0")))).head().getLong(0)
         ranks = pair.select(col("rid"), col("p"))
-        it += 1
-        converged = delta <= PR_EPS
+        delta <= PR_EPS
       }
       PrState(ids, edges, ranks, it)
     }
@@ -307,7 +279,6 @@ object GraphOps {
     * skew-tuned scope: the resolve join executes HERE, so the AQE
     * split sees its hot URL partition with a threshold it can fire at. */
   private def resolvedEdges(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
     withSkewTuned(s) { realEdges(s, d).truncEager }
   }
 
@@ -368,7 +339,7 @@ object GraphOps {
     * makes the per-round label join genuinely skewed: every round
     * probes the hub's label from ~n edge rows, flattened by map-side
     * partial aggregation on the min() — and at amplified skew the AQE
-    * skew-join split carries the rest (measured in Lab `cc_real_*`).
+    * skew-join split carries the rest.
     *
     * Output: every document with its component representative (min
     * doc_id in the component; isolated docs are their own singleton
@@ -451,7 +422,6 @@ object GraphOps {
     * ord(u) < ord(v) < ord(w) is counted exactly once: as the wedge
     * (u; v, w) closed by the oriented edge v→w. */
   def qTriangleReal(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
     // MATERIALIZE the shared intermediates (r17, from the plan audit):
     // und is referenced by deg + ord, ord three times (x/y/z), deg
     // three times — without truncation each reference re-expands the

@@ -342,7 +342,7 @@ object OlapQueries {
     * exchange on the pre-checkpoint plan (the checkpoint hides it
     * behind a Scan ExistingRDD in the final query's executed plan). */
   private[graft] def paretoRanged(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     // the aggregate is checkpointed BEFORE the range exchange (r21):
     // repartitionByRange samples its child for range bounds, so the
     // un-materialized form ran the whole orders aggregate twice —
@@ -358,7 +358,7 @@ object OlapQueries {
 
   def qParetoDist(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     // Materialized ONCE: three subtrees (counts, n_total, ranked)
     // consume (row, pid). Without truncation, each consumer re-plans
     // the range exchange, and consistent pids would hinge on

@@ -383,7 +383,7 @@ object PretrainOps {
     * corpus through one task, the textbook 100 TB failure. */
   def pretrainSeqPack(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     // the 2-column projection is checkpointed BEFORE the range exchange
     // (r21): repartitionByRange samples its child for bounds, so the
     // un-materialized form ran split()-per-doc twice — sampling pass +
@@ -594,13 +594,7 @@ object PretrainOps {
     val vecs = qmVectors(feats)
     try {
       val w = Array.fill(QM_F + 1)(0L)
-      var it = 0
-      var converged = false
-      while (!converged && it < QM_MAX) {
-        val delta = qmStep(vecs, w, n, cw)
-        it += 1
-        converged = delta <= QM_EPS
-      }
+      val (it, _) = Loop.converge(QM_MAX) { qmStep(vecs, w, n, cw) <= QM_EPS }
       feats.select(col("doc_id"), col("y").as("label"),
         expr(qmPSql(w)).as("score_fp"), lit(it.toLong).as("n_iters"))
         .select(col("doc_id"), col("label"), col("score_fp"),
@@ -793,7 +787,7 @@ object PretrainOps {
     * rounding, `round()` version semantics, or double-representation
     * boundary can flip a per-doc row between engines. */
   private[operators] def qmFeatures(s: SparkSession, d: String): (DataFrame, Long, Long) = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     val labeled = qmCounts(s, d).select(col("doc_id") +: qmLabel.as("y") +: col("bk") +: Seq(
       expr(s"(nt - nd) * $QM_FP DIV nt").as(s"f$QM_B"),
       expr(s"tc * $QM_FP DIV nt").as(s"f${QM_B + 1}"),
@@ -845,15 +839,10 @@ object PretrainOps {
     // gradient counts n0/n1 times (balanced logistic regression — the
     // unweighted loss just learns the base rate)
     val cw = math.max(1L, (n - n1) / math.max(1L, n1))
-    // scale-adaptive loop parallelism (guide §2.2): each GD step is one
-    // full scan of this table, and at ~17 longs/row QM_PART_ROWS rows
-    // ≈ 32 MB per task — so small corpora collapse to a few tasks per
-    // step instead of sessionParts near-empty ones (sf0.1: 32 → 1),
-    // while large corpora keep the checkpoint's own partitioning
-    // (coalesce never increases a partition count). Narrow over the
-    // already-materialized checkpoint: no shuffle, content unchanged.
-    val loopParts = math.max(1L, (n + QM_PART_ROWS - 1) / QM_PART_ROWS).toInt
-    val based = raw.coalesce(loopParts)
+    // each GD step is one full scan of this table (~17 longs/row, so
+    // QM_PART_ROWS rows ≈ 32 MB per task); narrow over the materialized
+    // checkpoint: no shuffle, content unchanged
+    val based = raw.coalesce(Loop.width(n, QM_PART_ROWS))
     // integer min-max standardization to [−FP, FP]: raw feature scales
     // differ 50× and plain GD crawls on that conditioning (measured:
     // AUC 0.60 unstandardized vs 0.74 standardized at the same budget)
@@ -936,7 +925,7 @@ object PretrainOps {
     * corpus; its window would funnel through one task). */
   def mixTokenBudget(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     val all = Window.partitionBy()
     // materialized ONCE (r21): nt feeds the quota aggregate, the range
     // exchange AND that exchange's bound-sampling pass — un-checkpointed,

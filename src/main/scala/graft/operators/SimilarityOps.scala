@@ -375,18 +375,11 @@ object SimilarityOps {
     * set itself never leaves the executors. Output: one row per
     * cluster (members, centroid L1 mass, converged depth). */
   def simKmeansConverged(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     val pts0 = kmPoints(s, d).truncEager // scanned once, reread per step
-    // scale-adaptive loop parallelism (the quality-model GD loop's
-    // move, guide §2.2): every Lloyd step re-scans this table, and at
-    // ~64 longs/row KM_PART_ROWS rows ≈ 32 MB per task — small corpora
-    // collapse to one task per step instead of sessionParts near-empty
-    // ones; large corpora keep the checkpoint's own partitioning
-    // (coalesce never increases). The count is one cheap job over the
-    // just-materialized checkpoint, amortized across KM_MAX steps.
-    val nVec = pts0.count()
-    val pts = pts0.coalesce(
-      math.max(1L, (nVec + KM_PART_ROWS - 1) / KM_PART_ROWS).toInt)
+    // every Lloyd step re-scans this table; the count is one cheap job
+    // over the just-materialized checkpoint, amortized across KM_MAX steps
+    val pts = pts0.coalesce(Loop.width(pts0.count(), KM_PART_ROWS))
     val (cents, it) = kmTrain(s, pts, KM_K, KM_MAX)
     val s2 = s
     import s2.implicits._
@@ -401,16 +394,14 @@ object SimilarityOps {
 
   /** The Lloyd loop itself (see [[simKmeansConverged]] for the
     * contract): first-k seeding, integer argmin assignment, floored
-    * integer means, stop at the exact fixpoint (Σ|Δ| = 0) or maxIter.
+    * integer means, stop at Σ|Δ| ≤ KM_EPS or maxIter.
     * Returns the trained centroids and the executed depth. */
   private def kmTrain(s: SparkSession, pts: DataFrame, k: Int,
       maxIter: Int): (Seq[(Long, Array[Long])], Int) = {
     var cents: Seq[(Long, Array[Long])] = pts.filter(col("vec_id") < k)
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray)).toSeq
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
+    val (it, _) = Loop.converge(maxIter) {
       val stats = kmAssign(s, pts, cents)
         .select(col("cid"), posexplode(col("qe")).as(Seq("pos", "v")))
         .groupBy("cid", "pos")
@@ -431,8 +422,7 @@ object SimilarityOps {
           case None => (j, old) // empty cluster keeps its centroid
         }
       }
-      it += 1
-      converged = delta <= KM_EPS
+      delta <= KM_EPS
     }
     (cents, it)
   }

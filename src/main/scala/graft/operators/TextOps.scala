@@ -130,7 +130,7 @@ object TextOps {
     * backstop. Driver-side data is ≤CAP scalar rows + the 20-row
     * result, the same posture as the CC loop's convergence sums. */
   def textNgramsTop(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     val CAP = 2048
     def exactGlobal: DataFrame = DedupOps.shingleRows(s, d)
       .groupBy("shingle")
@@ -252,7 +252,7 @@ object TextOps {
     * Fully-boilerplate documents stay in the output with n_kept = 0
     * and md5('') — a pipeline must see what it emptied. */
   def textCleanBoilerplate(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     // positional sentence occurrences, materialized once (df build +
     // re-assembly both consume them)
     val sents = documents(s, d)
@@ -327,7 +327,7 @@ object TextOps {
     * 32-hex key shuffles at fixed width with the same distribution
     * (md5 collisions: ~n²/2¹²⁸, absent at any feasible corpus). */
   def textLineDedup(s: SparkSession, d: String): DataFrame = {
-    import DedupOps.TruncOps
+    import Loop.TruncOps
     // r13 shape: every downstream consumer only needs DISTINCT
     // (doc_id, sent_h) grain plus the within-doc occurrence count, so
     // aggregate the exploded sentence stream to that grain FIRST (the

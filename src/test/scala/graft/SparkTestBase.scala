@@ -9,9 +9,12 @@ object SharedSpark {
   lazy val spark: SparkSession =
     GraftSession.build(cpus = 4, logLevel = "ERROR")
   val sf = "/root/testdata/sf0.001"
+  /** The sf0.01 tables, next to [[sf]]. */
+  val sf01: String = new java.io.File(sf).getParent + "/sf0.01"
 }
 
 abstract class SparkTestBase extends AnyFunSuite {
   def spark: SparkSession = SharedSpark.spark
   def sf: String = SharedSpark.sf
+  def sf01: String = SharedSpark.sf01
 }

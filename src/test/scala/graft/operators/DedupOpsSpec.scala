@@ -135,6 +135,23 @@ class DedupOpsSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.checkpointDir")
   }
 
+  test("checkpoint dir switch: a dir that prefixes the current one still gets the checkpoints") {
+    import Loop.TruncOps
+    val base = graft.TempDirs.create("graft-ckpt-switch").toString
+    def landed(dir: String): Boolean =
+      Option(new java.io.File(dir).listFiles()).exists(_.nonEmpty)
+    try {
+      spark.conf.set("spark.graft.checkpointDir", s"$base/ckpt2")
+      spark.range(10).toDF("x").truncEager
+      assert(landed(s"$base/ckpt2"))
+      // `$base/ckpt` is a string prefix of the current `$base/ckpt2/<uuid>`
+      spark.conf.set("spark.graft.checkpointDir", s"$base/ckpt")
+      assert(spark.range(10).toDF("x").truncEager.count() == 10L)
+      assert(landed(s"$base/ckpt"),
+        "checkpoints must move to the newly configured spark.graft.checkpointDir")
+    } finally spark.conf.unset("spark.graft.checkpointDir")
+  }
+
   test("canonical election: one canonical per cluster, and it is the longest member") {
     val rows = DedupOps.dedupCanonical(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("cluster_rep"),
