@@ -100,7 +100,7 @@ object PipelineRunner {
       : (DataFrame, Seq[StepReport]) = {
     val startedAt = System.currentTimeMillis()
     val spark = input.sparkSession
-    spark.conf.set("spark.graft.runId", runId)
+    graft.ObservabilityListener.withRun(spark, runId)(())
     val fs = new Path(workDir).getFileSystem(spark.sessionState.newHadoopConf())
     val notifier: RunReport => Unit =
       if (notify != null) notify else fileNotify(fs, workDir)

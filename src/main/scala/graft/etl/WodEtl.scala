@@ -2,16 +2,27 @@ package graft.etl
 
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import WodRealText.{groups, monthNames, monthNum, sundayBefore}
+
+/** One segment of a session: its 1-based index, its marker token and
+  * the join of the rest ('' for a marker-only segment). */
+private[etl] case class DocSegment(seg_id: Long, segment_key: String, segment_value: String)
+
+/** One session of a document: its 1-based index, token count and text,
+  * its name (the first token, the day marker), its segments, and their
+  * key → value map with duplicate keys resolved last-wins. */
+private[etl] case class DocSession(session_id: Long, n_tokens: Long, session_text: String,
+    session: String, segments: Seq[DocSegment], entries: Map[String, String])
+
 /** The reference pipeline (bdolly/weightlifting-WOD-ETL) re-expressed as
-  * declarative Spark plans.
+  * Spark plans over the synthetic `documents` corpus.
   *
   * Reference semantics covered (file:line refs into /root/reference):
   *  - strip_post_html (handler.py:167): HTML → text + entity decode.
   *  - group_post_content_by_day / group_source_by (transforms.py:115,131):
-  *    partition an ordered sequence at marker-regex matches; content
+  *    partition an ordered sequence at marker matches; content
   *    before the first marker is dropped, last group runs to the end.
   *  - segment_days (transforms.py:176): second-level segmentation inside
   *    each group; a segment's key is its marker element, its value the
@@ -23,20 +34,21 @@ import org.apache.spark.sql.functions._
   *    week at `start - isoweekday(start)` (the Sunday before) and assign
   *    `anchor + session_index` to each session.
   *  - clean_sessions_df_records (transforms.py:289): rename segment keys
-  *    to fixed columns, fill missing with '', null session → 'Rest Day',
-  *    dates normalized to yyyy-MM-dd.
+  *    to fixed columns, fill missing with '', dates normalized to
+  *    yyyy-MM-dd; the session name is the session's day marker.
   *  - idempotency keys (services/idempotency_service.py:30):
   *    sha256("op:identifier").
   *  - save_sessions_to_bucket (handler.py:194): min/max date per group →
   *    weekly partition path.
   *
-  * The reference walks Python lists pairwise on a single machine; here
-  * every step is a window/groupBy plan partitioned by `doc_id`, so the
-  * same pipeline scales linearly across executors — the only shuffles
-  * are one per sessionization level, all on the document key.
+  * Scale shape: sessionize, segment, clean and date run the reference's
+  * pairwise walk (`WodRealText.groups`) over each document's own tokens
+  * in one deterministic UDF, then an `inline` of that document's
+  * sessions. Documents are independent, so these plans have no
+  * shuffle, window, sort or join: they scale by input partitions alone.
   *
   * The `documents` table stands in for the post corpus: each document's
-  * whitespace token stream is the "lines" of a post; `stream|window`
+  * space-separated token stream is the "lines" of a post; `stream|window`
   * tokens are the day markers (weekday lines) and `agg|sort|merge`
   * tokens are the segment markers (`Session|Suggested Warm-Up|^[A-F].$`).
   * A deterministic slug (month-d1-d2-yyyy) is derived per document to
@@ -44,103 +56,72 @@ import org.apache.spark.sql.functions._
   */
 object WodEtl {
 
-  private val sessionMarkers = Seq("stream", "window")
-  private val segmentMarkers = Seq("agg", "sort", "merge")
-  private val monthNames = Seq("january", "february", "march", "april",
-    "may", "june", "july", "august", "september", "october", "november",
-    "december")
+  private val sessionMarkers = Set("stream", "window")
+  private val segmentMarkers = Set("agg", "sort", "merge")
+
+  /** Each document's synthetic week: month name, first day, year. */
+  private val month = element_at(
+    array(monthNames.map(lit): _*), (col("doc_id") % 12 + 1).cast("int"))
+  private val d1 = col("doc_id") % 20 + 1
+  private val year = col("doc_id") % 5 + 2020
 
   /** Deterministic synthetic slug per document (exercises the
     * `month-d1-d2-yyyy` parse of transforms.py:42). */
-  private def withSlug(df: DataFrame): DataFrame = {
-    val month = element_at(
-      array(monthNames.map(lit): _*), (col("doc_id") % 12 + 1).cast("int"))
-    val d1 = col("doc_id") % 20 + 1
-    val d2 = d1 + 6
-    val year = col("doc_id") % 5 + 2020
+  private def withSlug(df: DataFrame): DataFrame =
     df.withColumn("slug",
-      concat_ws("-", month, d1, d2, year, lit("5-day-weightlifting-program")))
-  }
+      concat_ws("-", month, d1, d1 + 6, year, lit("5-day-weightlifting-program")))
 
-  /** Month-name → number and date-range columns parsed back OUT of the
-    * slug via the reference's regex (never from the arithmetic above —
-    * the parse is the operator under test). */
+  /** Date-range columns parsed back OUT of the slug via the reference's
+    * regex (never from the arithmetic above — the parse is the operator
+    * under test). */
   private def withDateRange(df: DataFrame): DataFrame = {
     val pat = "([a-z]+)-(\\d+)-(\\d+)-(\\d{4})"
-    val monthName = regexp_extract(col("slug"), pat, 1)
-    val monthNum = monthNames.zipWithIndex.foldLeft(lit(null).cast("int")) {
-      case (acc, (name, idx)) => when(monthName === name, lit(idx + 1)).otherwise(acc)
-    }
+    val m = monthNum(regexp_extract(col("slug"), pat, 1))
     df.withColumn("start_date",
-        make_date(regexp_extract(col("slug"), pat, 4).cast("int"), monthNum,
+        make_date(regexp_extract(col("slug"), pat, 4).cast("int"), m,
                   regexp_extract(col("slug"), pat, 2).cast("int")))
       .withColumn("end_date",
-        make_date(regexp_extract(col("slug"), pat, 4).cast("int"), monthNum,
+        make_date(regexp_extract(col("slug"), pat, 4).cast("int"), m,
                   regexp_extract(col("slug"), pat, 3).cast("int")))
   }
 
-  /** Token stream: one row per (doc_id, pos, tok), pos is 1-based. */
-  private def tokens(s: SparkSession, d: String): DataFrame =
-    documents(s, d)
-      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos0", "tok")))
-      .withColumn("pos", (col("pos0") + 1).cast("int"))
-      .drop("pos0")
+  /** Documents with their week anchor, the Sunday before the slug's
+    * start date, computed once per document. */
+  private def dated(s: SparkSession, d: String): DataFrame =
+    withDateRange(withSlug(documents(s, d)))
+      .withColumn("anchor", sundayBefore(col("start_date")))
 
-  private val cumWindow =
-    Window.partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  /** One document's sessions: the pairwise walk over its tokens
+    * (`split(_, -1)` keeps empty tokens, as Spark's split does), then
+    * the same walk per session over the segment markers. A document
+    * with one day marker has no sessions, and a session with one
+    * segment marker has no segments (transforms.py:19-30). */
+  private def walk(text: String): Seq[DocSession] =
+    if (text == null) Nil
+    else groups(text.split(" ", -1).toIndexedSeq, sessionMarkers).zipWithIndex.map { case (sess, i) =>
+      val segs = groups(sess, segmentMarkers).zipWithIndex.map { case (g, j) =>
+        DocSegment(j + 1L, g.head, g.tail.mkString(" "))
+      }
+      DocSession(i + 1L, sess.length.toLong, sess.mkString(" "), sess.head, segs,
+        segs.map(g => g.segment_key -> g.segment_value).toMap)
+    }
 
-  /** group_source_by: cumulative count of markers = group id; rows
-    * before the first marker (id 0) are dropped. Docs with exactly ONE
-    * marker yield ZERO groups, replicating the reference's pairwise
-    * index walk (transforms.py:19-30 via 115-128: pairwise of a single
-    * index is empty and the tail-append is guarded), not the "one
-    * session to end-of-doc" a bare cumulative sum would emit. */
-  private def sessionized(s: SparkSession, d: String): DataFrame = {
-    val isMarker = when(col("tok").isin(sessionMarkers: _*), 1).otherwise(0)
-    // Same partition+order spec as cumWindow, whole-partition frame:
-    // both sums evaluate in ONE WindowExec pass (one shuffle, one sort)
-    // instead of adding a second window stage.
-    val totalWindow = Window.partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    tokens(s, d)
-      .withColumn("session_id", sum(isMarker).over(cumWindow))
-      .withColumn("n_markers", sum(isMarker).over(totalWindow))
-      .filter(col("session_id") >= 1 && col("n_markers") >= 2)
-      .drop("n_markers")
-  }
+  private val walkUdf = udf(walk _)
 
-  /** Ordered string re-assembly after a shuffle: sort collected
-    * (pos, tok) structs — deterministic, unlike raw collect_list. */
-  private def orderedJoin(posCol: Column, tokCol: Column): Column =
-    concat_ws(" ",
-      transform(array_sort(collect_list(struct(posCol.as("p"), tokCol.as("t")))),
-        x => x.getField("t")))
+  /** One row per session of each document: the walk over `text`, then
+    * an `inline`. The documents' own columns ride along. */
+  private[etl] def sessions(docs: DataFrame): DataFrame =
+    docs.select(col("*"), inline(walkUdf(col("text"))))
 
-  /** Second-level segmentation inside each session. The reference runs
-    * the same group_source_by walk per session (transforms.py:176-188),
-    * so the single-marker → zero-groups rule applies here too. */
-  private def segmented(s: SparkSession, d: String): DataFrame = {
-    val perSession = Window.partitionBy("doc_id", "session_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val segStartW = Window.partitionBy("doc_id", "session_id", "seg_id")
-    val isSeg = when(col("tok").isin(segmentMarkers: _*), 1).otherwise(0)
-    // whole-partition frame on the same spec as perSession → one pass
-    val perSessionTotal = Window.partitionBy("doc_id", "session_id")
-      .orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    sessionized(s, d)
-      .withColumn("seg_id", sum(isSeg).over(perSession))
-      .withColumn("n_seg_markers", sum(isSeg).over(perSessionTotal))
-      .filter(col("seg_id") >= 1 && col("n_seg_markers") >= 2)
-      .drop("n_seg_markers")
-      .withColumn("seg_start", min("pos").over(segStartW))
-      .groupBy("doc_id", "session_id", "seg_id")
-      .agg(
-        min_by(col("tok"), col("pos")).as("segment_key"),
-        coalesce(orderedJoin(
-          when(col("pos") > col("seg_start"), col("pos")),
-          when(col("pos") > col("seg_start"), col("tok"))), lit("")).as("segment_value"))
+  /** A session row's date: week anchor + session index. */
+  private val recordDate = date_add(col("anchor"), col("session_id").cast("int"))
+
+  /** clean_sessions_df_records' fixed columns of a session row: segment
+    * keys renamed, a missing key → ''. */
+  private val cleanColumns: Seq[Column] = {
+    def entry(key: String): Column = coalesce(element_at(col("entries"), key), lit(""))
+    Seq(col("session"), entry("agg").as("warm_up"), entry("sort").as("segment_a"),
+      entry("merge").as("segment_b"))
   }
 
   // ---- queries ------------------------------------------------------
@@ -167,82 +148,37 @@ object WodEtl {
     * 74-79): decode the &#8211;/&ndash; entities, then parse
     * `Month d1-d2, yyyy` — mirrored here including the entity cleanup. */
   def titleDateExtract(s: SparkSession, d: String): DataFrame = {
-    val month = element_at(
-      array(monthNames.map(lit): _*), (col("doc_id") % 12 + 1).cast("int"))
     val cap = concat(upper(substring(month, 1, 1)), substring(month, 2, 20))
-    val d1 = col("doc_id") % 20 + 1
-    val year = col("doc_id") % 5 + 2020
     val titled = documents(s, d).withColumn("title",
       concat(cap, lit(" "), d1, lit("-"), d1 + 6, lit(", "), year,
         lit(" &#8211; 5 Day Weightlifting Program")))
     val cleaned = regexp_replace(col("title"), "&#8211;|&ndash;", "-")
     val pat = "([a-zA-Z]+)\\s+(\\d+)-(\\d+)[,\\s]+(\\d{4})"
-    val monthName = lower(regexp_extract(cleaned, pat, 1))
-    val monthNum = monthNames.zipWithIndex.foldLeft(lit(null).cast("int")) {
-      case (acc, (name, idx)) => when(monthName === name, lit(idx + 1)).otherwise(acc)
-    }
+    val m = monthNum(regexp_extract(cleaned, pat, 1))
     titled.select(col("doc_id"), col("title"),
-      make_date(regexp_extract(cleaned, pat, 4).cast("int"), monthNum,
+      make_date(regexp_extract(cleaned, pat, 4).cast("int"), m,
         regexp_extract(cleaned, pat, 2).cast("int")).as("start_date"),
-      make_date(regexp_extract(cleaned, pat, 4).cast("int"), monthNum,
+      make_date(regexp_extract(cleaned, pat, 4).cast("int"), m,
         regexp_extract(cleaned, pat, 3).cast("int")).as("end_date"))
   }
 
   /** Marker-based sessionization of the token stream. */
   def sessionizeText(s: SparkSession, d: String): DataFrame =
-    sessionized(s, d)
-      .groupBy("doc_id", "session_id")
-      .agg(count(lit(1)).as("n_tokens"),
-           orderedJoin(col("pos"), col("tok")).as("session_text"))
+    sessions(documents(s, d)).select("doc_id", "session_id", "n_tokens", "session_text")
 
   /** Segment extraction: (doc, session, seg) → key + joined value. */
   def segments(s: SparkSession, d: String): DataFrame =
-    segmented(s, d)
+    sessions(documents(s, d)).select(col("doc_id"), col("session_id"), inline(col("segments")))
 
   /** Week-anchored date assignment (transforms.py:211): anchor =
     * start - isoweekday(start); record date = anchor + session_id. */
-  def dateRecords(s: SparkSession, d: String): DataFrame = {
-    val anchored = withDateRange(withSlug(documents(s, d)))
-      .withColumn("week_anchor",
-        date_add(col("start_date"), -(weekday(col("start_date")) + 1)))
-      .select("doc_id", "week_anchor")
-    sessionizeText(s, d).select("doc_id", "session_id")
-      .join(anchored, "doc_id")
-      .select(col("doc_id"), col("session_id"),
-        date_add(col("week_anchor"), col("session_id").cast("int")).as("record_date"))
-  }
+  def dateRecords(s: SparkSession, d: String): DataFrame =
+    sessions(dated(s, d)).select(col("doc_id"), col("session_id"), recordDate.as("record_date"))
 
   /** clean_sessions_df_records: last-wins key pivot into fixed columns,
     * missing → '', session name from the day-marker token. */
-  def cleanRecords(s: SparkSession, d: String): DataFrame = {
-    val lastWins = Window.partitionBy("doc_id", "session_id", "segment_key")
-      .orderBy(col("seg_id").desc)
-    val pivoted = segmented(s, d)
-      .withColumn("rn", row_number().over(lastWins))
-      .filter(col("rn") === 1)
-      .groupBy("doc_id", "session_id")
-      .agg(
-        coalesce(max(when(col("segment_key") === "agg", col("segment_value"))), lit("")).as("warm_up"),
-        coalesce(max(when(col("segment_key") === "sort", col("segment_value"))), lit("")).as("segment_a"),
-        coalesce(max(when(col("segment_key") === "merge", col("segment_value"))), lit("")).as("segment_b"))
-    // The LEFT join below makes the optimizer infer isnotnull(doc_id)
-    // on the `pivoted` side only, pushed all the way into its scan —
-    // which breaks canonical equality between this side's exchange and
-    // pivoted's (same scan→explode→shuffle prefix otherwise), so the
-    // whole sessionize pipeline ran TWICE. Adding the same (vacuously
-    // true — doc_id is the key) filter here re-enables AQE exchange
-    // reuse: one scan+explode+shuffle serves both join sides (r20 opt
-    // round, guide §2.4; plan evidence in plans/r20/etl_clean_records_*).
-    val names = sessionized(s, d).filter(col("doc_id").isNotNull)
-      .groupBy("doc_id", "session_id")
-      .agg(min_by(col("tok"), col("pos")).as("session"))
-    names.join(pivoted, Seq("doc_id", "session_id"), "left")
-      .select(col("doc_id"), col("session_id"),
-        coalesce(col("session"), lit("Rest Day")).as("session"),
-        coalesce(col("warm_up"), lit("")).as("warm_up"),
-        coalesce(col("segment_a"), lit("")).as("segment_a"),
-        coalesce(col("segment_b"), lit("")).as("segment_b"))
-  }
+  def cleanRecords(s: SparkSession, d: String): DataFrame =
+    sessions(documents(s, d)).select(col("doc_id") +: col("session_id") +: cleanColumns: _*)
 
   /** Idempotency keys (idempotency_service.py:30 + handler.py:127):
     * sha256("dump_post_to_bucket:" + raw bucket path). */
@@ -282,30 +218,25 @@ object WodEtl {
       .limit(50)
 
   /** save_sessions_to_bucket path derivation (handler.py:225-229):
-    * weekly partition path from min/max record date per document. */
+    * weekly partition path from min/max record date per document. The
+    * session indices run 1..n, so those are anchor + 1 and anchor + n,
+    * and n is the last session's index: the plan inlines that session
+    * only, and a document with no sessions has no row. */
   def weeklyRollup(s: SparkSession, d: String): DataFrame =
-    dateRecords(s, d)
-      .groupBy("doc_id")
-      .agg(min("record_date").as("week_start"), max("record_date").as("week_end"),
-           count(lit(1)).as("n_sessions"))
-      .select(col("doc_id"), col("week_start"), col("week_end"), col("n_sessions"),
+    dated(s, d)
+      .select(col("doc_id"), col("anchor"), inline(slice(walkUdf(col("text")), -1, 1)))
+      .select(col("doc_id"), date_add(col("anchor"), 1).as("week_start"),
+        recordDate.as("week_end"), col("session_id").as("n_sessions"))
+      .withColumn("bucket_path",
         concat(lit("weekly/"), date_format(col("week_start"), "yyyy-MM-dd"),
           lit("__"), date_format(col("week_end"), "yyyy-MM-dd"),
-          lit("--5-day-weightlifting-program.json")).as("bucket_path"))
+          lit("--5-day-weightlifting-program.json")))
 
-  /** Full chain 3→7 as one declarative plan: sessionize → segment →
-    * pivot/clean → dated records. The flagship `entry`. */
-  def pipelineE2E(s: SparkSession, d: String): DataFrame = {
-    val anchored = withDateRange(withSlug(documents(s, d)))
-      .withColumn("week_anchor",
-        date_add(col("start_date"), -(weekday(col("start_date")) + 1)))
-      .select("doc_id", "week_anchor")
-    cleanRecords(s, d)
-      .join(anchored, "doc_id")
-      .select(col("doc_id"),
-        date_format(date_add(col("week_anchor"), col("session_id").cast("int")), "yyyy-MM-dd").as("date"),
-        col("session"), col("warm_up"), col("segment_a"), col("segment_b"))
-  }
+  /** Full chain 3→7 as one plan: sessionize → segment → pivot/clean →
+    * dated records. The flagship `entry`. */
+  def pipelineE2E(s: SparkSession, d: String): DataFrame =
+    sessions(dated(s, d))
+      .select(col("doc_id") +: date_format(recordDate, "yyyy-MM-dd").as("date") +: cleanColumns: _*)
 
   // ---- oracle -------------------------------------------------------
 

@@ -54,9 +54,15 @@ object WodRealText {
   private[etl] val dayRegex =
     "(?i)(Monday)|(Tuesday)|(Wednesday)|(Thursday)|(Friday)|(Saturday)|(Sunday)"
   private[etl] val segRegex = "(?i)(Session)|(Suggested Warm-Up)|^[A-F].$"
-  private val monthNames = Seq("january", "february", "march", "april",
+  private[etl] val monthNames = Seq("january", "february", "march", "april",
     "may", "june", "july", "august", "september", "october", "november",
     "december")
+
+  /** Month name (any case) → 1..12, null for anything else. */
+  private[etl] def monthNum(name: Column): Column =
+    monthNames.zipWithIndex.foldLeft(lit(null).cast("int")) {
+      case (acc, (n, i)) => when(lower(name) === n, lit(i + 1)).otherwise(acc)
+    }
 
   /** get_text()-faithful strip: tags removed with NO separator, then
     * the WordPress character-reference set decoded (numeric em-dash /
@@ -93,10 +99,6 @@ object WodRealText {
     * month's last_day and applied via date_add to the (always-valid)
     * first of month. */
   private[etl] def startDate(slug: Column, title: Column, postDate: Column): Column = {
-    def monthNum(name: Column): Column =
-      monthNames.zipWithIndex.foldLeft(lit(null).cast("int")) {
-        case (acc, (n, i)) => when(lower(name) === n, lit(i + 1)).otherwise(acc)
-      }
     def fromPat(text: Column, pat: String): Column = {
       val m = monthNum(regexp_extract(text, pat, 1))
       // try_cast: a text with no date extracts '' (and the ANSI cast
@@ -117,24 +119,26 @@ object WodRealText {
   private val dayPattern = Pattern.compile(dayRegex)
   private val segPattern = Pattern.compile(segRegex)
 
-  /** The reference's pairwise walk (transforms.py:19-30): each line that
-    * matches `marker` (find(), as rlike) opens a group running to the
-    * next marker line or the end; fewer than two markers → no groups. */
-  private def groups(lines: IndexedSeq[String], marker: Pattern): IndexedSeq[IndexedSeq[String]] = {
-    val starts = lines.indices.filter(i => marker.matcher(lines(i)).find())
+  /** The reference's pairwise walk (transforms.py:19-30): each line
+    * that passes `marker` opens a group running to the next marker line
+    * or the end; content before the first marker is dropped, and fewer
+    * than two markers → no groups. */
+  private[etl] def groups(lines: IndexedSeq[String], marker: String => Boolean): IndexedSeq[IndexedSeq[String]] = {
+    val starts = lines.indices.filter(i => marker(lines(i)))
     if (starts.length < 2) IndexedSeq.empty
     else starts.zip(starts.tail :+ lines.length).map { case (a, b) => lines.slice(a, b) }
   }
 
   /** One post's stripped text → its session records: weekday groups,
-    * then segment groups per session. `split(_, -1)` keeps trailing
+    * then segment groups per session, a marker line being one the
+    * pattern finds (as rlike). `split(_, -1)` keeps trailing
     * empty lines, as Spark's split does. Duplicate keys resolve
     * last-wins and each key sits at its LAST position; a segment keyed
     * `session` replaces the session name. */
   private[etl] def walk(text: String): Seq[PostSession] =
     if (text == null) Nil
-    else groups(text.split("\n", -1).toIndexedSeq, dayPattern).zipWithIndex.map { case (day, i) =>
-      val segs = groups(day, segPattern)
+    else groups(text.split("\n", -1).toIndexedSeq, dayPattern.matcher(_).find()).zipWithIndex.map { case (day, i) =>
+      val segs = groups(day, segPattern.matcher(_).find())
       val entries =
         if (segs.isEmpty) ListMap("session" -> "rest day")
         else (("session" -> segs.head.head) +: segs.tail.map(g => g.head -> g.tail.mkString(" ")))

@@ -1,18 +1,26 @@
 package graft.etl
 
+import scala.math.Ordering.Implicits.seqOrdering
+
 import graft.SparkTestBase
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Semantics of the re-expressed reference pipeline, checked against an
   * independent in-test reimplementation of the reference's list-walking
   * algorithms (transforms.py:115,176) on raw document text. */
-class WodEtlSpec extends SparkTestBase {
+class WodEtlSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private val sessionMarkers = Set("stream", "window")
   private val segmentMarkers = Set("agg", "sort", "merge")
 
   /** Reference group_source_by re-implemented literally (pairwise index
-    * walk) for cross-checking the window-function plan. */
+    * walk) for cross-checking the production walk. */
   private def groupSourceBy(markers: Set[String], toks: Vector[String]): Vector[Vector[String]] = {
     val idx = toks.zipWithIndex.collect { case (t, i) if markers(t) => i }
     // True pairwise walk (transforms.py:19-30): a single marker yields
@@ -23,10 +31,22 @@ class WodEtlSpec extends SparkTestBase {
       .map { case (a, b) => toks.slice(a, b) }.toVector
   }
 
-  private lazy val rawDocs: Map[Long, Vector[String]] =
-    spark.read.parquet(s"$sf/documents.parquet")
+  private def docs(dir: String): Map[Long, Vector[String]] =
+    spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1).split(" ").toVector).toMap
+      .map(r => r.getLong(0) -> r.getString(1).split(" ", -1).toVector).toMap
+
+  private lazy val rawDocs: Map[Long, Vector[String]] = docs(sf)
+
+  /** Reference records per document: (session index, name, warm_up,
+    * segment_a, segment_b) — the pairwise walks, then the last-wins
+    * pivot of the segments (a dict built in order), missing → ''. */
+  private def referenceRecords(toks: Vector[String]): Vector[(Long, String, String, String, String)] =
+    groupSourceBy(sessionMarkers, toks).zipWithIndex.map { case (sess, i) =>
+      val pivot = groupSourceBy(segmentMarkers, sess).map(g => g.head -> g.tail.mkString(" ")).toMap
+      def v(k: String) = pivot.getOrElse(k, "")
+      (i + 1L, sess.head, v("agg"), v("sort"), v("merge"))
+    }
 
   test("sessionize matches the reference's pairwise grouping on every doc") {
     val got = WodEtl.sessionizeText(spark, sf)
@@ -62,6 +82,46 @@ class WodEtlSpec extends SparkTestBase {
         dayofweek(date_sub(col("record_date"), col("session_id").cast("int"))))
       .filter(col("anchor_dow") =!= 1) // Spark dayofweek: 1 = Sunday
     assert(bad.count() == 0)
+  }
+
+  test("clean and e2e records equal the reference walk, pivot and Sunday anchor row for row") {
+    for (dir <- Seq(sf, sf01)) {
+      // the start date comes from the slug parse, which its own oracle
+      // checks; the anchor is the Sunday before it (start - isoweekday)
+      val anchor = WodEtl.dateExtract(spark, dir).collect().map { r =>
+        val start = r.getAs[java.sql.Date]("start_date").toLocalDate
+        r.getAs[Long]("doc_id") -> start.minusDays(start.getDayOfWeek.getValue.toLong)
+      }.toMap
+      val expected = docs(dir).toSeq.flatMap { case (id, toks) =>
+        referenceRecords(toks).map(r => (id, r._1, r._2, r._3, r._4, r._5))
+      }
+      def rows(df: DataFrame, cols: String*): Seq[Seq[String]] =
+        df.collect().map(r => cols.map(c => r.getAs[Any](c).toString)).toSeq.sorted
+      assert(rows(WodEtl.cleanRecords(spark, dir),
+          "doc_id", "session_id", "session", "warm_up", "segment_a", "segment_b") ==
+        expected.map { case (id, i, n, w, a, b) => Seq(id.toString, i.toString, n, w, a, b) }.sorted, dir)
+      assert(rows(WodEtl.pipelineE2E(spark, dir),
+          "doc_id", "date", "session", "warm_up", "segment_a", "segment_b") ==
+        expected.map { case (id, i, n, w, a, b) =>
+          Seq(id.toString, anchor(id).plusDays(i).toString, n, w, a, b)
+        }.sorted, dir)
+    }
+  }
+
+  test("the sessionizing lanes plan no exchange, window, sort or join") {
+    Seq[(String, (SparkSession, String) => DataFrame)](
+      "sessionizeText" -> WodEtl.sessionizeText, "segments" -> WodEtl.segments,
+      "dateRecords" -> WodEtl.dateRecords, "cleanRecords" -> WodEtl.cleanRecords,
+      "weeklyRollup" -> WodEtl.weeklyRollup, "pipelineE2E" -> WodEtl.pipelineE2E
+    ).foreach { case (name, lane) =>
+      val df = lane(spark, sf)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val blocking = collect(plan) {
+        case p @ (_: Exchange | _: WindowExec | _: SortExec | _: BaseJoinExec) => p
+      }
+      assert(blocking.isEmpty, s"$name must not shuffle, sort or join:\n$plan")
+    }
   }
 
   test("idempotency keys are sha256(op:path), reference formula") {
