@@ -30,11 +30,7 @@ object Bench {
     // anonymous NumberFormatException after minutes of warm-up
     // (min-of-THREE default: single-run sf0.1 numbers on this VM swing
     // up to ~2.4× with machine load)
-    val passes = math.max(2, sys.env.get("SPARK_GRAFT_BENCH_PASSES") match {
-      case None => 3
-      case Some(v) => scala.util.Try(v.trim.toInt).getOrElse(
-        sys.error(s"SPARK_GRAFT_BENCH_PASSES must be an integer, got '$v'"))
-    })
+    val passes = GraftSession.positiveInt(sys.env, "SPARK_GRAFT_BENCH_PASSES", 3)
     val spark = GraftSession.build(cpus)
     // per-query JSON observability lines on stderr (stdout carries the
     // bench protocol line; see ObservabilityListener) AND into a .jsonl
@@ -48,7 +44,7 @@ object Bench {
       obsWriter.synchronized { obsWriter.println(line) }
     })
     // one correlation id threads EVERY obs line of this bench run —
-    // warm-up, timed passes, layout builds (withRun's conf stays set
+    // warm-up, timed passes, twin passes (withRun's conf stays set
     // for the session; see its non-unset rationale)
     val runId = ObservabilityListener.newRunId()
     ObservabilityListener.withRun(spark, runId)(())
@@ -116,34 +112,26 @@ object Bench {
     // a third pass measurably tightens the min, and the artifact
     // carries loadavg (below) so residual swings are attributable.
     val allPasses = (1 to passes).map(_ => timedPass())
-    // Bucketed-layout variants of the big joins: one untimed save, then
-    // the same min-of-N protocol — the bench line carries the
-    // shuffle-free join time next to its plain-scan twin. Excluded from
-    // "total" (they have no oracle twin in the baseline's query set).
-    // tag the untimed layout builds so their shuffle volume is not
-    // attributed to the last timed query (withTag never unsets)
-    ObservabilityListener.withTag(spark, "setup:layout") {
-      operators.BucketedQueries.ensureBucketed(spark, sfDir)
-      operators.PartitionedLayout.ensurePartitioned(spark, sfDir)
-    }
-    def bucketedPass(): Map[String, Double] =
-      (operators.BucketedQueries.all ++ operators.PartitionedLayout.all)
-        .map { case (name, fn) => timedQuery(name, fn, sfDir) }
-    val allBucketed = (1 to passes).map(_ => bucketedPass())
+    // The plain-scan twins of the layout-primary lanes, same min-of-N
+    // protocol: the bench line carries each promoted layout's time next
+    // to its plain-scan twin. Excluded from "total" (they have no
+    // oracle twin in the baseline's query set).
+    def twinPass(): Map[String, Double] =
+      SparkEntry.layoutTwins.map { case (name, fn) => timedQuery(name, fn, sfDir) }
+    val allTwins = (1 to passes).map(_ => twinPass())
     // a sentinel in ANY pass poisons the key: min(-1, t) = -1
     def minOf(ps: Seq[Map[String, Double]]): Map[String, Double] =
       ps.reduce((a, b) => a.map { case (k, v) => k -> math.min(v, b(k)) })
     val results = minOf(allPasses)
-    val bucketed = minOf(allBucketed)
-    val qs = (results ++ bucketed).toSeq.sortBy(_._1)
+    val twins = minOf(allTwins)
+    val qs = (results ++ twins).toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + r4(v) }
       .mkString("{", ",", "}")
     val ok = results.filter(_._2 >= 0)
-    // count failures across BOTH lanes: a failed bucketed query is a
-    // -1.0 in the map and must not leave the headline claiming 0
-    // failures (totals already exclude bucketed; only the counter
-    // widens)
-    val nFailed = (results ++ bucketed).count(_._2 < 0)
+    // count failures across BOTH lanes: a failed twin is a -1.0 in the
+    // map and must not leave the headline claiming 0 failures (totals
+    // already exclude the twins; only the counter widens)
+    val nFailed = (results ++ twins).count(_._2 < 0)
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
     val streamTotal = ok.collect { case (k, v) if streamingLane(k) => v }.sum
     // machine-load marker: 1-min loadavg at measurement end, so an

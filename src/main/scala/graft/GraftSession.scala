@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one builder for a local graft session. Every main (Bench, QTime,
-  * Verify, PlanDump, Preflight, ScaleGen, SkewBench) and the test base
+  * Verify, PlanDump, Preflight, ScaleGen) and the test base
   * build from here, so the plan the oracle gate checks is the plan the
   * bench times: Catalyst picks the physical plan from exactly these
   * confs.
@@ -11,17 +11,20 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   val DefaultCpus = 4
 
-  /** `SPARK_GRAFT_CPUS` as a positive Int (default 4), or a named error
-    * — never a raw NumberFormatException, and never a value like `*`
-    * that is a valid master but not a number for the artifacts. */
-  def cpusFrom(env: Map[String, String]): Int = env.get("SPARK_GRAFT_CPUS") match {
-    case None => DefaultCpus
-    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
-  }
+  /** The integer env var `key` as a positive Int (`default` when
+    * unset), or an error that names the key — never a raw
+    * NumberFormatException, and never a value like `*` that is a valid
+    * master but not a number for the artifacts. Mains parse every such
+    * var (`SPARK_GRAFT_CPUS`, `_BENCH_PASSES`, `_QTIME_PASSES`) before
+    * they build the session, so a bad value fails before any work. */
+  def positiveInt(env: Map[String, String], key: String, default: Int): Int =
+    env.get(key) match {
+      case None => default
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(s"$key must be a positive integer, got '$v'"))
+    }
 
-  def cpus: Int = cpusFrom(sys.env)
+  def cpus: Int = positiveInt(sys.env, "SPARK_GRAFT_CPUS", DefaultCpus)
 
   def build(cpus: Int = cpus, logLevel: String = "WARN"): SparkSession = {
     val s = SparkSession.builder()
@@ -57,9 +60,14 @@ object GraftSession {
       // ~15-20% on q3/q5 at sf3. SMJ remains for non-equi/huge-both-
       // sides cases; AQE skew splitting applies to SHJ the same way.
       .config("spark.sql.join.preferSortMergeJoin", "false")
-      // set at construction (not lazily in ensureBucketed) so plan
-      // shapes are identical whether or not a bucketed query ran first
-      // in this session — see BucketedQueries.ensureBucketed
+      // Since Spark 3.0 a bucketed scan does NOT report its sortBy
+      // order unless this flag makes planning list the files (one file
+      // per bucket required, which BucketedQueries.bucketedTable's
+      // repartition-before-write guarantees). Without it
+      // EnsureRequirements re-sorts BOTH sides of every merge join above
+      // the sorted buckets (the r12 artifact's bucketed q3 paid 9.6 s vs
+      // 1.9 s plain at sf10 for exactly this). Set here, once, so every
+      // session plans the same shapes whichever lane runs first.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
       .config("spark.ui.enabled", "false")
       // legacy layouts ship events.ts as parquet TIMESTAMP(NANOS): read

@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   *
   * Usage: PlanDump <sfDir> <outDir> <suffix> <query> [query...]
   * writes <outDir>/<query>_<suffix>.txt for each; resolves the same
-  * names as QTime (declared queries and layout variants).
+  * names as QTime (declared queries and the layout-primary lanes'
+  * `_plain` twins).
   */
 object PlanDump {
 

@@ -3,26 +3,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev tool: time individual queries by name (warm-up run + min of two
   * timed passes, mirroring Bench's steady-state protocol). Resolves
-  * declared queries AND the bucketed-layout variants (q3_bucketed ...),
-  * so scale runs can time both physical layouts of the same plan.
+  * declared queries AND the plain-scan twins of the layout-primary
+  * lanes (`SparkEntry.layoutTwins`: q5_plain, q7_plain ...), so scale
+  * runs can time both physical layouts of the same plan.
   *
   * Usage: runMain graft.QTime <sfDir> <query> [<query> ...]
   * Warm-up dir defaults to Bench's sf0.001 convention; override with
   * SPARK_GRAFT_WARMUP_DIR (skipped when absent or equal to sfDir).
+  * SPARK_GRAFT_QTIME_PASSES sets the timed passes (min-of-N, default 2:
+  * single runs on this VM swing 1.5-2× on 1-4 s queries; scale
+  * artifacts use 3).
   * SPARK_GRAFT_QTIME_OUT=<file> additionally writes one JSON object
   * {"sf":…, "queries":{name:{sec,rows},…}} — the machine-readable
   * artifact for scale benches. For the executed plan of a query, use
   * PlanDump.
   */
 object QTime {
-  /** Declared queries plus the layout variants and their plain twins. */
+  /** Declared queries plus the plain twins of the layout-primary lanes. */
   def registry: Map[String, (SparkSession, String) => DataFrame] =
-    SparkEntry.queries ++ operators.BucketedQueries.all ++ operators.PartitionedLayout.all
+    SparkEntry.queries ++ SparkEntry.layoutTwins
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
     val cpus = GraftSession.cpus
+    val passes = GraftSession.positiveInt(sys.env, "SPARK_GRAFT_QTIME_PASSES", 2)
     val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     val spark = GraftSession.build(cpus)
     val out = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Long)]
@@ -49,9 +54,6 @@ object QTime {
         cnt = fn(spark, sfDir).collect().length.toLong
         (System.nanoTime() - t0) / 1e9
       }
-      // min-of-N (SPARK_GRAFT_QTIME_PASSES, default 2): single runs on
-      // this VM swing 1.5-2× on 1-4 s queries; scale artifacts use 3
-      val passes = sys.env.getOrElse("SPARK_GRAFT_QTIME_PASSES", "2").toInt
       val ts = (1 to passes).map(_ => timed())
       out(n) = (ts.min, cnt)
       val detail = ts.zipWithIndex.map { case (t, i) => f"p${i + 1}=$t%.2f" }.mkString(" ")

@@ -9,13 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private def modules = Seq(
-    operators.CoreQueries.queries -> operators.CoreQueries.oracle
-  ) ++ extraModules
-
-  /** Filled in as further modules land (etl / dedup / text / sim). */
-  private def extraModules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+  private def modules =
     Seq(
+      operators.CoreQueries.queries -> operators.CoreQueries.oracle,
       etl.WodEtl.queries -> etl.WodEtl.oracle,
       operators.ExtendedQueries.queries -> operators.ExtendedQueries.oracle,
       operators.DedupOps.queries -> operators.DedupOps.oracle,
@@ -45,8 +41,7 @@ object SparkEntry {
     * 2.1–3.2 s vs 4.6–9.2 s at sf10 across r14/r15 windows. The win
     * is structural, and explains why q18 promotes where q7 was
     * REVERTED (r14: bucketed q7 116 s steady vs plain 5.9–8.8 s at
-    * sf10, so q7's raw-scan plan stays primary and q7_bucketed stays a
-    * measured layout experiment): q18's dominant cost is the
+    * sf10): q18's dominant cost is the
     * order-grain quantity pre-aggregate — a full fact-stream exchange
     * on the plain layout — and the bucketed scan deletes exactly that
     * exchange while the rest of the plan (the ~1% qualifying set's
@@ -96,6 +91,19 @@ object SparkEntry {
       // land at ~1.2×/~1.8×.
       "text_logprob" -> (operators.BucketedQueries.textLogprobBucketed _),
       "text_bigram_logprob" -> (operators.BucketedQueries.textBigramLogprobBucketed _))
+
+  /** The plain-scan reference twin of each layout-primary lane: the
+    * lane's own plan over the raw parquet tables. Bench times them
+    * outside its total and QTime/PlanDump resolve them, so every
+    * promotion above stays re-measurable in the same window. */
+  def layoutTwins: Map[String, (SparkSession, String) => DataFrame] =
+    Map(
+      "q18_plain" -> (operators.OlapQueries.q18LargeOrders _),
+      "q5_plain" -> (operators.CoreQueries.q5MultiJoin _),
+      "q_skyline_plain" -> (operators.OlapQueries.qSkyline _),
+      "q7_plain" -> (operators.OlapQueries.q7Volume _),
+      "text_logprob_plain" -> (operators.TextOps.textLogprob _),
+      "text_bigram_logprob_plain" -> (operators.TextOps.textBigramLogprob _))
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

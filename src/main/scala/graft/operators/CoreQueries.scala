@@ -79,17 +79,10 @@ object CoreQueries {
       )
 
   /** TPC-H Q3 shape: selective dim filters, 3-way join, agg, top-k. */
-  def q3JoinAgg(s: SparkSession, d: String): DataFrame =
-    q3From(customer(s, d), orders(s, d), lineitem(s, d))
-
-  /** Plan body parameterized over the physical fact sources, so the
-    * bucketed-layout variant (operators.BucketedQueries) shares one
-    * definition with the plain parquet scan. */
-  private[operators] def q3From(customerT: DataFrame, ordersT: DataFrame,
-                                lineitemT: DataFrame): DataFrame = {
-    val cust = customerT.filter(col("c_mktsegment") === "BUILDING")
-    val ord = ordersT.filter(col("o_orderdate") < lit("1998-03-15").cast("timestamp"))
-    val li = lineitemT.filter(col("l_shipdate") > lit("1995-03-15").cast("timestamp"))
+  def q3JoinAgg(s: SparkSession, d: String): DataFrame = {
+    val cust = customer(s, d).filter(col("c_mktsegment") === "BUILDING")
+    val ord = orders(s, d).filter(col("o_orderdate") < lit("1998-03-15").cast("timestamp"))
+    val li = lineitem(s, d).filter(col("l_shipdate") > lit("1995-03-15").cast("timestamp"))
     // Selective side FIRST: orders⋈BUILDING-customers shrinks orders
     // ~5× before the fact join, so lineitem crosses the wire ONCE and
     // only 1/5 of its joined rows reach the aggregate. The aggregate
@@ -99,13 +92,10 @@ object CoreQueries {
     // superlinear term at sf3). orders/customer are fact-scale at
     // 100 TB — no forced broadcast: AQE broadcasts the pruned oc side
     // when it fits (then lineitem never exchanges at all); past the
-    // threshold both sides shuffle on the order key — and on the
-    // bucketed layout the lineitem side of that SMJ reads
-    // pre-partitioned, pre-sorted buckets, zero exchange.
+    // threshold both sides shuffle on the order key.
     // (A lineitem pre-aggregate before the join was measured WORSE at
     // sf3 — groupBy on the ~1:4 l_orderkey key gets almost no map-side
-    // combine, and on the bucketed layout it serializes the scan to
-    // bucket-count-way parallelism before the join can prune.)
+    // combine.)
     val oc = ord.join(cust, ord("o_custkey") === cust("c_custkey"))
       .select(ord("o_orderkey"), ord("o_orderdate"))
     // Revenue as exact scaled longs aggregated to ORDER grain BEFORE
@@ -494,11 +484,7 @@ object CoreQueries {
   /** TPC-H Q21 shape: one EXISTS and one NOT EXISTS against the same
     * table — suppliers with a late line on a multi-supplier order where
     * no other supplier was late. Expressed as semi/anti joins. */
-  def q21MultiExists(s: SparkSession, d: String): DataFrame =
-    q21From(lineitem(s, d), clusteredByOrder = false)
-
-  private[operators] def q21From(lineitemT: DataFrame,
-      clusteredByOrder: Boolean = true): DataFrame = {
+  def q21MultiExists(s: SparkSession, d: String): DataFrame = {
     // The EXISTS/NOT-EXISTS pair collapses to per-order arithmetic: a
     // late supplier qualifies iff its order has >1 distinct suppliers
     // (someone else to blame it on) and exactly ONE distinct LATE
@@ -512,15 +498,11 @@ object CoreQueries {
     // shrank anything — it shuffled near-line-grain pairs on (ok, sk)
     // and then the pairs AGAIN on ok; clustering once on ok halves the
     // shuffled volume (measured: the pair-dedup exchange was the
-    // remaining 2.47× sf1 gap vs the oracle engine). A bucketed-on-ok
-    // table already IS hash(ok)-clustered — callers pass
-    // clusteredByOrder=true and the whole query runs exchange-free up
-    // to the final supplier-grain rollup.
+    // remaining 2.47× sf1 gap vs the oracle engine).
     val isLate = col("l_shipdate") > lit("1999-01-01").cast("timestamp")
-    val proj = lineitemT.select(col("l_orderkey").as("ok"),
+    val pairs = lineitem(s, d).select(col("l_orderkey").as("ok"),
       col("l_suppkey").as("sk"), when(isLate, 1).otherwise(0).as("late"))
-    val clustered = if (clusteredByOrder) proj else proj.repartition(col("ok"))
-    val pairs = clustered
+      .repartition(col("ok"))
       .groupBy(col("ok"), col("sk"))
       .agg(max(col("late")).as("has_late"))
     pairs.groupBy("ok")

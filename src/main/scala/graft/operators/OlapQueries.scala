@@ -25,15 +25,11 @@ object OlapQueries {
 
   /** TPC-H Q6 shape: pure scan-filter-aggregate, no join. The whole
     * query should compile to one WholeStageCodegen over a parquet scan
-    * with all three predicates pushed. Body shared with the
-    * partition-pruned layout twin (operators.PartitionedLayout). */
+    * with all three predicates pushed. */
   def q6Forecast(s: SparkSession, d: String): DataFrame =
-    q6From(lineitem(s, d))
-
-  private[operators] def q6From(lineitemT: DataFrame): DataFrame =
     // global scalar money: two-level exact sum (Money.scala) — long e4
     // per orderkey-hash bucket, DECIMAL across the 1024 subtotals
-    lineitemT
+    lineitem(s, d)
       .filter(
         col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
         col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
@@ -107,38 +103,14 @@ object OlapQueries {
     // AQE converts the slim customer side from measured post-shuffle
     // sizes at bench scale and keeps the shuffle join when it outgrows
     // the threshold on a cluster — estimate-proof either way.
-    q7From(s, d, lineitem(s, d), orders(s, d), ordersBucketed = false)
-  }
-
-  /** Plan body shared by q7_volume (plain layout: orders⋈customer
-    * joined first so the line-grain stream crosses the wire once) and
-    * q7_bucketed (orderkey-bucketed lineitem AND orders: the fact⋈fact
-    * join is exchange-free on the co-located scans, so lineitem joins
-    * orders DIRECTLY and customer attaches after — AQE converts the
-    * slim customer side to broadcast at bench scale; at cluster scale
-    * it rides a shuffle join on o_custkey of the 2-int projection). */
-  private[operators] def q7From(s: SparkSession, d: String,
-                                li: DataFrame, o: DataFrame,
-                                ordersBucketed: Boolean): DataFrame = {
-    val l = q7Line(li)
     val cust = customer(s, d).select("c_custkey", "c_nationkey")
     val sup = supplier(s, d).select("s_suppkey", "s_nationkey")
-    val withOrders =
-      if (ordersBucketed) {
-        // co-located merge join first, customer after
-        l.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-          .join(o.select("o_orderkey", "o_custkey").hint("merge"),
-            col("l_orderkey") === col("o_orderkey"))
-          .join(cust, col("o_custkey") === col("c_custkey"))
-      } else {
-        // orders⋈customer first on slim columns (one line-grain crossing)
-        val oc = o.select("o_orderkey", "o_custkey")
-          .join(cust, col("o_custkey") === col("c_custkey"))
-          .select(col("o_orderkey"), col("c_nationkey"))
-        l.join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-          .join(oc, col("l_orderkey") === col("o_orderkey"))
-      }
-    q7Tail(s, d, withOrders)
+    val oc = orders(s, d).select("o_orderkey", "o_custkey")
+      .join(cust, col("o_custkey") === col("c_custkey"))
+      .select(col("o_orderkey"), col("c_nationkey"))
+    q7Tail(s, d, q7Line(lineitem(s, d))
+      .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
+      .join(oc, col("l_orderkey") === col("o_orderkey")))
   }
 
   /** q7 over a PRE-JOINED (o_orderkey, c_nationkey) table — the
@@ -402,9 +374,9 @@ object OlapQueries {
     * (orderkey, salt) — a hot orderkey's rows spread over S reducers
     * instead of one straggler. The oracle is the PLAIN join: identical
     * results is the contract, the same proof obligation as
-    * q_salted_agg. SkewBench measures the win on a deliberately skewed
-    * table (2.3× over naive at 90%-hot); here the declared query
-    * proves the rewrite is semantics-preserving.
+    * q_salted_agg. SKEWBENCH.json records the win measured on a
+    * deliberately skewed table (2.3× over naive at 90%-hot); here the
+    * declared query proves the rewrite is semantics-preserving.
     *
     * The replicated join is still built lean (r15 — the sf10 sweep
     * caught the original shipping 2×2.4 GB exchanges into a sort-merge
@@ -530,9 +502,9 @@ object OlapQueries {
     qSkylineFrom(s, d, lineitem(s, d))
   }
 
-  /** Plan body shared by q_skyline (plain layout) and
-    * q_skyline_bucketed (suppkey-bucketed lineitem — the scan itself
-    * reports hashpartitioning(suppkey), zero exchange).
+  /** Plan body shared by q_skyline_plain (plain layout) and q_skyline
+    * (suppkey-bucketed lineitem — the scan itself reports
+    * hashpartitioning(suppkey), zero exchange).
     *
     * The supplier-metric build runs as TWO separate fact aggregates
     * joined at supplier grain (r13 final form — this round first tried
@@ -649,17 +621,8 @@ object OlapQueries {
     * exact totals floor-rounded at 1e-6 (engine-portable: each total is
     * one nearest-double rounding of the same rational in both engines,
     * then one IEEE division). */
-  def q8MarketShare(s: SparkSession, d: String): DataFrame =
-    q8From(s, d, lineitem(s, d))
-
-  /** Plan body parameterized over the lineitem source, so the
-    * orderkey-bucketed twin (q8_bucketed) shares one definition: on the
-    * bucketed scan the order-grain pre-aggregate inherits
-    * hashpartitioning(l_orderkey) and plans ZERO exchange — the same
-    * dominant-exchange deletion that made q18 layout-primary. */
-  private[operators] def q8From(s: SparkSession, d: String,
-                                lineitemT: DataFrame): DataFrame = {
-    val l = lineitemT.select(col("l_orderkey"), col("l_suppkey"),
+  def q8MarketShare(s: SparkSession, d: String): DataFrame = {
+    val l = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"),
       Money.revE4(col("l_extendedprice"), col("l_discount")).as("r"))
     val sup = supplier(s, d).select("s_suppkey", "s_nationkey")
     val supN = nation(s, d).select(

@@ -189,10 +189,12 @@ object StatsIndex {
     * indexed key (range-partitioned on o_custkey — the lakehouse
     * layout a stats index earns its keep on: a point probe admits ~1
     * file) with a built `_graft_stats` manifest; n-keyed name so
-    * in-place data regeneration rebuilds (the ensureOcBucketed
-    * staleness discipline). */
+    * in-place data regeneration rebuilds (the staleness discipline of
+    * BucketedQueries.bucketedTable, with its dir tag and sweep). Built
+    * here, not through that helper: completion is the manifest's
+    * `_SUCCESS` marker, not a catalog entry. */
   private def ensureIndexedOrders(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^0-9a-zA-Z]", "_")
+    val tag = graft.operators.BucketedQueries.dirTag(d)
     val src = graft.Tables.orders(s, d)
     val n = src.count()
     val dir = new org.apache.hadoop.fs.Path(
@@ -208,8 +210,8 @@ object StatsIndex {
       // partial dir (no _SUCCESS) is torn down and rebuilt.
       val done = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
       if (!fs.exists(done)) {
-        // sweep superseded-n copies (the ensureOcBucketed cleanup
-        // discipline), then tear down any partial build of THIS n
+        // sweep superseded-n copies, then tear down any partial build
+        // of THIS n
         graft.operators.BucketedQueries.dropSupersededLayouts(
           s, s"stats_orders_${tag}_n", s"stats_orders_${tag}_n$n")
         if (fs.exists(p)) fs.delete(p, true)

@@ -5,12 +5,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftSessionSpec extends AnyFunSuite {
 
   test("SPARK_GRAFT_CPUS parses to a positive Int or a named error") {
-    assert(GraftSession.cpusFrom(Map.empty) == GraftSession.DefaultCpus)
-    assert(GraftSession.cpusFrom(Map("SPARK_GRAFT_CPUS" -> "8")) == 8)
-    Seq("*", "0", "abc").foreach { v =>
+    val cpus = "SPARK_GRAFT_CPUS"
+    assert(GraftSession.positiveInt(Map.empty, cpus, GraftSession.DefaultCpus) ==
+      GraftSession.DefaultCpus)
+    assert(GraftSession.positiveInt(Map(cpus -> "8"), cpus, GraftSession.DefaultCpus) == 8)
+    for (key <- Seq(cpus, "SPARK_GRAFT_BENCH_PASSES", "SPARK_GRAFT_QTIME_PASSES");
+         v <- Seq("*", "0", "-3", "abc")) {
       val e = intercept[IllegalArgumentException](
-        GraftSession.cpusFrom(Map("SPARK_GRAFT_CPUS" -> v)))
-      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$v'"))
+        GraftSession.positiveInt(Map(key -> v), key, 2))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$v'"))
     }
   }
 
@@ -20,6 +23,10 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold") == "64m")
     assert(conf.get("spark.sql.files.maxPartitionBytes") == "16m")
     assert(conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering") == "true")
+    // a new session inherits the build-time confs: no lane sets the
+    // bucketed-scan ordering conf itself
+    assert(SharedSpark.spark.newSession().conf
+      .get("spark.sql.legacy.bucketedTableScan.outputOrdering") == "true")
   }
 
   test("withConfs restores a set key and unsets an unset key when body throws") {

@@ -26,13 +26,9 @@ class BucketedQueriesSpec extends SparkTestBase {
     val cases: Seq[(String,
         (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
         (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
-      ("q3", BucketedQueries.q3Bucketed, CoreQueries.q3JoinAgg),
       ("q5", BucketedQueries.q5Bucketed, CoreQueries.q5MultiJoin),
-      ("q7", BucketedQueries.q7Bucketed, OlapQueries.q7Volume),
       ("q7pre", BucketedQueries.q7PreJoined, OlapQueries.q7Volume),
-      ("q8", BucketedQueries.q8Bucketed, OlapQueries.q8MarketShare),
-      ("q18", BucketedQueries.q18Bucketed, OlapQueries.q18LargeOrders),
-      ("q21", BucketedQueries.q21Bucketed, CoreQueries.q21MultiExists))
+      ("q18", BucketedQueries.q18Bucketed, OlapQueries.q18LargeOrders))
     cases.foreach { case (name, bucketed, plain) =>
       val bq = bucketed(s, sf)
       val plan = bq.queryExecution.executedPlan
@@ -60,6 +56,19 @@ class BucketedQueriesSpec extends SparkTestBase {
       assert(got.toSet == want.toSet && got.length == want.length,
         s"$name: bucketed layout changed the results")
     }
+  }
+
+  test("the bucketed lineitem scan reports its sort order from the session-build conf") {
+    // no lane sets spark.sql.legacy.bucketedTableScan.outputOrdering;
+    // a new session inherits it from GraftSession.build
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val plan = BucketedQueries.q7PreJoined(isolated, sf).queryExecution.executedPlan
+    val scans = plan.collect {
+      case f: FileSourceScanExec if f.tableIdentifier.exists(_.table.startsWith("lineitem_bkt")) => f
+    }
+    assert(scans.nonEmpty, s"expected a lineitem_bkt scan:\n$plan")
+    scans.foreach(f => assert(f.outputOrdering.nonEmpty,
+      s"bucketed scan must report its sortBy order:\n$plan"))
   }
 
   test("q_skyline over the suppkey-bucketed lineitem: zero suppkey Exchange, identical results") {
@@ -111,5 +120,51 @@ class BucketedQueriesSpec extends SparkTestBase {
       val want = plain(s, sf).collect().map(_.toSeq).toSet
       assert(got == want, "materialized-layout fluency lane changed results")
     }
+  }
+
+  private def files(s: org.apache.spark.sql.SparkSession, table: String): Seq[(String, Long)] = {
+    val loc = new org.apache.hadoop.fs.Path(
+      s.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    val fs = loc.getFileSystem(s.sessionState.newHadoopConf())
+    if (!fs.exists(loc)) Seq.empty
+    else fs.listStatus(loc).map(st => st.getPath.getName -> st.getModificationTime)
+      .toSeq.sorted
+  }
+
+  test("bucketedTable builds once per name; a new row count sweeps the superseded table") {
+    val s = spark
+    var builds = 0
+    def build(n: Long) = BucketedQueries.bucketedTable(s, "layout_spec_once", "k",
+        sortByKey = true, rows = Some(n)) {
+      builds += 1
+      s.range(n).toDF("k")
+    }
+    val t = build(10)
+    assert(t == "layout_spec_once_n10" && builds == 1)
+    val before = files(s, t)
+    assert(before.nonEmpty)
+    assert(build(10) == t)
+    assert(builds == 1, "a second call must not evaluate the source")
+    assert(files(s, t) == before, "a second call must write nothing")
+    assert(build(20) == "layout_spec_once_n20" && builds == 2)
+    assert(!s.catalog.tableExists(t) && files(s, t).isEmpty,
+      "the superseded-n table must be dropped with its files")
+    assert(s.table("layout_spec_once_n20").count() == 20)
+    s.sql("DROP TABLE layout_spec_once_n20")
+  }
+
+  test("bucketedTable clears a leftover location that has no catalog entry") {
+    val s = spark
+    val t = "layout_spec_orphan"
+    assert(!s.catalog.tableExists(t))
+    val loc = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), t)
+    val fs = loc.getFileSystem(s.sessionState.newHadoopConf())
+    val junk = new org.apache.hadoop.fs.Path(loc, "part-left-by-an-earlier-jvm.parquet")
+    fs.create(junk).close()
+    assert(BucketedQueries.bucketedTable(s, t, "k", sortByKey = false)(
+      s.range(50).toDF("k")) == t)
+    assert(!fs.exists(junk), "the orphaned file must be cleared")
+    assert(s.table(t).count() == 50)
+    s.sql(s"DROP TABLE $t")
   }
 }

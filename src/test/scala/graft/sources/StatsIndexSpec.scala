@@ -171,7 +171,7 @@ class StatsIndexSpec extends SparkTestBase {
     assert(lane == plain && lane.nonEmpty, "manifest must be invisible in results")
     // reach the admission the lane ran: same dir naming contract
     val n = graft.Tables.orders(spark, d).count()
-    val tag = d.replaceAll("[^0-9a-zA-Z]", "_")
+    val tag = graft.operators.BucketedQueries.dirTag(d)
     val dir = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), s"stats_orders_${tag}_n$n").toString
     val adm = StatsIndex.admit(spark, dir, "o_custkey", 7L)
@@ -188,7 +188,7 @@ class StatsIndexSpec extends SparkTestBase {
     val d = "/root/testdata/sf0.01"
     StatsIndex.statsPointLookup(spark, d).count() // ensure built
     val n = graft.Tables.orders(spark, d).count()
-    val tag = d.replaceAll("[^0-9a-zA-Z]", "_")
+    val tag = graft.operators.BucketedQueries.dirTag(d)
     val dir = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), s"stats_orders_${tag}_n$n")
     val man = new org.apache.hadoop.fs.Path(s"$dir/_graft_stats")
