@@ -125,7 +125,7 @@ object Bench {
     val results = minOf(allPasses)
     val twins = minOf(allTwins)
     val qs = (results ++ twins).toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + r4(v) }
+      .map { case (k, v) => s"${Json.str(k)}:${r4(v)}" }
       .mkString("{", ",", "}")
     val ok = results.filter(_._2 >= 0)
     // count failures across BOTH lanes: a failed twin is a -1.0 in the
@@ -142,7 +142,7 @@ object Bench {
       java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split("\\s+")(0).toDouble
     } catch { case _: Exception => -1.0 }
-    val proto = s""""protocol":{"passes":$passes,"load1":$load1,"run_id":"$runId"}"""
+    val proto = s""""protocol":{"passes":$passes,"load1":$load1,"run_id":${Json.str(runId)}}"""
     // "cpus" rides the artifact (ADDITIVE, r20 verdict #2): the bench
     // honors $SPARK_GRAFT_CPUS (master/shuffle partitions), and
     // carrying it in the JSON lets any consumer assert two runs really
@@ -153,7 +153,7 @@ object Bench {
       s"""{"metric":"total","value":${r4(total)},"unit":"sec","cpus":$cpus,""" +
       s""""lanes":{"batch":${r4(total - streamTotal)},"streaming":${r4(streamTotal)}},""" +
       s""""n_queries":${results.size},"n_failed":$nFailed,"n_warmup_failed":$nWarmupFailed,""" +
-      s"""$proto,"queries":$qs,"sf":"$sfDir"}"""
+      s"""$proto,"queries":$qs,"sf":${Json.str(sfDir)}}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
@@ -170,7 +170,7 @@ object Bench {
       s"""{"metric":"total","value":${r4(total)},"unit":"sec","cpus":$cpus,""" +
       s""""lanes":{"batch":${r4(total - streamTotal)},"streaming":${r4(streamTotal)}},""" +
       s""""n_queries":${results.size},"n_failed":$nFailed,"n_warmup_failed":$nWarmupFailed,""" +
-      s"""$proto,"queries_file":"$outFile","sf":"$sfDir"}"""
+      s"""$proto,"queries_file":${Json.str(outFile)},"sf":${Json.str(sfDir)}}"""
     println(summary)
     // stop() drains the async listener bus before the writer closes
     spark.stop()

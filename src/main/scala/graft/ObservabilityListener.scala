@@ -59,12 +59,8 @@ class ObservabilityListener(out: String => Unit) extends QueryExecutionListener 
           val plan = qe.executedPlan
           (metricSum(plan, "shuffleBytesWritten"), metricSum(plan, "spillSize"))
         } catch { case scala.util.control.NonFatal(_) => (-1L, -1L) }
-      // tags/func names are currently harness-controlled identifiers,
-      // but the line must stay parseable the first time one carries a
-      // quote or backslash
-      def esc(v: String): String = v.replace("\\", "\\\\").replace("\"", "\\\"")
       val json =
-        s"""{"graft_obs":1,"run_id":"${esc(runId)}","tag":"${esc(tag)}","func":"${esc(funcName)}",""" +
+        s"""{"graft_obs":1,"run_id":${Json.str(runId)},"tag":${Json.str(tag)},"func":${Json.str(funcName)},""" +
         s""""ms":${if (durationNs >= 0) durationNs / 1000000 else -1},""" +
         s""""shuffle_write_bytes":$shuffleB,""" +
         s""""spill_bytes":$spillB,""" +

@@ -61,10 +61,10 @@ object QTime {
     }
     sys.env.get("SPARK_GRAFT_QTIME_OUT").foreach { f =>
       val qs = out.map { case (k, (sec, rows)) =>
-        s""""$k":{"sec":${math.rint(sec * 10000) / 10000},"rows":$rows}"""
+        s"""${Json.str(k)}:{"sec":${math.rint(sec * 10000) / 10000},"rows":$rows}"""
       }.mkString("{", ",", "}")
       java.nio.file.Files.write(java.nio.file.Paths.get(f),
-        s"""{"sf":"$sfDir","cpus":$cpus,"queries":$qs}"""
+        s"""{"sf":${Json.str(sfDir)},"cpus":$cpus,"queries":$qs}"""
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
     }
     spark.stop()

@@ -67,15 +67,9 @@ object PipelineRunner {
           .take(4).map("%02x".format(_)).mkString
         s"${mangled}_$h"
       }
-    def jsonEsc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val out = fs.create(new Path(dir, s"$safeId.json"), true)
     try out.write(
-      (s"""{"run_id":"${jsonEsc(r.runId)}","n_steps":${r.nSteps},""" +
+      (s"""{"run_id":${graft.Json.str(r.runId)},"n_steps":${r.nSteps},""" +
         s""""resumed_steps":${r.resumedSteps},"total_attempts":${r.totalAttempts},""" +
         s""""started_at_ms":${r.startedAtMs},"finished_at_ms":${r.finishedAtMs}}""" + "\n")
         .getBytes("UTF-8"))

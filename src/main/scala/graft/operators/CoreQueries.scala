@@ -3,7 +3,6 @@ package graft.operators
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Core relational surface of the engine: scan / filter / project /
   * aggregate / join / window / set ops / top-k.
@@ -29,9 +28,6 @@ import org.apache.spark.sql.types.DecimalType
   * (no global sort materialization).
   */
 object CoreQueries {
-
-  private val dec182 = DecimalType(18, 2)
-  private val dec184 = DecimalType(18, 4)
 
   /** TPC-H Q1 shape: single-pass multi-aggregate over the fact table.
     * At 100 TB this is map-side partial agg into 6 groups — network

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication family for a training-data pipeline: exact, MinHash+LSH,

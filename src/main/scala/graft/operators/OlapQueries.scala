@@ -3,7 +3,6 @@ package graft.operators
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Round-5 widening of the core analytics surface: the remaining
   * classic TPC-H query shapes (existence-correlated counts, disjunctive
@@ -19,9 +18,6 @@ import org.apache.spark.sql.types.DecimalType
   * pruning sees it.
   */
 object OlapQueries {
-
-  private val dec182 = DecimalType(18, 2)
-  private val dec184 = DecimalType(18, 4)
 
   /** TPC-H Q6 shape: pure scan-filter-aggregate, no join. The whole
     * query should compile to one WholeStageCodegen over a parquet scan

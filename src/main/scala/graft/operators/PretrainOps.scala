@@ -70,30 +70,9 @@ object PretrainOps {
       .withColumn("keep_doc", gopherKeep)
   }
 
-  /** Gopher's n-gram repetition rules (Rae et al. 2021, §A1.1) — the
-    * within-document half the token-level gate above can't see: a doc
-    * that loops one phrase has a modest duplicate-TOKEN fraction but a
-    * high duplicate-N-GRAM fraction. Per n ∈ {2,3}: the share of
-    * n-gram instances whose n-gram occurs ≥2× in the doc, and the top
-    * n-gram's instance share. (The paper scores character coverage
-    * over n = 2..10; the instance-share form here keeps the whole
-    * metric in exact integer arithmetic — same signal, no
-    * summation-order hazard, and two representative n are enough for
-    * a gate.) Map-only like the token rules: n-grams are built inside
-    * the row (slice over a sequence) and counted against the row's own
-    * distinct set — O(distinct·g) per doc, bounded by web-document
-    * lengths; only seven numbers per doc leave the scan, so this runs
-    * at scan speed over 100 TB. Arrays materialize once per select
-    * stage (the §8b CollapseProject rule). */
-  // n-gram machinery + keep thresholds at object level: the named
-  // signal ops AND the fused single-pass gate (pretrainQualityFused)
-  // evaluate the SAME definitions, so twin and parts cannot drift.
-  private def grams(tk: Column, n: Int): Column =
-    transform(sequence(lit(1), size(tk) - (n - 1)),
-      i => concat_ws(" ", slice(tk, i, lit(n))))
-  // per-distinct-gram occurrence counts, computed within the row
-  private def cnts(ng: Column): Column =
-    transform(array_distinct(ng), t => size(filter(ng, x => x === t)))
+  // rounding and keep gates live at object level: the named signal ops AND
+  // the fused single-pass gate (pretrainQualityFused) evaluate the SAME
+  // definitions, so twin and parts cannot drift.
   private def r4(c: Column): Column = floor(c * 1e4 + 0.5) / 1e4
   // keep gates over their named frac columns — thresholds live ONCE
   // (fitted to the synthetic corpus; production calibrates held-out)
@@ -104,6 +83,18 @@ object PretrainOps {
     col("dup2_frac") <= 0.12 && col("top2_frac") <= 0.0625 &&
       col("dup3_frac") <= 0.06
 
+  /** Gopher's n-gram repetition rules (Rae et al. 2021, §A1.1) — the
+    * within-document half the token-level gate above can't see: a doc
+    * that loops one phrase has a modest duplicate-TOKEN fraction but a
+    * high duplicate-N-GRAM fraction. Per n ∈ {2,3}: the share of
+    * n-gram instances whose n-gram occurs ≥2× in the doc, and the top
+    * n-gram's instance share. (The paper scores character coverage
+    * over n = 2..10; the instance-share form here keeps the whole
+    * metric in exact integer arithmetic — same signal, no
+    * summation-order hazard, and two representative n are enough for
+    * a gate.) Map-only like the token rules: `graft_gram_stats` counts
+    * each n's grams inside the row, and only seven numbers per doc leave
+    * the scan, so this runs at scan speed over 100 TB. */
   def textRepetition(s: SparkSession, d: String): DataFrame = {
     // native gram stats (plans/GramStatsExpr.scala): one byte sweep
     // per n replaces the interpreted build-array/count-within-row HOF

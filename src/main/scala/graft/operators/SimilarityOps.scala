@@ -67,13 +67,6 @@ object SimilarityOps {
       .filter(col("rk") <= K)
   }
 
-  /** Deterministic ±1 hyperplanes from md5 nibble parity — no RNG, same
-    * plane set on every executor with zero coordination. Single source
-    * of the derivation is [[graft.plans.SignBits.planes]]; this wrapper
-    * keeps the per-plane view the spec's recall harness reads. */
-  private[operators] def hyperplane(j: Int, dim: Int): Array[Double] =
-    graft.plans.SignBits.planes(j + 1, dim).slice(j * dim, (j + 1) * dim)
-
   /** LSH-bucketed ANN (scale path). The ±1 hyperplanes come from md5
     * nibble parity, so the oracle reconstructs the identical planes in
     * SQL from a generated (j, k) grid — the whole pipeline is

@@ -87,7 +87,6 @@ case class AsofJoinExec(
     val rk = BindReferences.bindReference(rightKey: Expression, right.output)
     val rt = BindReferences.bindReference(rightTime: Expression, right.output)
     val ri = BindReferences.bindReference(rightTie: Expression, right.output)
-    val leftOut = left.output
     val outSchema = output
     left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
       val proj = UnsafeProjection.create(outSchema, outSchema)

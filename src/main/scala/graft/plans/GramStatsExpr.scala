@@ -8,20 +8,15 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_gram_stats(text, n)` → struct(n_grams, n_distinct, top_cnt,
-  * dup_inst, sum_tok_len): per-document word-n-gram statistics in ONE
-  * byte sweep — the Gopher-rule (n=1) and repetition-rule (n=2,3)
-  * inputs, natively.
+  * dup_inst, sum_tok_len): per-document word-n-gram statistics in one
+  * pass — the Gopher-rule (n=1) and repetition-rule (n=2,3) inputs.
   *
-  * The array-HOF form these replace
-  * (`array_max(transform(array_distinct(tk), t => size(filter(tk, …))))`,
-  * PretrainOps.scala gopherBase/cnts) interprets per element and is
-  * O(distinct·tokens) per document — measured as the dominant term of
-  * the honest (collect-timed) quality-gate cost at sf10. Here: token
-  * boundaries from the byte sweep, grams as n-token windows sorted by
-  * token-wise lexicographic order (tokens cannot contain the 0x20
-  * separator, so window equality ≡ joined-string equality — the same
-  * multiset the oracle's explode/GROUP BY sees), counts from run
-  * lengths. O(m log m) per document, zero allocation beyond the views.
+  * The array-HOF form this replaced
+  * (`array_max(transform(array_distinct(tk), t => size(filter(tk, …))))`)
+  * interprets per element and is O(distinct·tokens) per document. Here
+  * the grams are the n-token windows of [[Tokens]] (its contract is the
+  * oracle's `split` + GROUP BY multiset) and counts are the run lengths
+  * of `Tokens.runs`: O(m log m) per document.
   *
   * Fields (longs):
   *  - n_grams     = max(tokens − n + 1, 0)  (= n_tokens for n = 1)
@@ -30,11 +25,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - dup_inst    = n_grams − singleton grams (Σ_{c≥2} c)
   *  - sum_tok_len = Σ CHARACTER length of tokens (n = 1 reading;
   *                  mirrors `aggregate(tk, 0, (a,x) => a + length(x))`)
-  *
-  * Tokenization contract: every 0x20 byte separates tokens, empty
-  * tokens preserved — identical to `split(text, ' ')` / DuckDB
-  * `string_split` (EntropyExpr contract). CodegenFallback: the eval IS
-  * the tight loop (plans/ShingleExprs.scala rationale).
   */
 case class GramStats(left: Expression, right: Expression)
   extends BinaryExpression with CodegenFallback {
@@ -56,75 +46,17 @@ case class GramStats(left: Expression, right: Expression)
   override def prettyName: String = "graft_gram_stats"
 
   override protected def nullSafeEval(input: Any, nInput: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
-    val n = nInput.asInstanceOf[Int]
-    val base = s.getBaseObject
-    val off = s.getBaseOffset
-    val len = s.numBytes()
-    var spaces = 0
+    val t = new Tokens(input.asInstanceOf[UTF8String])
+    var chars = 0L
     var i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) spaces += 1
-      i += 1
+    while (i < t.count) { chars += t.view(i, 1).numChars; i += 1 }
+    var distinct, top, singles = 0L
+    val m = t.runs(nInput.asInstanceOf[Int]) { (_, c) =>
+      distinct += 1
+      if (c > top) top = c
+      if (c == 1) singles += 1
     }
-    val nt = spaces + 1
-    val toks = new Array[UTF8String](nt)
-    var t = 0
-    var st = 0
-    i = 0
-    while (i < len) {
-      if (org.apache.spark.unsafe.Platform.getByte(base, off + i) == 0x20) {
-        toks(t) = UTF8String.fromAddress(base, off + st, i - st)
-        t += 1
-        st = i + 1
-      }
-      i += 1
-    }
-    toks(t) = UTF8String.fromAddress(base, off + st, len - st)
-    var sumLen = 0L
-    i = 0
-    while (i < nt) { sumLen += toks(i).numChars(); i += 1 }
-
-    val m = nt - n + 1
-    if (m <= 0)
-      return InternalRow(0L, 0L, 0L, 0L, sumLen)
-
-    // sort gram START indices by token-wise lexicographic window order;
-    // equal windows land adjacent, counts fall out of run lengths
-    val idx = new Array[Integer](m)
-    i = 0
-    while (i < m) { idx(i) = Integer.valueOf(i); i += 1 }
-    val cmp = new java.util.Comparator[Integer] {
-      override def compare(a: Integer, b: Integer): Int = {
-        val ai = a.intValue(); val bi = b.intValue()
-        var k = 0
-        while (k < n) {
-          val c = toks(ai + k).compareTo(toks(bi + k))
-          if (c != 0) return c
-          k += 1
-        }
-        0
-      }
-    }
-    java.util.Arrays.sort(idx, cmp)
-
-    var distinct = 0L
-    var top = 0L
-    var singles = 0L
-    var run = 1L
-    i = 1
-    while (i <= m) {
-      val same = i < m && cmp.compare(idx(i), idx(i - 1)) == 0
-      if (same) run += 1
-      else {
-        distinct += 1
-        if (run > top) top = run
-        if (run == 1) singles += 1
-        run = 1
-      }
-      i += 1
-    }
-    InternalRow(m.toLong, distinct, top, m.toLong - singles, sumLen)
+    InternalRow(m.toLong, distinct, top, m.toLong - singles, chars)
   }
 
   override protected def withNewChildrenInternal(

@@ -71,10 +71,10 @@ object Natives {
           ids.toLongArray()) },
     fn[JsonLongField]("graft_json_long", "json", "string literal key") {
       case Seq(j, StrLit(key)) => JsonLongField(j, key) },
-    fn[GramStats]("graft_gram_stats", "text", "n") {
-      case Seq(t, n) => GramStats(t, n) },
-    fn[GramHashCounts]("graft_gram_hash_counts", "text", "n") {
-      case Seq(t, n) => GramHashCounts(t, n) },
+    fn[GramStats]("graft_gram_stats", "text", "positive int literal n") {
+      case Seq(t, n @ IntLit(k)) if k >= 1 => GramStats(t, n) },
+    fn[GramHashCounts]("graft_gram_hash_counts", "text", "int literal n in {1, 2}") {
+      case Seq(t, n @ IntLit(k)) if k == 1 || k == 2 => GramHashCounts(t, n) },
     fn[QmBuckets]("graft_qm_buckets", "text", "positive int literal nBuckets") {
       case Seq(t, n @ IntLit(k)) if k >= 1 => QmBuckets(t, n) },
     fn[TokenEntropy]("graft_token_entropy", "text") {

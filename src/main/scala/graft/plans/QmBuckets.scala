@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `graft_qm_buckets(text, nBuckets)` → array<long>[nBuckets + 1]:
-  * the quality model's hashed bag-of-words counts in ONE pass over the
-  * document — slots 0..nBuckets−1 hold per-bucket token-instance
+  * the quality model's hashed bag-of-words counts in one map-side pass over
+  * the document — slots 0..nBuckets−1 hold per-bucket token-instance
   * counts, the last slot the nonempty-token count.
   *
   * Bit-identical to the declarative pipeline it replaces
@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   conv(substring(md5('qm:' || tok), 1, 8), 16, 10) % nBuckets →
   *   groupBy(doc_id) pivot-count
   *
-  * Identities: split on the single byte 0x20; empty tokens are
+  * Identities: tokens follow the [[Tokens]] contract; empty tokens are
   * filtered exactly as the explicit filter did; md5 runs over the
   * UTF-8 bytes of "qm:" + token; the first 8 hex chars of the digest
   * are the first 4 digest bytes read as an unsigned big-endian 32-bit
@@ -34,8 +34,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * into the same projection as graft_gram_stats, the whole per-doc
   * feature row is one map-side pass and the join disappears (the
   * former inner join's domain — ≥1 nonempty token — becomes a filter
-  * on the last slot). CodegenFallback: the eval IS the tight loop
-  * (the GramHashCounts pattern).
+  * on the last slot).
   */
 case class QmBuckets(left: Expression, right: Expression)
   extends BinaryExpression with CodegenFallback {
@@ -61,22 +60,18 @@ case class QmBuckets(left: Expression, right: Expression)
     val bytes = s.getBytes
     val out = new Array[Long](nB + 1)
     val md = java.security.MessageDigest.getInstance("MD5")
-    var st = 0
+    val t = new Tokens(s)
     var i = 0
-    val len = bytes.length
-    while (i <= len) {
-      if (i == len || bytes(i) == 0x20) {
-        if (i > st) { // nonempty token [st, i)
-          md.reset()
-          md.update(prefix)
-          md.update(bytes, st, i - st)
-          val d = md.digest()
-          val v = ((d(0) & 255L) << 24) | ((d(1) & 255L) << 16) |
-            ((d(2) & 255L) << 8) | (d(3) & 255L)
-          out((v % nB).toInt) += 1L
-          out(nB) += 1L
-        }
-        st = i + 1
+    while (i < t.count) {
+      if (t.end(i) > t.start(i)) {
+        md.reset()
+        md.update(prefix)
+        md.update(bytes, t.start(i), t.end(i) - t.start(i))
+        val d = md.digest()
+        val v = ((d(0) & 255L) << 24) | ((d(1) & 255L) << 16) |
+          ((d(2) & 255L) << 8) | (d(3) & 255L)
+        out((v % nB).toInt) += 1L
+        out(nB) += 1L
       }
       i += 1
     }

@@ -55,19 +55,18 @@ object StreamOps {
     * for every stateful streaming operator) around a streaming query's
     * START — the conf is read once at query start, so the session
     * value is restored immediately after without affecting the running
-    * query. Default 8 (the stream_join lesson, r16: a stream-stream
+    * query. It is 8 (the stream_join lesson, r16: a stream-stream
     * join keeps FOUR state stores per partition, and 32-partition
     * micro-batches pay 128 store load/commit cycles of pure fixed
     * overhead at bench scale — measured 12.1 s → ~3 s at 8). r21
     * extends the same scoping to EVERY stateful lane (windowed agg,
     * enrich agg, dedup, sessionize): each had been paying 32 store
     * commits per micro-batch for state that is a few thousand rows.
-    * `spark.graft.streamStateParts` overrides — on a real cluster this
-    * is sized to the executor count, and state-partition count never
-    * changes results (keyed state is partition-location-agnostic). */
+    * A real cluster would size it to the executor count;
+    * state-partition count never changes results (keyed state is
+    * partition-location-agnostic). */
   private def withStateParts[T](s: SparkSession)(body: => T): T =
-    GraftSession.withConfs(s, Map("spark.sql.shuffle.partitions" ->
-      s.conf.getOption("spark.graft.streamStateParts").getOrElse("8")))(body)
+    GraftSession.withConfs(s, Map("spark.sql.shuffle.partitions" -> "8"))(body)
 
   /** The file stream source requires a directory of data FILES; expose
     * the table through a temp dir (symlink, copy as fallback). The

@@ -57,4 +57,26 @@ class ObservabilityListenerSpec extends SparkTestBase {
     assert(line.nonEmpty,
       s"expected an error observability line, got: ${lines.asScala.toList}")
   }
+
+  test("a tag holding a quote, newline and tab still yields one line that parses") {
+    val s = spark.newSession()
+    val (_, lines) = ObservabilityListener.buffering(s)
+    val tag = "obs \"odd\"\n\ttag\\"
+    ObservabilityListener.withTag(s, tag) { s.range(3).collect(): Unit }
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val line = drain(10000) {
+      lines.asScala.find(l => l.contains("obs \\\"odd"))
+    }
+    assert(line.nonEmpty, s"expected an observability line, got: ${lines.asScala.toList}")
+    assert(!line.get.contains('\n'), line.get)
+    val rec = mapper.readTree(line.get)
+    assert(rec.get("tag").asText == tag && rec.get("status").asText == "ok", line.get)
+  }
+
+  test("Json.str round-trips every char below 0x80 through a JSON parser") {
+    val all = (0 until 0x80).map(_.toChar).mkString + "héllo"
+    val back = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Json.str(all))
+    assert(back.isTextual && back.asText == all)
+  }
 }

@@ -3,7 +3,6 @@ package graft.etl
 import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 class PipelineRunnerSpec extends SparkTestBase {

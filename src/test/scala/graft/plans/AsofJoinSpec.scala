@@ -2,7 +2,6 @@ package graft.plans
 
 import graft.SparkTestBase
 import graft.operators.{CoreQueries, ExtendedQueries}
-import org.apache.spark.sql.functions._
 
 class AsofJoinSpec extends SparkTestBase {
 

@@ -1,12 +1,13 @@
 package graft.plans
 
 import graft.SparkTestBase
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Unit equivalence of the native one-sweep gram expressions against
-  * the declarative split/explode forms they replaced — localized, so a
-  * byte-sweep regression fails HERE instead of only end-to-end at the
-  * oracle gate (r12 advice). Edge cases target the tokenization
+/** Unit equivalence of the native text expressions built on [[Tokens]]
+  * against the declarative split/explode forms they replaced —
+  * localized, so a byte-sweep regression fails HERE instead of only
+  * end-to-end at the oracle gate. Edge cases target the tokenization
   * contract: every 0x20 separates, EMPTY TOKENS PRESERVED (split
   * semantics), so leading/trailing/double spaces all produce empty
   * tokens that must count like any other token. */
@@ -24,7 +25,9 @@ class GramExprSpec extends SparkTestBase {
     "double  space",            // empty middle token
     "a a a b b a",              // repeats: top_cnt/dup_inst exercise
     "héllo wörld héllo",        // multi-byte tokens, a repeat
-    "  ")                       // three empty tokens: all grams equal
+    "a\tb a a\tb a a\tb",        // a token extended by a byte below 0x20
+    "  ",                       // three empty tokens: all grams equal
+    "x y z x y z x y z w")      // repeated 3-token windows
 
   private def edgeDf = {
     val s = spark
@@ -110,5 +113,98 @@ class GramExprSpec extends SparkTestBase {
   test("graft_gram_hash_counts hash identities and counts equal the declarative form (n=1,2)") {
     Seq(1, 2).foreach(checkHashes(edgeDf, _))
     Seq(1, 2).foreach(checkHashes(corpusDf, _))
+  }
+
+  test("graft_gram_stats and graft_gram_hash_counts reject a bad or non-literal n before any job runs") {
+    Natives.ensure(spark)
+    val docs = spark.range(3).selectExpr("CAST(id AS STRING) AS text", "CAST(id AS INT) AS n")
+    for ((call, usage) <- Seq(
+        "graft_gram_stats(text, 0)" -> "positive int literal n",
+        "graft_gram_stats(text, n)" -> "positive int literal n",
+        "graft_gram_hash_counts(text, 3)" -> "int literal n in {1, 2}",
+        "graft_gram_hash_counts(text, 0)" -> "int literal n in {1, 2}",
+        "graft_gram_hash_counts(text, n)" -> "int literal n in {1, 2}")) {
+      val e = intercept[Exception](docs.selectExpr(call))
+      assert(e.getMessage.contains(s"${call.takeWhile(_ != '(')} expects") &&
+        e.getMessage.contains(usage), s"$call: ${e.getMessage}")
+    }
+    val ok = docs.selectExpr("graft_gram_stats(text, 3)", "graft_gram_hash_counts(text, 2)").collect()
+    assert(ok.length == 3)
+  }
+
+  // per id: the native column and its declarative recompute over
+  // tk = split(text, ' ') and every in-range window start i
+  private def pairs(df: org.apache.spark.sql.DataFrame, native: Column,
+      ref: String): Map[Long, (Any, Any)] = {
+    Natives.ensure(spark)
+    df.withColumn("tk", split(col("text"), " "))
+      .withColumn("w3", expr("filter(sequence(0, size(tk) - 1), i -> i + 2 < size(tk))"))
+      .select(col("id"), native, expr(ref))
+      .collect().map(r => r.getLong(0) -> ((r.get(1), r.get(2)))).toMap
+  }
+
+  private def checkEqual(df: org.apache.spark.sql.DataFrame, native: Column, ref: String): Unit =
+    pairs(df, native, ref).foreach { case (id, (got, want)) =>
+      assert(got == want, s"id=$id: native=$got ref=$want")
+    }
+
+  private def bothDfs = Seq(edgeDf, corpusDf)
+
+  test("graft_token_hashes equals xxhash64 of each split token, in order") {
+    for (df <- bothDfs)
+      checkEqual(df, expr("graft_token_hashes(text)"), "transform(tk, t -> xxhash64(t))")
+  }
+
+  test("graft_shingle_hashes equals the sorted distinct xxhash64 of the 3-token windows") {
+    for (df <- bothDfs)
+      checkEqual(df, expr("graft_shingle_hashes(text)"),
+        "array_sort(array_distinct(transform(w3, i -> xxhash64(tk[i], tk[i + 1], tk[i + 2]))))")
+  }
+
+  test("graft_candidate_shingles, given every window hash, equals the distinct joined 3-windows") {
+    for (df <- bothDfs) {
+      Natives.ensure(spark)
+      val every = df.select(explode(expr("graft_shingle_hashes(text)"))).distinct()
+        .collect().map(_.getLong(0))
+      assert(every.nonEmpty)
+      checkEqual(df, call_function("graft_candidate_shingles", col("text"), typedLit(every)),
+        "array_distinct(transform(w3, i -> concat_ws(' ', tk[i], tk[i + 1], tk[i + 2])))")
+    }
+  }
+
+  test("graft_token_entropy equals the log2 entropy of the split token counts") {
+    for (df <- bothDfs) {
+      val ps = pairs(df, expr("graft_token_entropy(text)"), "tk")
+      assert(ps.nonEmpty)
+      ps.foreach { case (id, (got, tk)) =>
+        val toks = tk.asInstanceOf[scala.collection.Seq[String]]
+        val n = toks.size.toDouble
+        val want = -toks.groupBy(identity).values
+          .map(g => g.size / n * math.log(g.size / n) / math.log(2.0)).sum
+        assert(math.abs(got.asInstanceOf[Double] - want) < 1e-9, s"id=$id: native=$got ref=$want")
+      }
+    }
+  }
+
+  test("Tokens.runs visits each distinct window once, in token-wise order, with its count") {
+    val rnd = new scala.util.Random(7)
+    for (_ <- 1 to 300) {
+      val text = Seq.fill(rnd.nextInt(12))("ab \t".charAt(rnd.nextInt(4))).mkString
+      val tk = text.split(" ", -1).toSeq
+      val t = new Tokens(org.apache.spark.unsafe.types.UTF8String.fromString(text))
+      assert(t.count == tk.size)
+      for (k <- 1 to 3) {
+        val seen = Seq.newBuilder[(Seq[String], Long)]
+        val m = t.runs(k) { (v, c) =>
+          val w = t.indexOf(v)
+          seen += ((tk.slice(w, w + k), c))
+          assert(v.toString == tk.slice(w, w + k).mkString(" "))
+        }
+        val windows = if (tk.size < k) Seq.empty else tk.sliding(k).toSeq
+        val want = windows.groupBy(identity).view.mapValues(_.size.toLong).toSeq
+          .sortBy(_._1)(Ordering.Implicits.seqOrdering[Seq, String])
+        assert(m == windows.size && seen.result() == want, s"text=${text.replace("\t", "\\t")} k=$k")
+      }
+    }
   }
 }
