@@ -83,6 +83,14 @@ object PretrainOps {
     col("dup2_frac") <= 0.12 && col("top2_frac") <= 0.0625 &&
       col("dup3_frac") <= 0.06
 
+  /** The repetition rules' domain, ≥3 tokens (at least one 3-gram),
+    * stated on the text: under the [[graft.plans.Tokens]] contract a
+    * document has k + 1 tokens for k 0x20 bytes. A filter on the
+    * `graft_gram_stats(text, 3)` struct instead is pushed below the
+    * projection with the expression inlined, which sorts each
+    * document's 3-gram windows twice. Null text fails both forms. */
+  private val threeTokens = expr("length(text) - length(replace(text, ' ', '')) >= 2")
+
   /** Gopher's n-gram repetition rules (Rae et al. 2021, §A1.1) — the
     * within-document half the token-level gate above can't see: a doc
     * that loops one phrase has a modest duplicate-TOKEN fraction but a
@@ -98,13 +106,12 @@ object PretrainOps {
   def textRepetition(s: SparkSession, d: String): DataFrame = {
     // native gram stats (plans/GramStatsExpr.scala): one byte sweep
     // per n replaces the interpreted build-array/count-within-row HOF
-    // chain; ≥3-token domain ≡ at least one 3-gram
+    // chain
     graft.plans.Natives.ensure(s)
-    val m = documents(s, d)
+    val m = documents(s, d).filter(threeTokens)
       .select(col("doc_id"),
         expr("graft_gram_stats(text, 2)").as("s2"),
         expr("graft_gram_stats(text, 3)").as("s3"))
-      .filter(col("s3.n_grams") >= 1)
       .select(col("doc_id"),
         col("s2.n_grams").as("g2"), col("s3.n_grams").as("g3"),
         col("s2.top_cnt").as("top2"), col("s2.dup_inst").as("dup2"),
@@ -490,13 +497,12 @@ object PretrainOps {
     // textRepetition's domain (≥3 tokens) — the composite's inner joins
     // restrict it the same way
     graft.plans.Natives.ensure(s)
-    val c = documents(s, d)
+    val c = documents(s, d).filter(threeTokens)
       .select(col("doc_id"),
         expr("graft_gram_stats(text, 1)").as("s1"),
         expr("graft_gram_stats(text, 2)").as("s2"),
         expr("graft_gram_stats(text, 3)").as("s3"),
         TextOps.stopCount(split(col("text"), " ")).as("n_stop"))
-      .filter(col("s3.n_grams") >= 1)
       .select(col("doc_id"),
         col("s1.n_grams").as("n_tokens"), col("s1.n_distinct").as("n_distinct"),
         col("s1.top_cnt").as("top_cnt"), col("s1.sum_tok_len").as("sum_tok_len"),
@@ -731,14 +737,13 @@ object PretrainOps {
     // this side); graft_qm_buckets computes the identical counts inside
     // this projection, so the whole per-doc feature row is one map-side
     // pass and qmFeatures' join disappears.
-    documents(s, d)
+    documents(s, d).filter(threeTokens)
       .select(col("doc_id"),
         expr("graft_gram_stats(text, 1)").as("s1"),
         expr("graft_gram_stats(text, 2)").as("s2"),
         expr("graft_gram_stats(text, 3)").as("s3"),
         TextOps.stopCount(split(col("text"), " ")).as("ns"),
         expr(s"graft_qm_buckets(text, $QM_B)").as("bk"))
-      .filter(col("s3.n_grams") >= 1)
       .select(col("doc_id"),
         col("s1.n_grams").as("nt"), col("s1.n_distinct").as("nd"),
         col("s1.top_cnt").as("tc"), col("s1.sum_tok_len").as("stl"),

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import graft.{Tables, TempDirs}
+import graft.TempDirs
 import graft.sources.{IdempotentSink, MergeSink}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 /** The reference's actual operating loop — fetch a page, write it
   * idempotently, repeat (handler.py:89-161, idempotency_service.py:30)
@@ -21,44 +20,27 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamIngest {
 
   /** Drive a stream into IdempotentSink — first-writer-wins per key
-    * across and within micro-batches. AvailableNow makes the call
-    * finite; a continuous deployment would use a processing-time
-    * trigger with the same body. */
+    * across and within micro-batches, at the session's shuffle
+    * partitions (see [[Streams.drain]]). */
   def runIdempotent(stream: DataFrame, keyCol: String, tiebreak: String,
-                    path: String, checkpoint: String): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        IdempotentSink.writeKeyed(batch, keyCol, tiebreak, path)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                    path: String, checkpoint: String): Unit =
+    Streams.drain(stream, checkpoint) { (batch, _) =>
+      IdempotentSink.writeKeyed(batch, keyCol, tiebreak, path): Unit
+    }
 
   /** Drive a stream into MergeSink — last-writer-wins keyed upsert. */
   def runMerge(stream: DataFrame, keyCol: String, versionCol: String,
-               path: String, checkpoint: String): Unit = {
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        MergeSink.mergeKeyed(batch, keyCol, versionCol, path)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+               path: String, checkpoint: String): Unit =
+    Streams.drain(stream, checkpoint) { (batch, _) =>
+      MergeSink.mergeKeyed(batch, keyCol, versionCol, path): Unit
+    }
 
   private def tmp(prefix: String): String = TempDirs.create(prefix).toString
 
-  private def eventStream(s: SparkSession, d: String): DataFrame =
-    Tables.normalizeEventTs(
-        s.readStream.schema(Tables.eventsRaw(s, d).schema)
-          .parquet(StreamOps.streamDir(d, "events")))
-      .selectExpr("event_id", "user_id", "event_type",
-        "ts div 1000000000 AS ts_s", "value")
+  /** The events stream as ingest records. */
+  private def records(s: SparkSession, d: String): DataFrame =
+    Streams.events(s, d)().selectExpr("event_id", "user_id", "event_type",
+      "ts div 1000000000 AS ts_s", "value")
 
   /** events stream → foreachBatch → IdempotentSink keyed by user_id
     * (event_id tiebreak): the target ends up holding each user's FIRST
@@ -66,7 +48,7 @@ object StreamIngest {
     * end to end through the streaming engine and the sink. */
   def streamIngestIdempotent(s: SparkSession, d: String): DataFrame = {
     val target = tmp("graft_ing_idem") + "/t.parquet"
-    runIdempotent(eventStream(s, d), "user_id", "event_id",
+    runIdempotent(records(s, d), "user_id", "event_id",
       target, tmp("graft_ing_idem_ck"))
     s.read.parquet(target)
   }
@@ -77,7 +59,7 @@ object StreamIngest {
     * never decides — keeps the oracle portable). */
   def streamIngestMerge(s: SparkSession, d: String): DataFrame = {
     val target = tmp("graft_ing_merge") + "/t.parquet"
-    runMerge(eventStream(s, d), "user_id", "event_id",
+    runMerge(records(s, d), "user_id", "event_id",
       target, tmp("graft_ing_merge_ck"))
     s.read.parquet(target)
   }
@@ -104,7 +86,7 @@ object StreamIngest {
   def streamIngestCdc(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val target = tmp("graft_ing_cdc") + "/t.parquet"
-    val changelog = eventStream(s, d)
+    val changelog = records(s, d)
       .withColumn("op",
         when(col("event_type") === "error", lit("D")).otherwise(lit("U")))
     runMerge(changelog, "user_id", "event_id", target, tmp("graft_ing_cdc_ck"))

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.{GraftSession, Tables, TempDirs}
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event record for the streaming sessionizer (top-level: encoders and
   * state-store codegen want plainly constructible classes).
@@ -24,7 +24,8 @@ case class SessionOut(user_id: Long, sess_start: Long, sess_end: Long,
 case class SessState(firstTs: Long, lastTs: Long, n: Long)
 
 /** Structured Streaming surface: the same sessionization/aggregation
-  * semantics as the batch operators, expressed over `readStream`.
+  * semantics as the batch operators, expressed as streams run by
+  * [[Streams]].
   *
   * At scale this is the standard continuous-ingest path: file/queue
   * source → event-time windows with watermark → stateful sessionization
@@ -33,101 +34,6 @@ case class SessState(firstTs: Long, lastTs: Long, n: Long)
   * a real cluster).
   */
 object StreamOps {
-
-  /** Memory-sink views created by THIS module, so repeated invocations
-    * (warm-up + bench passes) drop exactly the views they made and
-    * nothing else — a prefix sweep could clobber a same-prefix view
-    * owned by another still-active query in the session (e.g. a spec's
-    * own `sess_test`). Keyed per session: two sessions' registries
-    * never interfere. */
-  private val ownedViews =
-    scala.collection.mutable.Map.empty[SparkSession, scala.collection.mutable.Set[String]]
-
-  private def replaceOwnedView(s: SparkSession, prefix: String): String = ownedViews.synchronized {
-    val mine = ownedViews.getOrElseUpdate(s, scala.collection.mutable.Set.empty)
-    mine.foreach(t => if (t.startsWith(prefix)) { s.catalog.dropTempView(t); mine -= t })
-    val name = s"$prefix${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    mine += name
-    name
-  }
-
-  /** Scope the shuffle-partition count (= state-store instance count
-    * for every stateful streaming operator) around a streaming query's
-    * START — the conf is read once at query start, so the session
-    * value is restored immediately after without affecting the running
-    * query. It is 8 (the stream_join lesson, r16: a stream-stream
-    * join keeps FOUR state stores per partition, and 32-partition
-    * micro-batches pay 128 store load/commit cycles of pure fixed
-    * overhead at bench scale — measured 12.1 s → ~3 s at 8). r21
-    * extends the same scoping to EVERY stateful lane (windowed agg,
-    * enrich agg, dedup, sessionize): each had been paying 32 store
-    * commits per micro-batch for state that is a few thousand rows.
-    * A real cluster would size it to the executor count;
-    * state-partition count never changes results (keyed state is
-    * partition-location-agnostic). */
-  private def withStateParts[T](s: SparkSession)(body: => T): T =
-    GraftSession.withConfs(s, Map("spark.sql.shuffle.partitions" -> "8"))(body)
-
-  /** The file stream source requires a directory of data FILES; expose
-    * the table through a temp dir (symlink, copy as fallback). The
-    * driver's testdata is one parquet file per table, but scaled dirs
-    * (ScaleGen) are directories of part-files — the source does not
-    * recurse into a linked subdirectory, so link each part-file
-    * individually (every file then feeds the stream, and multi-file
-    * tables arrive as genuinely multi-file input). */
-  private[streaming] def streamDir(d: String, table: String): String = {
-    import java.nio.file._
-    val dir = TempDirs.create(s"graft_stream_$table")
-    // absolutize: the symlinks below carry this path as their target,
-    // and a RELATIVE target resolves against the LINK's directory
-    // (/tmp/...), silently yielding broken links — the file stream
-    // then reads zero rows (found r12: a scale dir passed as a
-    // relative path produced empty streaming results)
-    val target = Paths.get(s"$d/$table.parquet").toAbsolutePath
-
-    val parts: Seq[Path] =
-      if (Files.isDirectory(target)) {
-        val s = Files.list(target)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-        } finally s.close()
-      } else Seq(target)
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val link = dir.resolve(f"part_$i%05d.parquet")
-      try Files.createSymbolicLink(link, p)
-      catch { case _: Exception => Files.copy(p, link): Unit }
-    }
-    dir.toString
-  }
-
-  /** Drive an append-mode streaming DataFrame to completion through a
-    * PARQUET sink (foreachBatch, one overwritten subdir per micro-batch
-    * = replay-idempotent, the StreamIngest discipline) and hand back the
-    * lazy read of the result — the scale-safe measured path for lanes
-    * whose output is O(table). The memory sink materializes the ENTIRE
-    * result in driver heap before any consumer asks for a row; at sf10
-    * the outer-join lanes pushed 2M/3.9M rows through it, and at 100×
-    * that is a driver OOM (r18, per verdict — the sink was the last
-    * scale-killer flag on the surface). Bounded-output lanes (windowed
-    * aggregates, top-k) keep the memory sink: their result is small by
-    * construction and the view registry keeps re-runs clean. */
-  private def runToParquet(s: SparkSession, df: DataFrame,
-                           prefix: String): DataFrame = {
-    val dir = TempDirs.create(s"graft_${prefix}_sink")
-    val out = s"$dir/data"
-    val q = df.writeStream
-      .option("checkpointLocation", s"$dir/chk")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/batch_$id")
-      }
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // recursiveFileLookup: the batch_N subdirs are NOT partition dirs
-    s.read.option("recursiveFileLookup", "true").parquet(out)
-  }
 
   /** The outer-join lanes' emission horizon: min over the two JOINED
     * sides' max event times − watermark delay − join window. A side
@@ -149,16 +55,12 @@ object StreamOps {
   }
 
   /** Tumbling 1-hour event-time window aggregation over the events
-    * stream, driven to completion with Trigger.AvailableNow so the
+    * stream, driven to completion by an AvailableNow drain so the
     * result is a finite DataFrame (the driver's batch contract).
     * Semantics are identical to the batch hourly rollup — that is the
     * oracle. */
-  def streamWindowedAgg(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
-    val stream = Tables.normalizeEventTs(
-        s.readStream.schema(schema).parquet(streamDir(d, "events")))
-      // ts normalized to long nanos: exact µs conversion for event time
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+  def streamWindowedAgg(s: SparkSession, d: String): DataFrame =
+    Streams.collected(Streams.events(s, d)()
       .withWatermark("event_time", "1 hour")
       .groupBy(window(col("event_time"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
@@ -166,20 +68,7 @@ object StreamOps {
            // never carry DECIMAL — see CoreQueries portability rules)
            sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("window_start_s"),
-        col("event_type"), col("n_events"), col("sum_value"))
-    // drop sinks left by earlier invocations in this session (warm-up +
-    // repeated bench passes) so completed-mode tables don't accumulate
-    val name = replaceOwnedView(s, "win_agg_")
-    withStateParts(s) {
-      val q = stream.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
-  }
+        col("event_type"), col("n_events"), col("sum_value")), "win_agg")
 
   /** Gap-based (30-min) sessionization with explicit state per user via
     * flatMapGroupsWithState — the streaming twin of
@@ -194,7 +83,7 @@ object StreamOps {
     * Known limitation (from the timeout API's contract): the timeout is
     * clamped to watermark+1ms when a session's natural deadline is
     * already behind the watermark, so such a trailing session fires on
-    * the NEXT watermark advance. Under Trigger.AvailableNow the engine
+    * the NEXT watermark advance. Under an AvailableNow drain the engine
     * runs that extra no-data batch, so nothing is lost in the bench /
     * oracle path; a CONTINUOUS deployment whose stream simply stops
     * (no further batches, watermark frozen) holds the last session
@@ -252,17 +141,13 @@ object StreamOps {
     * is oracle-checked, not just spec-tested. */
   def streamSessions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val ds = Tables.normalizeEventTs(s.readStream
-        .schema(Tables.eventsRaw(s, d).schema)
-        .parquet(streamDir(d, "events")))
+    val ds = Streams.events(s, d)()
       .selectExpr("user_id", "ts div 1000000000 AS ts_s", "value",
         "timestamp_seconds(ts div 1000000000) AS event_time")
       .withWatermark("event_time", "30 minutes")
       .as[Ev]
-    // parquet sink: the session list is O(table) — see runToParquet.
-    // State partitions scoped (see withStateParts): the sessionizer
-    // keeps a state store per shuffle partition.
-    withStateParts(s) { runToParquet(s, sessionize(ds).toDF(), "ssess") }
+    // parquet sink: the session list is O(table)
+    Streams.toParquet(sessionize(ds).toDF(), "ssess")
   }
 
   /** Exactly-once ingest dedup under at-least-once delivery: the event
@@ -277,13 +162,13 @@ object StreamOps {
     * correspondingly honest: duplicates arriving within the watermark
     * window are dropped; a redelivery later than the watermark delay is
     * an upstream SLA violation (size the delay to the queue's
-    * redelivery bound). Under Trigger.AvailableNow here, both copies
+    * redelivery bound). Under the AvailableNow drain here, both copies
     * land inside the watermark and the output is exactly the distinct
     * events — which is what the oracle checks.
     *
-    * `maxFilesPerTrigger` is pinned high enough that AvailableNow
-    * processes each source's files in ONE micro-batch: if the file
-    * source split a copy across batches, a copy processed after the
+    * AvailableNow processes each source's files in ONE micro-batch
+    * ([[Streams.events]] sets no read limit): if the file source split
+    * a copy across batches, a copy processed after the
     * watermark advanced past its event_time + 1h would be admitted as
     * a fresh row — the oracle's exact-distinct contract only holds
     * batch-atomically. (A live deployment doesn't get that guarantee
@@ -291,21 +176,13 @@ object StreamOps {
     * The oracle additionally assumes event_id is unique in the base
     * events table — asserted in StreamingSpec. */
   def streamDedup(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
-    def src = Tables.normalizeEventTs(s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 100000)
-      .parquet(streamDir(d, "events")))
-    val deduped = src.unionAll(src)
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+    val src = Streams.events(s, d)
+    // parquet sink: the deduped stream is O(table)
+    Streams.toParquet(src().unionAll(src())
       .withWatermark("event_time", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .select(col("event_id"), col("user_id"),
-        expr("ts div 1000000000").as("ts_s"), col("event_type"))
-    // parquet sink: the deduped stream is O(table) — see runToParquet.
-    // State partitions scoped (r21): dropDuplicatesWithinWatermark
-    // keeps one store per shuffle partition, same fixed-cost shape as
-    // the join lanes.
-    withStateParts(s) { runToParquet(s, deduped, "sdedup") }
+        expr("ts div 1000000000").as("ts_s"), col("event_type")), "sdedup")
   }
 
   /** Streaming top-k: the hourly per-type counts come from the REAL
@@ -335,60 +212,34 @@ object StreamOps {
     * the windowed agg — exactly the plan a 100 TB/day ingest needs.
     * Semantics equal the batch join+rollup; that is the oracle. */
   def streamEnrich(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
-    import org.apache.spark.sql.functions.broadcast
     val dim = Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey"))
       .join(Tables.nation(s, d).select(col("n_nationkey"), col("n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val stream = Tables.normalizeEventTs(
-        s.readStream.schema(schema).parquet(streamDir(d, "events")))
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
+    Streams.collected(Streams.events(s, d)()
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .withWatermark("event_time", "1 hour")
       .groupBy(window(col("event_time"), "1 hour"), col("n_name"))
       .agg(count(lit(1)).as("n_events"),
            sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("window_start_s"),
-        col("n_name").as("nation"), col("n_events"), col("sum_value"))
-    val name = replaceOwnedView(s, "enrich_")
-    withStateParts(s) {
-      val q = stream.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Complete())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    s.table(name)
+        col("n_name").as("nation"), col("n_events"), col("sum_value")), "enrich")
   }
 
-  /** Core of the stream-stream join, parameterized over the two input
-    * streams so the MemoryStream spec can drive watermark eviction
-    * explicitly. Contract: `views` carries (v_user, view_id, v_time)
-    * with a watermark on v_time; `purchases` carries (user_id,
-    * purchase_id, p_time) with a watermark on p_time. Inner join on
-    * user with the view inside [purchase − 1 h, purchase].
-    *
-    * This is THE bounded-state shape for joining two unbounded streams:
-    * the time-range predicate ties the two event-time columns together,
-    * so the engine derives a state watermark for EACH side (a buffered
-    * view is droppable once the purchase-side watermark passes
-    * v_time + 1 h; a buffered purchase once the view side passes
-    * p_time) — state size tracks the join window + watermark delay,
-    * never stream history. An equi-join without the time bound would
-    * buffer both streams forever — the unbounded-state killer at
-    * continuous-ingest scale. State is partitioned by the join key
-    * (user), so it shards across executors like any keyed state store.
-    * Inner-join rows emit as soon as both sides have arrived (no
-    * watermark wait — only OUTER sides must hold emission back). */
-  def joinViewsPurchases(views: DataFrame, purchases: DataFrame): DataFrame =
-    purchases.join(views,
-        col("v_user") === col("user_id") &&
-        col("v_time") >= col("p_time") - expr("INTERVAL 1 HOUR") &&
-        col("v_time") <= col("p_time"))
-      .select(col("user_id"), col("purchase_id"), col("view_id"),
-        (unix_micros(col("p_time")) - unix_micros(col("v_time"))).as("gap_us"))
+  /** The views/purchases split of two separate events sources, each
+    * watermarked 1 h — the inputs of [[Streams.joinViewsPurchases]]. */
+  private def viewsPurchasesJoin(s: SparkSession, d: String, how: String): DataFrame = {
+    val src = Streams.events(s, d)
+    val views = src().filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
+        col("event_time").as("v_time"))
+      .withWatermark("v_time", "1 hour")
+    val purchases = src().filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("purchase_id"),
+        col("event_time").as("p_time"))
+      .withWatermark("p_time", "1 hour")
+    Streams.joinViewsPurchases(views, purchases, how)
+  }
 
   /** Stream-stream windowed join: each purchase event joins the same
     * user's view events from the preceding hour — two independently
@@ -398,28 +249,9 @@ object StreamOps {
     * oracle-checked; watermark state EVICTION is proven in the
     * MemoryStream spec (a view arriving after the watermark passed its
     * join window produces no pair and state row counts shrink). */
-  def streamJoin(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
-    // two separate sources (separate temp dirs): a real deployment's
-    // two streams are distinct queues/topics, not one scan forked
-    def src = Tables.normalizeEventTs(
-        s.readStream.schema(schema).parquet(streamDir(d, "events")))
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("event_time").as("v_time"))
-      .withWatermark("v_time", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("event_time").as("p_time"))
-      .withWatermark("p_time", "1 hour")
-    // a stream-stream join keeps FOUR state stores per partition (two
-    // sides × keyToNumValues/keyWithIndexToValue) — see withStateParts.
-    // parquet sink: the matched-pair stream is O(table) — the last
-    // unbounded-output lane still on the memory sink after the r18
-    // rework (r19, per verdict). See runToParquet.
-    withStateParts(s) { runToParquet(s, joinViewsPurchases(views, purchases), "sjoin") }
-  }
+  def streamJoin(s: SparkSession, d: String): DataFrame =
+    // parquet sink: the matched-pair stream is O(table)
+    Streams.toParquet(viewsPurchasesJoin(s, d, "inner").drop("p_us", "v_us"), "sjoin")
 
   /** LEFT-OUTER stream-stream join with an EMISSION HORIZON — the
     * "which purchases had no view?" completion of [[streamJoin]].
@@ -449,41 +281,8 @@ object StreamOps {
     * left range-join with the SAME horizon predicate — exact at every
     * SF. view_id/gap_us are COALESCEd to −1 on both sides (null-free
     * driver hash). */
-  def streamJoinOuter(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
-    def src = Tables.normalizeEventTs(
-        s.readStream.schema(schema).parquet(streamDir(d, "events")))
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("event_time").as("v_time"))
-      .withWatermark("v_time", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("event_time").as("p_time"))
-      .withWatermark("p_time", "1 hour")
-    val joined = purchases.join(views,
-        col("v_user") === col("user_id") &&
-        col("v_time") >= col("p_time") - expr("INTERVAL 1 HOUR") &&
-        col("v_time") <= col("p_time"), "left_outer")
-      .select(col("user_id"), col("purchase_id"),
-        coalesce(col("view_id"), lit(-1L)).as("view_id"),
-        coalesce(unix_micros(col("p_time")) - unix_micros(col("v_time")),
-          lit(-1L)).as("gap_us"),
-        unix_micros(col("p_time")).as("p_us"))
-    val result = withStateParts(s) { runToParquet(s, joined, "sjoutr") }
-    // horizon from the batch table (the run is bounded; a live
-    // deployment has no horizon — rows emit as the watermark advances).
-    // min over the two joined sides: the engine's global watermark
-    // tracks the SLOWER input, never the corpus-wide max; a MISSING
-    // side admits no null-lane rows at all (see joinHorizonUs)
-    joinHorizonUs(s, d) match {
-      case Some(h) =>
-        result.filter(col("view_id") =!= -1L || col("p_us") <= h).drop("p_us")
-      case None =>
-        result.filter(col("view_id") =!= -1L).drop("p_us")
-    }
-  }
+  def streamJoinOuter(s: SparkSession, d: String): DataFrame =
+    outerJoin(s, d, "left_outer", "sjoutr")
 
   /** FULL-outer stream-stream join — [[streamJoinOuter]]'s emission-
     * horizon contract applied SYMMETRICALLY ("which views led to no
@@ -502,40 +301,23 @@ object StreamOps {
     * user_id is coalesced across sides (exactly one side is null on an
     * outer row); ids/gap coalesce to −1 (null-free driver hash). The
     * oracle is the batch FULL range-join with both horizon predicates. */
-  def streamJoinFull(s: SparkSession, d: String): DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
-    def src = Tables.normalizeEventTs(
-        s.readStream.schema(schema).parquet(streamDir(d, "events")))
-      .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-    val views = src.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("event_time").as("v_time"))
-      .withWatermark("v_time", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("purchase_id"),
-        col("event_time").as("p_time"))
-      .withWatermark("p_time", "1 hour")
-    val joined = purchases.join(views,
-        col("v_user") === col("user_id") &&
-        col("v_time") >= col("p_time") - expr("INTERVAL 1 HOUR") &&
-        col("v_time") <= col("p_time"), "full_outer")
-      .select(
-        coalesce(col("user_id"), col("v_user")).as("user_id"),
-        coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
-        coalesce(col("view_id"), lit(-1L)).as("view_id"),
-        coalesce(unix_micros(col("p_time")) - unix_micros(col("v_time")),
-          lit(-1L)).as("gap_us"),
-        coalesce(unix_micros(col("p_time")), lit(Long.MaxValue)).as("p_us"),
-        coalesce(unix_micros(col("v_time")), lit(Long.MaxValue)).as("v_us"))
-    val result = withStateParts(s) { runToParquet(s, joined, "sjfull") }
+  def streamJoinFull(s: SparkSession, d: String): DataFrame =
+    outerJoin(s, d, "full_outer", "sjfull")
+
+  /** An outer lane: the join drained to parquet, then the horizon filter
+    * from the batch table (the run is bounded; a live deployment has no
+    * horizon — rows emit as the watermark advances). Inner pairs always;
+    * a null-lane row only at or below the horizon (a left-outer join
+    * has no unmatched-view rows, so its view clause never holds). A
+    * MISSING side admits no null-lane rows at all (see joinHorizonUs). */
+  private def outerJoin(s: SparkSession, d: String, how: String, prefix: String): DataFrame = {
     val inner = col("view_id") =!= -1L && col("purchase_id") =!= -1L
-    (joinHorizonUs(s, d) match {
-      case Some(h) =>
-        result.filter(inner ||
-          (col("view_id") === -1L && col("p_us") <= h) ||
-          (col("purchase_id") === -1L && col("v_us") <= h))
-      case None => result.filter(inner)
-    }).drop("p_us", "v_us")
+    val provable = joinHorizonUs(s, d).fold(lit(false)) { h =>
+      (col("view_id") === -1L && col("p_us") <= h) ||
+        (col("purchase_id") === -1L && col("v_us") <= h)
+    }
+    Streams.toParquet(viewsPurchasesJoin(s, d, how), prefix)
+      .filter(inner || provable).drop("p_us", "v_us")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

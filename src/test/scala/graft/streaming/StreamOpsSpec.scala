@@ -115,7 +115,7 @@ class StreamOpsSpec extends SparkTestBase {
     val purchases = pIn.toDF().toDF("user_id", "purchase_id", "p_time")
       .withWatermark("p_time", "10 seconds")
     val name = "sjoin_evict_test"
-    val q = StreamOps.joinViewsPurchases(views, purchases).writeStream
+    val q = Streams.joinViewsPurchases(views, purchases, "inner").writeStream
       .format("memory").queryName(name)
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
 
@@ -151,7 +151,6 @@ class StreamOpsSpec extends SparkTestBase {
   }
 
   test("left-outer stream-stream join: null row emits only after the watermark proves no match") {
-    import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -162,12 +161,8 @@ class StreamOpsSpec extends SparkTestBase {
       .withWatermark("v_time", "10 seconds")
     val purchases = pIn.toDF().toDF("user_id", "purchase_id", "p_time")
       .withWatermark("p_time", "10 seconds")
-    val joined = purchases.join(views,
-        col("v_user") === col("user_id") &&
-        col("v_time") >= col("p_time") - expr("INTERVAL 1 HOUR") &&
-        col("v_time") <= col("p_time"), "left_outer")
-      .select(col("user_id"), col("purchase_id"),
-        coalesce(col("view_id"), lit(-1L)).as("view_id"))
+    val joined = Streams.joinViewsPurchases(views, purchases, "left_outer")
+      .select("user_id", "purchase_id", "view_id")
     val name = "sjo_evict_test"
     val q = joined.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
@@ -198,7 +193,6 @@ class StreamOpsSpec extends SparkTestBase {
   }
 
   test("full-outer stream-stream join: BOTH null lanes emit exactly once past their horizons") {
-    import org.apache.spark.sql.functions._
     val s = spark
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -209,13 +203,8 @@ class StreamOpsSpec extends SparkTestBase {
       .withWatermark("v_time", "10 seconds")
     val purchases = pIn.toDF().toDF("user_id", "purchase_id", "p_time")
       .withWatermark("p_time", "10 seconds")
-    val joined = purchases.join(views,
-        col("v_user") === col("user_id") &&
-        col("v_time") >= col("p_time") - expr("INTERVAL 1 HOUR") &&
-        col("v_time") <= col("p_time"), "full_outer")
-      .select(coalesce(col("user_id"), col("v_user")).as("user_id"),
-        coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
-        coalesce(col("view_id"), lit(-1L)).as("view_id"))
+    val joined = Streams.joinViewsPurchases(views, purchases, "full_outer")
+      .select("user_id", "purchase_id", "view_id")
     val name = "sjf_evict_test"
     val q = joined.writeStream.format("memory").queryName(name)
       .outputMode(OutputMode.Append()).trigger(Trigger.ProcessingTime(0)).start()
