@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one builder for a local graft session. Every main (Bench, QTime,
+/** The one builder for a local graft session. Every main (Bench,
   * Verify, PlanDump, Preflight, ScaleGen) and the test base
   * build from here, so the plan the oracle gate checks is the plan the
   * bench times: Catalyst picks the physical plan from exactly these
@@ -15,7 +15,7 @@ object GraftSession {
     * unset), or an error that names the key — never a raw
     * NumberFormatException, and never a value like `*` that is a valid
     * master but not a number for the artifacts. Mains parse every such
-    * var (`SPARK_GRAFT_CPUS`, `_BENCH_PASSES`, `_QTIME_PASSES`) before
+    * var (`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_BENCH_PASSES`) before
     * they build the session, so a bad value fails before any work. */
   def positiveInt(env: Map[String, String], key: String, default: Int): Int =
     env.get(key) match {

@@ -1,6 +1,6 @@
 package graft
 
-/** JSON text for the engine's artifacts: the Bench and QTime lines, the
+/** JSON text for the engine's artifacts: the Bench lines, the
   * observability records, the oracle SQL map and the pipeline-run
   * markers. Every string value, whatever env var, argument or SQL text
   * it came from, goes out through [[str]]. */

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import org.apache.spark.graft.BusDrain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -82,16 +83,17 @@ object ObservabilityListener {
     l
   }
 
-  def register(spark: SparkSession): ObservabilityListener =
-    register(spark, line => System.err.println(line))
-
   /** Run `body` with the query tag in the session conf so the listener
-    * can attribute the resulting query events. The listener bus is
-    * asynchronous, so attribution is exact for a sequential harness
-    * (the bench loop) and best-effort for concurrent sessions — the
-    * numbers themselves come from the event's own QueryExecution
-    * either way. */
+    * can attribute the resulting query events. The listener reads the
+    * conf when the asynchronous bus DELIVERS an event, which can be
+    * after the action returned, so the bus is drained first: every
+    * earlier action is reported under the tag it ran with. Exact for a
+    * sequential harness (the bench loop), best-effort for concurrent
+    * sessions — the numbers themselves come from the event's own
+    * QueryExecution either way. */
   def withTag[T](spark: SparkSession, tag: String)(body: => T): T = {
+    try BusDrain(spark.sparkContext)
+    catch { case _: java.util.concurrent.TimeoutException => () }
     // deliberately NOT unset afterwards: the asynchronous listener bus
     // may deliver the event after body returns, and an unset tag would
     // blank it; the tag stays until the next withTag overwrites it

@@ -14,8 +14,8 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
   *
   * Usage: PlanDump <sfDir> <outDir> <suffix> <query> [query...]
   * writes <outDir>/<query>_<suffix>.txt for each; resolves the same
-  * names as QTime (declared queries and the layout-primary lanes'
-  * `_plain` twins).
+  * names as Bench (`SparkEntry.lanes`: the declared queries and the
+  * layout-primary lanes' `_plain` twins).
   */
 object PlanDump {
 
@@ -52,7 +52,7 @@ object PlanDump {
       // building the DataFrame runs any driver-side loop the lane holds
       // (PageRank / GD / Lloyd), so the plan is the one a bench pass runs
       val t0 = System.nanoTime()
-      val df = QTime.registry(q)(s, sfDir)
+      val df = SparkEntry.lanes(q)(s, sfDir)
       df.collect(): Unit
       val sec = (System.nanoTime() - t0) / 1e9
       val qe = df.queryExecution

@@ -6,8 +6,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Each module contributes (queries, oracle) pairs; keys and output
   * column names are kept identical between the Spark plan and the
   * DuckDB oracle SQL (the driver sorts columns by name before hashing).
+  * Every lane name is registered by exactly one module: the one that
+  * holds its oracle.
   */
 object SparkEntry {
+
+  type Lane = (SparkSession, String) => DataFrame
 
   private def modules =
     Seq(
@@ -27,76 +31,29 @@ object SparkEntry {
       sources.StatsIndex.queries -> sources.StatsIndex.oracle
     )
 
+  /** The union of `maps`, or an error naming every key that more than
+    * one of them registers (a plain `++` would let the later map win
+    * silently). */
+  private[graft] def disjoint[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }
+    if (dups.nonEmpty)
+      throw new IllegalStateException(s"lane names registered twice: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.reduce(_ ++ _)
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     etl.WodEtl.pipelineE2E(spark, "/root/testdata/sf0.001")
 
-  /** Layout-primary overrides: plans whose bucketed-layout twin
-    * MEASURED faster than the plain scan at every tested SF, promoted
-    * to be the production plan (the layout build amortizes across a
-    * real deployment's query stream; Bench pays it once untimed and
-    * once in a min-excluded first pass).
-    *
-    * q18_large_orders (r15): bucketed 0.47 s vs plain 0.84 s at sf0.1;
-    * 2.1–3.2 s vs 4.6–9.2 s at sf10 across r14/r15 windows. The win
-    * is structural, and explains why q18 promotes where q7 was
-    * REVERTED (r14: bucketed q7 116 s steady vs plain 5.9–8.8 s at
-    * sf10): q18's dominant cost is the
-    * order-grain quantity pre-aggregate — a full fact-stream exchange
-    * on the plain layout — and the bucketed scan deletes exactly that
-    * exchange while the rest of the plan (the ~1% qualifying set's
-    * joins) stays AQE-broadcast and trivially parallel. q7's bucketed
-    * twin only replaced a JOIN exchange with a single-wave 32-task
-    * merge join that SERIALIZED the whole fact pipeline behind
-    * bucket-count parallelism; q18's heavy stage keeps its parallelism
-    * (BUCKETS-way hash aggregate over pre-clustered scans). Rule:
-    * promote the layout when it deletes the plan's DOMINANT exchange
-    * without capping the parallelism of the stage that replaces it. */
-  private def layoutPrimary: Map[String, (SparkSession, String) => DataFrame] =
-    Map(
-      "q18_large_orders" -> (operators.BucketedQueries.q18Bucketed _),
-      // q5 promoted r18: sf0.1 parity (1.01 vs 1.06 s, mirror r18) and
-      // a consistent sf10 win (2.03/2.21 vs 4.16/3.23 s across two
-      // quiet windows) — the orderkey-bucketed scan deletes the fact
-      // stream's dominant exchange and, unlike q7's revert, the
-      // bucketed join keeps its stage parallel (measured, not argued)
-      "q5_multi_join" -> (operators.BucketedQueries.q5Bucketed _),
-      // q_skyline promoted r19: the suppkey-bucketed scan deletes the
-      // plan's ONE fact exchange and the replacing stage is a
-      // BUCKETS-way pre-clustered aggregate (q18's shape, not q7-r14's
-      // serialized merge join). Same-window QTime, min-of-N: sf0.1
-      // 0.61 vs 1.04 s, sf3 1.20 vs 1.82 s, sf10 2.43 vs 3.82 s —
-      // a ~1.6× win at every tested SF.
-      "q_skyline" -> (operators.BucketedQueries.qSkylineBucketed _),
-      // q7 promoted r19 on the PRE-JOINED (o_orderkey, c_nationkey)
-      // layout — not the r14-reverted plain-bucketed twin: moving the
-      // orders⋈customer join into the layout build removes the
-      // customer attach stage whose shuffle kept the r14 twin
-      // serialized behind the single-wave merge join. Same-window
-      // QTime: sf0.1 1.31 s vs 2.16 s plain; sf10 1.14 s (steady
-      // 1.1–1.6 after the build pass) vs 2.84 s plain vs DuckDB's
-      // same-day 2.81 s — the last non-floor query above the 2×
-      // DuckDB bar, now at ~0.4×.
-      "q7_volume" -> (operators.BucketedQueries.q7PreJoined _),
-      // fluency lanes promoted r20 on the materialized doc_id-bucketed
-      // distinct-gram streams (ensureDhcBucketed — the q7_prejoined
-      // discipline applied to tokenization): the plain plans paid the
-      // byte-sweep tokenize TWICE per query (count + probe subtrees)
-      // plus a doc-grain exchange; the layout form scans slim
-      // (doc_id, h…, c) parquet and aggregates exchange-free on the
-      // buckets. Same-window QTime min-of-3, bkt vs plain: sf0.1
-      // 0.49/0.78, sf1 0.75/0.88, sf3 0.72/1.08, sf10 0.96/2.44 s —
-      // and bigram 0.42/0.60, 0.67/0.76, 1.05/1.20, 2.75/3.31 s. The
-      // r19 verdict's two non-floor >2× rows (3.16×/2.73× vs DuckDB)
-      // land at ~1.2×/~1.8×.
-      "text_logprob" -> (operators.BucketedQueries.textLogprobBucketed _),
-      "text_bigram_logprob" -> (operators.BucketedQueries.textBigramLogprobBucketed _))
+  /** One entry per implemented operator from SURVEY.md §2. */
+  lazy val queries: Map[String, Lane] = disjoint(modules.map(_._1))
 
-  /** The plain-scan reference twin of each layout-primary lane: the
-    * lane's own plan over the raw parquet tables. Bench times them
-    * outside its total and QTime/PlanDump resolve them, so every
-    * promotion above stays re-measurable in the same window. */
-  def layoutTwins: Map[String, (SparkSession, String) => DataFrame] =
+  /** The plain-scan reference twin of each lane whose declared plan reads
+    * a bucketed layout (`operators.BucketedQueries`): the lane's own
+    * plan over the raw parquet tables. Bench times them outside its
+    * total and PlanDump resolves them, so every promotion stays
+    * re-measurable in the same window. */
+  val layoutTwins: Map[String, Lane] =
     Map(
       "q18_plain" -> (operators.OlapQueries.q18LargeOrders _),
       "q5_plain" -> (operators.CoreQueries.q5MultiJoin _),
@@ -105,12 +62,11 @@ object SparkEntry {
       "text_logprob_plain" -> (operators.TextOps.textLogprob _),
       "text_bigram_logprob_plain" -> (operators.TextOps.textBigramLogprob _))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _) ++ layoutPrimary
+  /** Every name a timing or plan tool resolves: the declared lanes and
+    * their plain twins. */
+  lazy val lanes: Map[String, Lane] = disjoint(Seq(queries, layoutTwins))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    modules.map(_._2).reduce(_ ++ _)
+  lazy val oracleSql: Map[String, String] = disjoint(modules.map(_._2))
 }

@@ -4,7 +4,7 @@ import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import WodRealText.{groups, monthNames, monthNum, sundayBefore}
+import WodRealText.{dashes, dateRange, groups, monthNames, sundayBefore}
 
 /** One segment of a session: its 1-based index, its marker token and
   * the join of the rest ('' for a marker-only segment). */
@@ -75,14 +75,8 @@ object WodEtl {
     * regex (never from the arithmetic above — the parse is the operator
     * under test). */
   private def withDateRange(df: DataFrame): DataFrame = {
-    val pat = "([a-z]+)-(\\d+)-(\\d+)-(\\d{4})"
-    val m = monthNum(regexp_extract(col("slug"), pat, 1))
-    df.withColumn("start_date",
-        make_date(regexp_extract(col("slug"), pat, 4).cast("int"), m,
-                  regexp_extract(col("slug"), pat, 2).cast("int")))
-      .withColumn("end_date",
-        make_date(regexp_extract(col("slug"), pat, 4).cast("int"), m,
-                  regexp_extract(col("slug"), pat, 3).cast("int")))
+    val (start, end) = dateRange(col("slug"), "([a-z]+)-(\\d+)-(\\d+)-(\\d{4})")
+    df.withColumn("start_date", start).withColumn("end_date", end)
   }
 
   /** Documents with their week anchor, the Sunday before the slug's
@@ -133,8 +127,8 @@ object WodEtl {
       lit("</strong><br /> &#8211; fin</p>"))
     documents(s, d)
       .select(col("doc_id"),
-        trim(regexp_replace(regexp_replace(regexp_replace(wrapped,
-          "<[^>]*>", " "), "&#8211;|&ndash;", "-"), "\\s+", " ")).as("clean_text"))
+        trim(regexp_replace(dashes(regexp_replace(wrapped, "<[^>]*>", " ")),
+          "\\s+", " ")).as("clean_text"))
       .withColumn("n_chars_clean", length(col("clean_text")))
   }
 
@@ -152,14 +146,9 @@ object WodEtl {
     val titled = documents(s, d).withColumn("title",
       concat(cap, lit(" "), d1, lit("-"), d1 + 6, lit(", "), year,
         lit(" &#8211; 5 Day Weightlifting Program")))
-    val cleaned = regexp_replace(col("title"), "&#8211;|&ndash;", "-")
-    val pat = "([a-zA-Z]+)\\s+(\\d+)-(\\d+)[,\\s]+(\\d{4})"
-    val m = monthNum(regexp_extract(cleaned, pat, 1))
-    titled.select(col("doc_id"), col("title"),
-      make_date(regexp_extract(cleaned, pat, 4).cast("int"), m,
-        regexp_extract(cleaned, pat, 2).cast("int")).as("start_date"),
-      make_date(regexp_extract(cleaned, pat, 4).cast("int"), m,
-        regexp_extract(cleaned, pat, 3).cast("int")).as("end_date"))
+    val (start, end) =
+      dateRange(dashes(col("title")), "([a-zA-Z]+)\\s+(\\d+)-(\\d+)[,\\s]+(\\d{4})")
+    titled.select(col("doc_id"), col("title"), start.as("start_date"), end.as("end_date"))
   }
 
   /** Marker-based sessionization of the token stream. */

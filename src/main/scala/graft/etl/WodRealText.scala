@@ -90,31 +90,39 @@ object WodRealText {
   private[etl] def sundayBefore(d: Column): Column =
     date_sub(d, ((dayofweek(d) + lit(5)) % 7) + 1)
 
+  /** The reference's title entity cleanup before a date parse:
+    * `&#8211;` and `&ndash;` become '-'. */
+  private[etl] def dashes(title: Column): Column =
+    regexp_replace(title, "&#8211;|&ndash;", "-")
+
+  /** (start, end) of the `month d1 d2 yyyy` range that `pat` matches in
+    * `text` (groups 1–4). A text with no match, an unknown month or a
+    * day outside its month (feb-30) gives null — the reference's
+    * try/except → fallback — where ANSI mode's make_date would throw:
+    * each day is bounds-checked against the month's last_day and
+    * applied via date_add to the (always-valid) first of month. */
+  private[etl] def dateRange(text: Column, pat: String): (Column, Column) = {
+    val m = monthNum(regexp_extract(text, pat, 1))
+    val firstOfMonth = when(regexp_extract(text, pat, 4) =!= "" && m.isNotNull,
+      make_date(regexp_extract(text, pat, 4).cast("int"), m, lit(1)))
+    def day(group: Int): Column = {
+      // try_cast: a text with no date extracts '' (and the ANSI cast
+      // would throw for the whole batch) — null falls through instead
+      val n = regexp_extract(text, pat, group).try_cast("int")
+      when(n.between(1, dayofmonth(last_day(firstOfMonth))), date_add(firstOfMonth, n - 1))
+    }
+    (day(2), day(3))
+  }
+
   /** Date-range start from slug (`month-d1-d2-yyyy`, searched anywhere)
     * else title (`Month d1-d2[,] yyyy`, entities decoded) else the post
     * date — the reference's extract_date_range_from_slug_or_title
-    * priority. Invalid dates (feb-30) must null out and fall through
-    * (the reference's try/except → fallback), but ANSI mode's
-    * make_date throws — so the day is bounds-checked against the
-    * month's last_day and applied via date_add to the (always-valid)
-    * first of month. */
-  private[etl] def startDate(slug: Column, title: Column, postDate: Column): Column = {
-    def fromPat(text: Column, pat: String): Column = {
-      val m = monthNum(regexp_extract(text, pat, 1))
-      // try_cast: a text with no date extracts '' (and the ANSI cast
-      // would throw for the whole batch) — null falls through instead
-      val day = regexp_extract(text, pat, 2).try_cast("int")
-      val firstOfMonth = when(regexp_extract(text, pat, 4) =!= "" && m.isNotNull,
-        make_date(regexp_extract(text, pat, 4).cast("int"), m, lit(1)))
-      when(day.between(1, dayofmonth(last_day(firstOfMonth))),
-        date_add(firstOfMonth, day - 1))
-    }
-    val titleClean = regexp_replace(title, "&#8211;|&ndash;", "-")
+    * priority; an invalid date falls through to the next source. */
+  private[etl] def startDate(slug: Column, title: Column, postDate: Column): Column =
     coalesce(
-      fromPat(slug, "(\\w+)-(\\d+)-(\\d+)-(\\d{4})"),
-      fromPat(titleClean, "(\\w+)\\s+(\\d+)-(\\d+)[,\\s]\\s*(\\d{4})"),
+      dateRange(slug, "(\\w+)-(\\d+)-(\\d+)-(\\d{4})")._1,
+      dateRange(dashes(title), "(\\w+)\\s+(\\d+)-(\\d+)[,\\s]\\s*(\\d{4})")._1,
       to_date(postDate))
-  }
 
   private val dayPattern = Pattern.compile(dayRegex)
   private val segPattern = Pattern.compile(segRegex)

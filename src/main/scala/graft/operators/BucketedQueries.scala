@@ -4,8 +4,8 @@ import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** The bucketed layouts behind the six layout-primary lanes
-  * (`graft.SparkEntry.layoutPrimary`): q5_multi_join and
+/** The bucketed layouts behind the six layout-primary lanes (each
+  * registered by the module that holds its oracle): q5_multi_join and
   * q18_large_orders over orders + lineitem bucketed and sorted on the
   * order key, q7_volume over that lineitem and a pre-joined
   * (o_orderkey, c_nationkey) table, q_skyline over lineitem bucketed on
@@ -20,6 +20,15 @@ import org.apache.spark.sql.functions.col
   * Plan bodies are shared with the plain lanes (`*From` in CoreQueries,
   * OlapQueries and TextOps), whose plain-scan twins stay timed in
   * Bench as `graft.SparkEntry.layoutTwins`.
+  *
+  * Promotion rule: a layout plan is the lane's plan only when it
+  * MEASURED faster than the plain scan at every tested SF (Bench pays
+  * the build once untimed), by deleting the plan's DOMINANT exchange
+  * without capping the parallelism of the stage that replaces it. The
+  * r14 plain-bucketed q7 failed that (a single-wave 32-task merge join
+  * serialized the fact pipeline: 116 s vs 5.9–8.8 s plain at sf10) and
+  * was reverted. Each plan below carries its same-window min-of-N
+  * timings, layout vs plain.
   *
   * Every layout table is built by [[bucketedTable]]; the session conf
   * that makes a bucketed scan report its sortBy order is set once, at
@@ -119,14 +128,19 @@ object BucketedQueries {
     * build over the FACT side per bucket for nothing. */
   private def sorted(df: DataFrame): DataFrame = df.hint("merge")
 
+  /** q5_multi_join (r18): the fact stream's dominant exchange goes and
+    * the join stage stays parallel. sf0.1 1.01 vs 1.06 s; sf10
+    * 2.03/2.21 vs 4.16/3.23 s in two quiet windows. */
   def q5Bucketed(s: SparkSession, d: String): DataFrame = {
     val (ot, lt) = ensureBucketed(s, d)
     CoreQueries.q5From(s, d, sorted(s.table(ot)), sorted(s.table(lt)))
   }
 
-  /** Q18's per-order pre-aggregate inherits the bucket partitioning —
-    * the heaviest exchange of the plain plan (one row per order)
-    * disappears entirely; the qualifying-set joins stay AQE-broadcast. */
+  /** q18_large_orders (r15): Q18's per-order pre-aggregate inherits the
+    * bucket partitioning — the plain plan's heaviest exchange (one row
+    * per order) disappears, the heavy stage stays a BUCKETS-way
+    * aggregate, and the qualifying-set joins stay AQE-broadcast.
+    * sf0.1 0.47 vs 0.84 s; sf10 2.1–3.2 vs 4.6–9.2 s (r14/r15). */
   def q18Bucketed(s: SparkSession, d: String): DataFrame = {
     val (ot, lt) = ensureBucketed(s, d)
     OlapQueries.q18From(s.table(lt), sorted(s.table(ot)), customer(s, d))
@@ -141,10 +155,11 @@ object BucketedQueries {
     bucketedTable(s, s"lineitem_sbkt_${dirTag(d)}", "l_suppkey", sortByKey = false)(
       lineitem(s, d))
 
-  /** q_skyline on the suppkey-bucketed layout: the scan reports
+  /** q_skyline (r19) on the suppkey-bucketed layout: the scan reports
     * hashpartitioning(l_suppkey), so BOTH the pair-grain and the
     * supplier-grain aggregate run exchange-free — the plain plan's one
-    * remaining fact-scale shuffle is gone entirely. */
+    * fact-scale shuffle is gone. sf0.1 0.61 vs 1.04 s, sf3 1.20 vs
+    * 1.82 s, sf10 2.43 vs 3.82 s. */
   def qSkylineBucketed(s: SparkSession, d: String): DataFrame =
     // packDistinct=false: hashpartitioning(l_suppkey) satisfies the
     // (suppkey, partkey) grouping (subset rule) so BOTH fact
@@ -170,10 +185,12 @@ object BucketedQueries {
         .select("o_orderkey", "c_nationkey")
     }
 
-  /** q7 on the pre-joined layout: ONE co-located merge join of the
-    * bucketed line scan against the 12 B/row oc table — the
-    * orders⋈customer join is gone from query time entirely and no
-    * fact-scale exchange remains anywhere in the plan. */
+  /** q7_volume (r19) on the pre-joined layout: ONE co-located merge
+    * join of the bucketed line scan against the 12 B/row oc table — the
+    * orders⋈customer join (whose customer attach stage serialized the
+    * r14 twin) is gone from query time, and no fact-scale exchange
+    * remains. sf0.1 1.31 vs 2.16 s; sf10 1.14 vs 2.84 s (DuckDB
+    * 2.81 s). */
   def q7PreJoined(s: SparkSession, d: String): DataFrame = {
     val (_, lt) = ensureBucketed(s, d)
     OlapQueries.q7FromOc(s, d, s.table(lt), s.table(ensureOcBucketed(s, d)))
@@ -194,13 +211,15 @@ object BucketedQueries {
       if (n == 1) TextOps.logprobDhc(s, d) else TextOps.logprobDhc2(s, d)
     }
 
-  /** text_logprob over the materialized unigram stream: zero
-    * tokenization at query time, per-doc aggregate exchange-free on
-    * the doc_id buckets. */
+  /** text_logprob (r20) over the materialized unigram stream: zero
+    * tokenization at query time, per-doc aggregate exchange-free on the
+    * doc_id buckets. sf0.1 0.49/0.78, sf1 0.75/0.88, sf3 0.72/1.08,
+    * sf10 0.96/2.44 s. */
   def textLogprobBucketed(s: SparkSession, d: String): DataFrame =
     TextOps.textLogprobFrom(s, s.table(ensureDhcBucketed(s, d, 1)))
 
-  /** text_bigram_logprob over the materialized bigram stream. */
+  /** text_bigram_logprob (r20) over the materialized bigram stream.
+    * sf0.1 0.42/0.60, sf1 0.67/0.76, sf3 1.05/1.20, sf10 2.75/3.31 s. */
   def textBigramLogprobBucketed(s: SparkSession, d: String): DataFrame =
     TextOps.textBigramLogprobFrom(s, s.table(ensureDhcBucketed(s, d, 2)))
 }

@@ -572,7 +572,7 @@ object CoreQueries {
     "q1_agg" -> (q1Agg _),
     "q_filter_project" -> (qFilterProject _),
     "q3_join_agg" -> (q3JoinAgg _),
-    "q5_multi_join" -> (q5MultiJoin _),
+    "q5_multi_join" -> (BucketedQueries.q5Bucketed _),
     "q_groupby_having" -> (qGroupByHaving _),
     "q_topk" -> (qTopK _),
     "q_distinct" -> (qDistinct _),

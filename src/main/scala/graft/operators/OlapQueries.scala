@@ -641,7 +641,7 @@ object OlapQueries {
     // AQE framework stages every exchange before re-planning). Hinting
     // the customer side at plan time deletes that exchange: the orders
     // slice streams straight through the join into the o_orderkey
-    // exchange the fact join needs (sf10 QTime 2.99 → 2.75 s; plan
+    // exchange the fact join needs (sf10 2.99 → 2.75 s; plan
     // verified exchange-free on the orders side). The broadcast side is
     // a single-long projection of the region's customer subset (~1/5 of
     // customers — same growth class as the supplier broadcasts this
@@ -790,13 +790,13 @@ object OlapQueries {
     "q9_profit" -> (q9ProfitByNation _),
     "q15_top_supplier" -> (q15TopSupplier _),
     "q22_sales_opportunity" -> (q22SalesOpportunity _),
-    "q_skyline" -> (qSkyline _),
+    "q_skyline" -> (BucketedQueries.qSkylineBucketed _),
     "q13_order_dist" -> (q13OrderDist _),
-    "q18_large_orders" -> (q18LargeOrders _),
+    "q18_large_orders" -> (BucketedQueries.q18Bucketed _),
     "q_salted_join" -> (qSaltedJoin _),
     "q6_forecast" -> (q6Forecast _),
     "q4_order_priority" -> (q4OrderPriority _),
-    "q7_volume" -> (q7Volume _),
+    "q7_volume" -> (BucketedQueries.q7PreJoined _),
     "q10_returned" -> (q10Returned _),
     "q14_promo_share" -> (q14PromoShare _),
     "q19_disjunctive" -> (q19Disjunctive _),

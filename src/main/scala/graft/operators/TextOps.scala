@@ -562,13 +562,13 @@ object TextOps {
     // projection IS one adjacent-pair SQL argmax — driver-gated here,
     // running the trainer's own pair-count code.
     "text_bpe_rank1" -> (BpeTrain.textBpeRank1 _),
-    "text_bigram_logprob" -> (textBigramLogprob _),
+    "text_bigram_logprob" -> (BucketedQueries.textBigramLogprobBucketed _),
     "text_entropy" -> (textEntropy _),
     "text_sentences" -> (textSentences _),
     "text_casing" -> (textCasing _),
     "text_line_dedup" -> (textLineDedup _),
     "text_clean_boilerplate" -> (textCleanBoilerplate _),
-    "text_logprob" -> (textLogprob _),
+    "text_logprob" -> (BucketedQueries.textLogprobBucketed _),
     "text_keywords_tfidf" -> (textKeywordsTfidf _),
     "text_pii_scrub" -> (textPiiScrub _),
     "text_html_links" -> (textHtmlLinks _),

@@ -17,10 +17,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * Accumulation is double, element order left-to-right — bit-identical
   * to the fold form, so oracle-checked results are unchanged.
   *
-  * Edge semantics (explicit, not incidental): mismatched lengths and
-  * zero-norm vectors both return NULL — silently truncating to the
-  * shorter length or emitting NaN/Infinity would diverge from any
-  * full-vector oracle instead of signalling bad input.
+  * Edge semantics (explicit, not incidental): mismatched lengths,
+  * zero-norm vectors and a NULL element all return NULL — silently
+  * truncating to the shorter length, emitting NaN/Infinity or reading
+  * a NULL slot as 0.0 would diverge from any full-vector oracle
+  * instead of signalling bad input (the fold form is NULL on a NULL
+  * element too). Both eval paths call one kernel,
+  * [[CosineSimilarity.cosine]].
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -42,14 +45,38 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_cosine"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val res = ctx.freshName("res")
+      s"""
+         |Object $res = graft.plans.CosineSimilarity.cosine($a, $b);
+         |if ($res == null) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = ((Double) $res).doubleValue();
+         |}
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSimilarity =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** The kernel both eval paths call: cos(x, y), or null for
+    * mismatched lengths, a zero norm or a NULL element. */
+  def cosine(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
       val xi = x.getFloat(i).toDouble
       val yi = y.getFloat(i).toDouble
       dot += xi * yi; na += xi * xi; nb += yi * yi
@@ -58,37 +85,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (na == 0.0 || nb == 0.0) null
     else dot / (math.sqrt(na) * math.sqrt(nb))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = (double) $a.getFloat($i);
-         |    double $y = (double) $b.getFloat($i);
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  if ($na == 0.0 || $nb == 0.0) {
-         |    ${ev.isNull} = true;
-         |  } else {
-         |    ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
 }

@@ -31,7 +31,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * on length and fold a null element into a '0' bit — neither has ever
   * been exercised: Preflight pins the 64-dim no-null contract, and the
   * type check accepts containsNull=true only because parquet arrays
-  * declare it even for null-free data).
+  * declare it even for null-free data). Both eval paths call one
+  * kernel, [[SignBits.signature]].
   */
 case class SignBits(child: Expression, nBits: Int, dim: Int)
   extends UnaryExpression {
@@ -53,58 +54,15 @@ case class SignBits(child: Expression, nBits: Int, dim: Int)
   // the serialized plan (nBits*dim doubles — ~20 KB at 40×64).
   @transient private lazy val planes: Array[Double] = SignBits.planes(nBits, dim)
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) return null
-    var i = 0
-    while (i < dim) { if (v.isNullAt(i)) return null; i += 1 }
-    val sb = new Array[Byte](nBits)
-    val pl = planes
-    var j = 0
-    while (j < nBits) {
-      var dot = 0.0
-      var k = 0
-      val base = j * dim
-      while (k < dim) { dot += v.getFloat(k).toDouble * pl(base + k); k += 1 }
-      sb(j) = if (dot >= 0) '1' else '0'
-      j += 1
-    }
-    UTF8String.fromBytes(sb)
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    SignBits.signature(input.asInstanceOf[ArrayData], planes, nBits, dim)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val planesRef = ctx.addReferenceObj("signPlanes", planes, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val sb = ctx.freshName("sb")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val dot = ctx.freshName("dot")
-      val base = ctx.freshName("base")
-      val i = ctx.freshName("i")
-      val hasNull = ctx.freshName("hasNull")
-      s"""
-         |boolean $hasNull = false;
-         |if ($v.numElements() == $dim) {
-         |  for (int $i = 0; $i < $dim; $i++) {
-         |    if ($v.isNullAt($i)) { $hasNull = true; break; }
-         |  }
-         |}
-         |if ($v.numElements() != $dim || $hasNull) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  byte[] $sb = new byte[$nBits];
-         |  for (int $j = 0; $j < $nBits; $j++) {
-         |    double $dot = 0.0;
-         |    int $base = $j * $dim;
-         |    for (int $k = 0; $k < $dim; $k++) {
-         |      $dot += ((double) $v.getFloat($k)) * $planesRef[$base + $k];
-         |    }
-         |    $sb[$j] = ($dot >= 0) ? (byte) '1' : (byte) '0';
-         |  }
-         |  ${ev.value} = UTF8String.fromBytes($sb);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, v => s"""
+       |${ev.value} = graft.plans.SignBits.signature($v, $planesRef, $nBits, $dim);
+       |${ev.isNull} = ${ev.value} == null;
+     """.stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): SignBits =
@@ -112,6 +70,26 @@ case class SignBits(child: Expression, nBits: Int, dim: Int)
 }
 
 object SignBits {
+
+  /** The kernel both eval paths call: the '0'/'1' sign of `v`'s dot
+    * product with each of the `nBits` planes, or null when `v`'s length
+    * is not `dim` or it holds a NULL element. */
+  def signature(v: ArrayData, planes: Array[Double], nBits: Int, dim: Int): UTF8String = {
+    if (v.numElements() != dim) return null
+    var i = 0
+    while (i < dim) { if (v.isNullAt(i)) return null; i += 1 }
+    val sb = new Array[Byte](nBits)
+    var j = 0
+    while (j < nBits) {
+      var dot = 0.0
+      var k = 0
+      val base = j * dim
+      while (k < dim) { dot += v.getFloat(k).toDouble * planes(base + k); k += 1 }
+      sb(j) = if (dot >= 0) '1' else '0'
+      j += 1
+    }
+    UTF8String.fromBytes(sb)
+  }
   /** Flat row-major md5-parity plane matrix — the single source of the
     * hyperplane definition (SimilarityOps delegates here). */
   def planes(nBits: Int, dim: Int): Array[Double] = {

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   *    per-file key ranges, so parquet row-group min/max stats prune
   *    whole files for key predicates (spec-proven: a point filter on
   *    the sorted layout returns rows from exactly one file). This is
-  *    the same economics as the bucketed-twin rule (§SparkEntry
-  *    .layoutPrimary): pay one shuffle at write time, delete scan work
+  *    the same economics as the bucketed-twin rule (BucketedQueries'
+  *    promotion rule): pay one shuffle at write time, delete scan work
   *    on every read after.
   *  - Z-ORDERED (multi-key layout, r17): the sorted mode prunes on ONE
   *    key — a second access predicate gets nothing. Z-ordering ranks

@@ -9,7 +9,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.positiveInt(Map.empty, cpus, GraftSession.DefaultCpus) ==
       GraftSession.DefaultCpus)
     assert(GraftSession.positiveInt(Map(cpus -> "8"), cpus, GraftSession.DefaultCpus) == 8)
-    for (key <- Seq(cpus, "SPARK_GRAFT_BENCH_PASSES", "SPARK_GRAFT_QTIME_PASSES");
+    for (key <- Seq(cpus, "SPARK_GRAFT_BENCH_PASSES");
          v <- Seq("*", "0", "-3", "abc")) {
       val e = intercept[IllegalArgumentException](
         GraftSession.positiveInt(Map(key -> v), key, 2))

@@ -1,10 +1,15 @@
 #!/usr/bin/env python3
-"""Assembles BENCH_SF1.json / BENCH_SF3.json from the QTime and
+"""Assembles BENCH_SF1.json / BENCH_SF3.json from the graft.Bench and
 bench_duckdb.py outputs of a scale run.
 
 Usage:
   assemble_scale_bench.py <out.json> <sf_label> <round> \
-      <spark_qtime.json> <duck1.json> [<duck2.json> ...]
+      <spark_bench.json> <duck1.json> [<duck2.json> ...]
+
+<spark_bench.json> is Bench's artifact (SPARK_GRAFT_BENCH_OUT), from a
+full run or a named-lane run (``runMain graft.Bench <lane>...``): its
+``queries`` map holds each lane's min-of-N seconds (-1 when it failed)
+and its ``rows`` map the collected row count.
 
 Twin queries (``*_bucketed`` / ``*_partitioned``) go to ``layout_twins``;
 every other spark query is compared against the DuckDB time for the same
@@ -45,12 +50,16 @@ def main():
         duck.update(json.load(open(p))["queries"])
 
     twins, queries = {}, {}
-    for name, rec in spark["queries"].items():
+    for name, sec in spark["queries"].items():
+        rows = spark["rows"][name]
+        if sec < 0:
+            print(f"WARN: spark failed for {name}, omitted", file=sys.stderr)
+            continue
         # _plain: the layout-free continuity twin of a query whose
-        # PRIMARY plan reads a clustered layout (SparkEntry.layoutPrimary)
+        # PRIMARY plan reads a clustered layout (SparkEntry.layoutTwins)
         if (name.endswith("_bucketed") or name.endswith("_partitioned")
                 or name.endswith("_plain")):
-            twins[name] = rec["sec"]
+            twins[name] = sec
         elif name in duck:
             d = duck[name]
             if d.get("err") or d["sec"] < 0:
@@ -59,12 +68,12 @@ def main():
                 print(f"WARN: duckdb failed for {name} "
                       f"({d.get('err', 'sec<0')}), omitted", file=sys.stderr)
                 continue
-            assert rec["rows"] == d["rows"], \
-                f"{name}: spark rows {rec['rows']} != duckdb rows {d['rows']}"
+            assert rows == d["rows"], \
+                f"{name}: spark rows {rows} != duckdb rows {d['rows']}"
             q = {
-                "spark_sec": rec["sec"], "rows": rec["rows"],
+                "spark_sec": sec, "rows": rows,
                 "duckdb_sec": d["sec"],
-                "ratio": round(rec["sec"] / d["sec"], 3),
+                "ratio": round(sec / d["sec"], 3),
             }
             if d["sec"] < FLOOR_SEC:
                 q["floor"] = True
@@ -85,7 +94,7 @@ def main():
         "round": int(rnd),
         "cpus": spark.get("cpus", "32"),
         "protocol": (
-            "min-of-three after sf0.001 warm-up (graft.QTime, r12: timed "
+            "min-of-three after sf0.001 warm-up (graft.Bench, r12: timed "
             "action is collect() - the full-result materialization the "
             "DuckDB side always paid; count()-timed rounds <=11 excluded "
             "value-expression evaluation, see SURVEY \u00a78g) / min-of-two "

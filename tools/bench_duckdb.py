@@ -6,7 +6,9 @@ set it the same way).
 
 Usage: bench_duckdb.py <sfDir> <oracle_sql.json> <q1,q2,...> [--threads N]
 Prints one JSON object {"sf":…, "queries":{name:{"sec":…,"rows":…}}}.
-Min-of-two protocol, matching graft.Bench/QTime.
+Min-of-two fetchall() timings, the analogue of graft.Bench's min-of-N
+collect() passes; tools/assemble_scale_bench.py pairs this output with
+Bench's artifact (its "queries" seconds and "rows" counts).
 """
 import sys, json, time, os
 import duckdb
