@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables.
   *
@@ -55,6 +55,9 @@ object Tables {
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
   def events(s: SparkSession, d: String): DataFrame    = normalizeEventTs(t(s, d, "events"))
+  /** [[events]] over its raw `schema`, already read: no inference job. */
+  def events(s: SparkSession, d: String, schema: StructType): DataFrame =
+    normalizeEventTs(s.read.schema(schema).parquet(s"$d/events.parquet"))
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }

@@ -5,7 +5,9 @@ import java.util.regex.Pattern
 import scala.collection.immutable.ListMap
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.MakeDate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** One session record of a post: its 1-based index and the reference
   * record's key→value map, in entry order. */
@@ -99,18 +101,15 @@ object WodRealText {
     * `text` (groups 1–4). A text with no match, an unknown month or a
     * day outside its month (feb-30) gives null — the reference's
     * try/except → fallback — where ANSI mode's make_date would throw:
-    * each day is bounds-checked against the month's last_day and
-    * applied via date_add to the (always-valid) first of month. */
+    * the dates are `MakeDate` in its non-failing mode, so the guard adds
+    * no expression to a plain make_date of the extracted groups. */
   private[etl] def dateRange(text: Column, pat: String): (Column, Column) = {
+    // try_cast: a text with no date extracts '' (and the ANSI cast
+    // would throw for the whole batch) — null falls through instead
+    def group(g: Int): Column = regexp_extract(text, pat, g).try_cast("int")
     val m = monthNum(regexp_extract(text, pat, 1))
-    val firstOfMonth = when(regexp_extract(text, pat, 4) =!= "" && m.isNotNull,
-      make_date(regexp_extract(text, pat, 4).cast("int"), m, lit(1)))
-    def day(group: Int): Column = {
-      // try_cast: a text with no date extracts '' (and the ANSI cast
-      // would throw for the whole batch) — null falls through instead
-      val n = regexp_extract(text, pat, group).try_cast("int")
-      when(n.between(1, dayofmonth(last_day(firstOfMonth))), date_add(firstOfMonth, n - 1))
-    }
+    def day(g: Int): Column = Bridge.columnOf(MakeDate(Bridge.expressionOf(group(4)),
+      Bridge.expressionOf(m), Bridge.expressionOf(group(g)), failOnError = false))
     (day(2), day(3))
   }
 

@@ -297,7 +297,7 @@ object CoreQueries {
   /** Top-level integer field extraction. `get_json_object` pays a
     * full streaming Jackson parse per row — 54 s for 10M tiny docs at
     * sf10, the r15 sweep's worst ratio (224× DuckDB's yyjson). The
-    * native byte-scan expression (plans.JsonLongField, semantics
+    * native byte scan (`graft_json_long`, plans.JsonLongField, semantics
     * spec-asserted equal to the Jackson path incl. nesting/escapes/
     * overflow) runs inside whole-stage codegen: 54 → ~1.7 s. */
   def qJsonExtract(s: SparkSession, d: String): DataFrame = {

@@ -405,10 +405,7 @@ object DedupOps {
     * path needs synthetic data to exercise). */
   private[operators] def bloomScreenFrom(docs: DataFrame, capacity: Long): DataFrame = {
     val bloom = docs.filter(!col("is_new")).stat.bloomFilter("h", capacity, 0.01)
-    val probe = org.apache.spark.sql.graft.Bridge.columnOf(
-      graft.plans.BloomMightContain(
-        org.apache.spark.sql.graft.Bridge.expressionOf(col("h")),
-        graft.plans.BloomHolder(bloom)))
+    val probe = graft.plans.Natives.bloomMightContain(col("h"), bloom)
     val oldIndex = docs.filter(!col("is_new"))
       .groupBy(col("h").as("h_old")).agg(count(lit(1)).as("n_old"))
     val newDocs = docs.filter(col("is_new"))

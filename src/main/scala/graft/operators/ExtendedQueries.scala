@@ -202,8 +202,8 @@ object ExtendedQueries {
       // DP. Never drops a qualifying pair (property-spec'd), so the
       // oracle is untouched.
       .filter(call_function("graft_bag_lb", col("pref_a"), col("pref_b")) <= 20)
-      // exact verification via the bit-parallel Myers expression
-      // (plans/Lev64.scala): the whole DP column lives in one machine
+      // exact verification via the bit-parallel Myers kernel
+      // (`graft_lev64`, plans/Lev64.scala): the whole DP column lives in one machine
       // word for these ≤60-char prefixes, ~15 word-ops per text symbol
       // vs the banded DP's ~2,600 cells — distances ≤20 come back
       // exact (oracle-identical), anything above collapses to -1 and
@@ -331,7 +331,7 @@ object ExtendedQueries {
     * bound check): one bounded-memory sweep per partition, distinct
     * union of surviving keys. r13: the summaries stream 64-bit shingle
     * HASHES from the native byte sweep (`graft_shingle_hashes`,
-    * plans/ShingleExprs.scala), not shingle strings — the r12 form
+    * plans/Tokens.scala), not shingle strings — the r12 form
     * tokenized, built and hashed a UTF8 string per window while its
     * exact sibling (textNgramsTop phase 1) had already moved to native
     * longs; at 100 TB the sketch lane was paying string costs the

@@ -49,7 +49,7 @@ object PretrainOps {
     * one doc-keyed shuffle and is linear. Same results; pick by the
     * corpus's document-length profile. */
   private def gopherBase(s: SparkSession, d: String): DataFrame = {
-    // native one-sweep token stats (plans/GramStatsExpr.scala): the
+    // native one-sweep token stats (`Tokens.gramStats`): the
     // array-HOF form interpreted O(distinct·tokens) per doc and was
     // the dominant honest-timed cost of the quality lane at sf10
     graft.plans.Natives.ensure(s)
@@ -104,7 +104,7 @@ object PretrainOps {
     * each n's grams inside the row, and only seven numbers per doc leave
     * the scan, so this runs at scan speed over 100 TB. */
   def textRepetition(s: SparkSession, d: String): DataFrame = {
-    // native gram stats (plans/GramStatsExpr.scala): one byte sweep
+    // native gram stats (`Tokens.gramStats`): one byte sweep
     // per n replaces the interpreted build-array/count-within-row HOF
     // chain
     graft.plans.Natives.ensure(s)
@@ -490,7 +490,7 @@ object PretrainOps {
   /** The fused gate's per-doc statistics (every signal the three
     * heuristics threshold, one scan, zero joins) behind the fused
     * keep verdicts. (The learned classifier derives its features from
-    * [[qmCounts]] — the same GramStatsExpr scan one step earlier,
+    * [[qmCounts]] — the same graft_gram_stats scan one step earlier,
     * before the display-rounding to 4-decimal fractions — so its
     * lane stays integer-exact end to end.) */
   private[operators] def qualityFracs(s: SparkSession, d: String): DataFrame = {
@@ -727,7 +727,7 @@ object PretrainOps {
   /** Raw per-document integer counts behind the learned classifier:
     * unigram stats (token count, distinct, top, summed char length,
     * stopword instances) and the 2-/3-gram repetition counts, one
-    * GramStatsExpr scan, domain ≥3 tokens (the repetition rules').
+    * graft_gram_stats scan, domain ≥3 tokens (the repetition rules').
     * Everything downstream of this table is integer arithmetic. */
   private[operators] def qmCounts(s: SparkSession, d: String): DataFrame = {
     graft.plans.Natives.ensure(s)

@@ -22,7 +22,7 @@ object SimilarityOps {
   private val K = 5
   private val NQ = 5 // query vectors: vec_id < NQ
 
-  /** Cosine via the native codegen'd expression (graft.plans
+  /** Cosine via the native `graft_cosine` (graft.plans
     * .CosineSimilarity) — one fused loop per row, no intermediate
     * arrays; accumulation order identical to the fold form. */
   private def cosine(s: SparkSession, a: Column, b: Column): Column = {
@@ -73,7 +73,7 @@ object SimilarityOps {
     * oracle-checkable. */
   /** Bit-string LSH signature from the md5-derived hyperplanes — shared
     * by the ANN bucketing and the dedup sub-bucketing. Native fused
-    * expression (plans.SignBits) since r15: the previous per-plane
+    * `graft_sign_bits` (plans.SignBits) since r15: the previous per-plane
     * `aggregate(zip_with(...))` folds were higher-order-function
     * machinery per element per plane — ~20 s of sim_ann_lsh's 20.7 s
     * sf10 wall for what is one tight loop's worth of work. Signatures
@@ -336,11 +336,11 @@ object SimilarityOps {
             .cast("long"))).as("qe"))
 
   /** Nearest-centroid assignment against literal centroids through the
-    * native [[graft.plans.KmArgmin]] expression — one fused K×dim
-    * integer loop per row inside whole-stage codegen, ties to the
+    * native `graft_km_argmin` ([[graft.plans.KmArgmin]]) — one fused
+    * K×dim integer loop per row inside whole-stage codegen, ties to the
     * lowest cid (the same order the oracle's row_number uses). The
     * composable array_min-over-structs form was measured at 98.8 s for
-    * the sf10 run (CodegenFallback higher-order functions, K
+    * the sf10 run (interpreted higher-order functions, K
     * intermediate arrays per row) and replaced by this — 5.7 s,
     * identical rows (the kmeans spec and oracle did not move). */
   private def kmAssign(s: SparkSession, pts: DataFrame,

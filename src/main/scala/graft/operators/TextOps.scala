@@ -105,7 +105,7 @@ object TextOps {
     * sf3, super-linear): the one plan that could not survive 100 TB.
     *
     * Phase 1 aggregates 64-bit shingle hashes (the native
-    * `graft_shingle_hashes` expression, plans/ShingleExprs.scala — one
+    * `graft_shingle_hashes`, plans/Tokens.scala — one
     * imperative byte sweep per doc, no token array, no string build,
     * no interpreted HOF dispatch): the Exchange moves fixed-width
     * (hash, count) pairs and the hash-aggregate probes longs, not UTF8
@@ -538,8 +538,8 @@ object TextOps {
     * templated text; the cheap member of the CCNet/Gopher filter
     * family next to [[textLogprob]]'s corpus-frequency fluency).
     *
-    * Map-only: the native `graft_token_entropy` expression
-    * (plans/EntropyExpr.scala) computes exact per-doc token counts and
+    * Map-only: the native `graft_token_entropy`
+    * (plans/Tokens.scala) computes exact per-doc token counts and
     * the entropy in ONE byte sweep per row — no token-stream explode,
     * no shuffle anywhere in the plan, so the signal runs at scan speed
     * over 100 TB. Contrast with the oracle's unnest + entropy()

@@ -1,14 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Cheap LOSSLESS lower bound on Levenshtein distance, used to screen
-  * candidate pairs before the O(len·k) banded DP (text_fuzzy_pairs'
-  * per-pair cost): every edit operation changes a string's character
+/** `graft_bag_lb(a, b)`: a cheap LOSSLESS lower bound on Levenshtein
+  * distance, used to screen candidate pairs before the O(len·k) banded
+  * DP (text_fuzzy_pairs' per-pair cost): every edit operation changes a string's character
   * multiset by at most 2 L1 units (substitution: −1 one symbol, +1
   * another) and its length by at most 1, so
   *
@@ -33,38 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * measured 5.8 s screened vs 8.4 s unscreened (Lab
   * fuzzy_lev64/_noscreen).
   */
-case class BagLowerBound(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"graft_bag_lb expects (string, string), got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-    }
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "graft_bag_lb"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    BagLowerBound.bound(a.asInstanceOf[UTF8String].getBytes,
-      b.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-       |${ev.value} = graft.plans.BagLowerBound.bound($a.getBytes(), $b.getBytes());
-     """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BagLowerBound =
-    copy(left = newLeft, right = newRight)
-}
-
 object BagLowerBound {
 
-  /** max(|Δlen|, ceil(L1(bag32(a), bag32(b)) / 2)) — see the class
+  /** max(|Δlen|, ceil(L1(bag32(a), bag32(b)) / 2)) — see the object
     * scaladoc for why this never exceeds the edit distance.
     *
     * Computed over CODE POINTS, not bytes (r17, per advice): Spark's
@@ -72,10 +39,10 @@ object BagLowerBound {
     * valid lower bound on non-ASCII input ('x' vs one 4-byte char:
     * lev = 1 but byte |Δlen| = 3). The loop decodes UTF-8 inline —
     * on ASCII input it is the old byte loop plus one branch. */
-  def bound(a: Array[Byte], b: Array[Byte]): Int = {
+  def bound(a: UTF8String, b: UTF8String): Int = {
     val h = new Array[Int](32)
-    val la = accumulate(a, h, +1)
-    val lb = accumulate(b, h, -1)
+    val la = accumulate(a.getBytes, h, +1)
+    val lb = accumulate(b.getBytes, h, -1)
     var l1 = 0
     var i = 0
     while (i < 32) { l1 += math.abs(h(i)); i += 1 }

@@ -1,17 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native codegen'd cosine similarity over two `array<float>` columns.
+/** `graft_cosine(a, b)`: cosine similarity of two `array<float>`
+  * columns, one fused loop per row.
   *
   * The composable form (`aggregate(zip_with(a, b, _*_), ...)`) allocates
   * an intermediate array per row and walks higher-order-function
-  * machinery per element; this expression emits a single fused loop
-  * into whole-stage codegen — the hot path of brute-force and
+  * machinery per element — the hot path of brute-force and
   * LSH-bucketed similarity search at scale.
   *
   * Accumulation is double, element order left-to-right — bit-identical
@@ -22,54 +18,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * truncating to the shorter length, emitting NaN/Infinity or reading
   * a NULL slot as 0.0 would diverge from any full-vector oracle
   * instead of signalling bad input (the fold form is NULL on a NULL
-  * element too). Both eval paths call one kernel,
-  * [[CosineSimilarity.cosine]].
+  * element too).
   */
-case class CosineSimilarity(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cosine expects two array<float> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = DoubleType
-
-  override def nullable: Boolean = true
-
-  override def prettyName: String = "graft_cosine"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val res = ctx.freshName("res")
-      s"""
-         |Object $res = graft.plans.CosineSimilarity.cosine($a, $b);
-         |if ($res == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ((Double) $res).doubleValue();
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarity =
-    copy(left = newLeft, right = newRight)
-}
-
 object CosineSimilarity {
 
-  /** The kernel both eval paths call: cos(x, y), or null for
-    * mismatched lengths, a zero norm or a NULL element. */
+  /** cos(x, y), or null for mismatched lengths, a zero norm or a NULL
+    * element. */
   def cosine(x: ArrayData, y: ArrayData): java.lang.Double = {
     val n = x.numElements()
     if (n != y.numElements()) return null

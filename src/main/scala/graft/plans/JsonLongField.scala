@@ -1,25 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native fast path for the hottest JSON shape a telemetry pipeline
-  * has: extracting ONE top-level integer field from small JSON
-  * objects. `get_json_object` routes every row through a streaming
+/** `graft_json_long(json, key)`: the fast path for the hottest JSON
+  * shape a telemetry pipeline has, extracting ONE top-level integer
+  * field from small JSON objects. `get_json_object` routes every row through a streaming
   * Jackson parse — measured 54 s for 10M tiny `{"k": NN}` documents at
   * sf10 while DuckDB's yyjson does the same in 0.24 s (224×, the
-  * single worst ratio in the r15 sweep). This expression is a single
-  * depth-aware byte scan (~GB/s) that stays inside whole-stage codegen
-  * via a static runtime helper, the RegExpExtract pattern.
+  * single worst ratio in the r15 sweep). This is a single depth-aware
+  * byte scan (~GB/s).
   *
   * Semantics — equal to `try_cast(get_json_object(col, '$.key') AS
   * bigint)` (spec-asserted against the Jackson path on the events
   * corpus plus adversarial documents; try_cast, not cast, because the
   * ANSI default makes a plain cast throw on non-integer values —
-  * NULL-on-malformed is this expression's posture):
+  * NULL-on-malformed is this function's posture):
   *  - only DEPTH-1 keys match (nested objects/arrays are skipped by
   *    depth tracking; key hits inside string values are skipped by
   *    string tracking, including backslash escapes);
@@ -33,56 +28,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *    precedes a LATER malformation (e.g. a trailing comma after it),
   *    this scan returns the value it already proved well-formed while
   *    the Jackson path NULLs the whole document — whole-document
-  *    validation would cost the full parse this expression exists to
+  *    validation would cost the full parse this scan exists to
   *    avoid, and no well-formed document is affected (spec-asserted:
   *    JsonLongFieldSpec covers both shapes);
   *  - values outside Long range → NULL (the string cast's posture).
   */
-case class JsonLongField(child: Expression, key: String)
-  extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if key.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"graft_json_long expects (string json, non-empty literal key), got " +
-        s"${child.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_json_long"
-
-  @transient private lazy val keyUtf8: Array[Byte] =
-    key.getBytes("UTF-8")
-
-  override protected def nullSafeEval(input: Any): Any =
-    JsonLongField.extract(input.asInstanceOf[UTF8String].getBytes, keyUtf8)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val keyRef = ctx.addReferenceObj("jsonKey", keyUtf8, "byte[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val res = ctx.freshName("res")
-      s"""
-         |Object $res = graft.plans.JsonLongField.extract($v.getBytes(), $keyRef);
-         |if ($res == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ((Long) $res).longValue();
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): JsonLongField =
-    copy(child = newChild)
-}
-
 object JsonLongField {
+
+  /** The field `key` (UTF-8 bytes) of `json`, or null. */
+  def extract(json: UTF8String, key: Array[Byte]): java.lang.Long = extract(json.getBytes, key)
 
   /** Depth-aware scan: find `"key"` at depth 1, outside strings, then
     * parse an optionally-signed integer after the colon. Returns a
-    * boxed Long or null (boxed so one static call serves both the
-    * value and the null flag in generated code). */
+    * boxed Long or null. */
   def extract(b: Array[Byte], key: Array[Byte]): java.lang.Long = {
     val n = b.length
     var i = 0

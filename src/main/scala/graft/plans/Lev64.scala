@@ -1,20 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Bit-parallel Levenshtein distance (Myers, JACM 1999: "A fast
-  * bit-vector algorithm for approximate string matching based on
-  * dynamic programming") for patterns of ≤ 64 symbols — the exact
+/** `graft_lev64(a, b, threshold)`: bit-parallel Levenshtein distance
+  * (Myers, JACM 1999: "A fast bit-vector algorithm for approximate
+  * string matching based on dynamic programming") for patterns of ≤ 64 symbols — the exact
   * shape of text_fuzzy_pairs' per-pair verification, where both sides
   * are ≤ 60-char prefixes. The whole DP column fits in one machine
   * word: each text symbol costs ~15 bitwise ops, so a 60×60 pair costs
   * ~900 word ops versus the ~2,600 cells (~15k ops) of the banded DP
   * behind `levenshtein(a, b, k)` — the sf10 fuzzy lane measured
-  * 510 s (r16, banded DP) → 22.1 s (r17, this expression; min across
+  * 510 s (r16, banded DP) → 22.1 s (r17, this kernel; min across
   * three windows, BENCH_SF10_R17 — DuckDB takes 274.5 s on the same
   * pairs, so the lane flipped from n/a-DuckDB-crash to a 12× Spark
   * win); sf3 119.5 → 5.5 s same-JVM, rows identical. The DP verification was
@@ -36,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (bytes ≡ code points; `UTF8String.isFullAscii` is one vectorized
   * scan) and the shorter side fits 64 symbols; anything else falls
   * back to `UTF8String.levenshteinDistance(other, threshold)` — the
-  * exact engine `levenshtein` itself uses — so the expression is
+  * exact engine `levenshtein` itself uses — so the function is
   * EXACT on every input, never approximate (property-spec'd against
   * levenshtein on random ASCII + multi-byte pairs and on every corpus
   * candidate pair).
@@ -45,35 +41,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * cleared by re-walking the pattern (m writes, not 256) — zero
   * allocation per row on the hot path.
   */
-case class Lev64(left: Expression, right: Expression, threshold: Int)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, StringType) if threshold >= 0 =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"graft_lev64 expects (string, string, non-negative int literal), got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}, $threshold")
-    }
-
-  override def dataType: DataType = IntegerType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "graft_lev64"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    Lev64.dist(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String], threshold)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"""
-       |${ev.value} = graft.plans.Lev64.dist($a, $b, $threshold);
-     """.stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Lev64 =
-    copy(left = newLeft, right = newRight)
-}
-
 object Lev64 {
 
   private val peqTL: ThreadLocal[Array[Long]] =
@@ -81,7 +48,7 @@ object Lev64 {
       override def initialValue(): Array[Long] = new Array[Long](256)
     }
 
-  /** Exact levenshtein(a, b) if ≤ threshold, else −1. See the class
+  /** Exact levenshtein(a, b) if ≤ threshold, else −1. See the object
     * scaladoc for the dispatch (Myers on ASCII ≤64, engine DP else). */
   def dist(a: UTF8String, b: UTF8String, threshold: Int): Int = {
     if (!a.isFullAscii || !b.isFullAscii)

@@ -1,6 +1,8 @@
 package graft.plans
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,9 +21,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * first).
   *
   * One instance per evaluated row; it holds the token boundaries and
-  * copies no bytes (a view shares the text's). The expressions built
-  * on it are CodegenFallback: their eval IS the tight loop, and
-  * generated Java would only relocate the same work.
+  * copies no bytes (a view shares the text's). The companion object
+  * holds the native text functions' kernels, each one sweep of a
+  * `Tokens` over the raw UTF-8 bytes: no token array, no string
+  * concat, no per-element dispatch of the higher-order-function forms
+  * they replace.
   */
 private[plans] final class Tokens(s: UTF8String) {
   private val base = s.getBaseObject
@@ -96,9 +100,163 @@ private[plans] final class Tokens(s: UTF8String) {
   }
 }
 
-private[plans] object Tokens {
+object Tokens {
   /** Spark's `xxhash64` seed. */
   final val Seed = 42L
+
+  /** `graft_gram_stats(text, n)` → struct(n_grams, n_distinct, top_cnt,
+    * dup_inst, sum_tok_len): per-document word-n-gram statistics in one
+    * pass — the Gopher-rule (n=1) and repetition-rule (n=2,3) inputs.
+    * The grams are the n-token windows and counts are the run lengths
+    * of [[Tokens.runs]]: O(m log m) per document, where the array-HOF
+    * form it replaced was O(distinct·tokens).
+    *  - n_grams     = max(tokens − n + 1, 0)  (= n_tokens for n = 1)
+    *  - n_distinct  = distinct grams
+    *  - top_cnt     = occurrences of the most frequent gram
+    *  - dup_inst    = n_grams − singleton grams (Σ_{c≥2} c)
+    *  - sum_tok_len = Σ CHARACTER length of tokens (n = 1 reading;
+    *                  mirrors `aggregate(tk, 0, (a,x) => a + length(x))`) */
+  def gramStats(text: UTF8String, n: Int): InternalRow = {
+    val t = new Tokens(text)
+    var chars = 0L
+    var i = 0
+    while (i < t.count) { chars += t.view(i, 1).numChars; i += 1 }
+    var distinct, top, singles = 0L
+    val m = t.runs(n) { (_, c) =>
+      distinct += 1
+      if (c > top) top = c
+      if (c == 1) singles += 1
+    }
+    InternalRow(m.toLong, distinct, top, m.toLong - singles, chars)
+  }
+
+  /** `graft_gram_hash_counts(text, n)` → array<struct<h1, h2, c>>: the
+    * document's distinct word-n-grams as xxhash64 keys with their
+    * within-document counts — the probe side of the LM fluency scores
+    * (TextOps.textLogprob / textBigramLogprob), which streams
+    * distinct-gram rows instead of exploding every token instance.
+    *  - n = 1: h1 = xxhash64(tk(i)), h2 = 0 (unused)
+    *  - n = 2: h1 = xxhash64(tk(i)), h2 = xxhash64(tk(i), tk(i+1))
+    * Elements come in token-wise window order. Counting is exact window
+    * equality ([[Tokens.runs]]), NOT hash equality: a hash collision
+    * merges keys in the count table exactly as in the declarative
+    * form, never silently here. */
+  def gramHashCounts(text: UTF8String, n: Int): ArrayData = {
+    require(n == 1 || n == 2, s"graft_gram_hash_counts supports n=1|2, got $n")
+    val t = new Tokens(text)
+    val out = new java.util.ArrayList[InternalRow](math.min(t.count, 1 << 16))
+    t.runs(n) { (v, c) =>
+      val w = t.indexOf(v)
+      out.add(InternalRow(t.hash(w, 1), if (n == 2) t.hash(w, 2) else 0L, c)): Unit
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  // "qm:" in UTF-8 — the hash-family salt the declarative form concats
+  private val QmPrefix = Array[Byte](0x71, 0x6d, 0x3a)
+
+  /** `graft_qm_buckets(text, nBuckets)` → array<long>[nBuckets + 1]:
+    * the quality model's hashed bag-of-words counts — slots
+    * 0..nBuckets−1 hold per-bucket token-instance counts, the last slot
+    * the nonempty-token count. Bit-identical to the declarative form
+    *
+    *   explode(split(text, ' ')) → filter(tok <> '') →
+    *   conv(substring(md5('qm:' || tok), 1, 8), 16, 10) % nBuckets →
+    *   groupBy(doc_id) pivot-count
+    *
+    * (the DuckDB oracle mirrors it): md5 runs over the UTF-8 bytes of
+    * "qm:" + token, and the first 8 hex chars of the digest are the
+    * first 4 digest bytes read as an unsigned big-endian 32-bit value.
+    * It exists for the scan shape: fused into the same projection as
+    * graft_gram_stats, the whole per-doc feature row is one map-side
+    * pass, with no token explode, shuffle or join back (r21). */
+  def qmBuckets(text: UTF8String, nBuckets: Int): ArrayData = {
+    require(nBuckets >= 1, s"graft_qm_buckets needs nBuckets >= 1, got $nBuckets")
+    val bytes = text.getBytes
+    val out = new Array[Long](nBuckets + 1)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val t = new Tokens(text)
+    var i = 0
+    while (i < t.count) {
+      if (t.end(i) > t.start(i)) {
+        md.reset()
+        md.update(QmPrefix)
+        md.update(bytes, t.start(i), t.end(i) - t.start(i))
+        val d = md.digest()
+        val v = ((d(0) & 255L) << 24) | ((d(1) & 255L) << 16) |
+          ((d(2) & 255L) << 8) | (d(3) & 255L)
+        out((v % nBuckets).toInt) += 1L
+        out(nBuckets) += 1L
+      }
+      i += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  private val Log2 = math.log(2.0)
+
+  /** `graft_token_entropy(text)` → double: Shannon entropy (base 2) of
+    * the document's token distribution — the lexical-diversity quality
+    * signal (low entropy ⇒ repetitive/templated text). The oracle's
+    * `entropy(unnest(string_split(...)))` sees the identical multiset.
+    * H = log2(N) − Σ c·log2(c) / N over the EXACT counts of
+    * [[Tokens.runs]] — no hashing, so no collision caveat; the only
+    * doubles are the final logs. */
+  def entropy(text: UTF8String): Double = {
+    val t = new Tokens(text)
+    var acc = 0.0
+    t.runs(1) { (_, c) => if (c > 1) acc += c * math.log(c.toDouble) }
+    math.log(t.count.toDouble) / Log2 - acc / (t.count * Log2)
+  }
+
+  /** `graft_shingle_hashes(text)` → array<long>: the DISTINCT
+    * `xxhash64(t(i), t(i+1), t(i+2))` of every 3-token window — the
+    * per-document df contract of the shingle family
+    * (DedupOps.shingleRows, TextOps.textNgramsTop). Dedup is a sort +
+    * run-skip over primitive longs — no boxing, no set. */
+  def shingleHashes(text: UTF8String): ArrayData = {
+    val t = new Tokens(text)
+    val hashes = Array.tabulate(math.max(t.count - 2, 0))(t.hash(_, 3))
+    java.util.Arrays.sort(hashes)
+    var n = 0
+    var i = 0
+    while (i < hashes.length) {
+      if (i == 0 || hashes(i) != hashes(i - 1)) { hashes(n) = hashes(i); n += 1 }
+      i += 1
+    }
+    new GenericArrayData(java.util.Arrays.copyOf(hashes, n))
+  }
+
+  /** `graft_token_hashes(text)` → array<long>: `xxhash64(tok)` of EVERY
+    * token, in order, duplicates preserved — the probe stream of the
+    * unigram-LM scoring join (TextOps.textLogprob). It equals `xxhash64`
+    * over the `split` tokens, so the count side and the probe side can
+    * mix forms freely. */
+  def tokenHashes(text: UTF8String): ArrayData = {
+    val t = new Tokens(text)
+    new GenericArrayData(Array.tabulate(t.count)(t.hash(_, 1)))
+  }
+
+  /** `graft_candidate_shingles(text, candidates)` → array<string>: the
+    * DISTINCT 3-token shingle STRINGS of `text`,
+    * `concat_ws(' ', t(i), t(i+1), t(i+2))`, whose window hash (as in
+    * [[shingleHashes]]) is in `sortedCands`, the driver-collected
+    * candidate hashes sorted once at analysis. Strings materialize ONLY
+    * for matching windows — a copy of the contiguous view, no concat. */
+  def candidateShingles(text: UTF8String, sortedCands: Array[Long]): ArrayData = {
+    val t = new Tokens(text)
+    var out: java.util.LinkedHashSet[UTF8String] = null
+    var w = 0
+    while (w < t.count - 2) {
+      if (java.util.Arrays.binarySearch(sortedCands, t.hash(w, 3)) >= 0) {
+        if (out == null) out = new java.util.LinkedHashSet[UTF8String]()
+        out.add(t.view(w, 3).copy()): Unit
+      }
+      w += 1
+    }
+    if (out == null) new GenericArrayData(Array.empty[Any])
+    else new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
+  }
 
   /** Token-wise lexicographic order of two windows of k tokens each:
     * unsigned byte order with the separator below every other byte, so

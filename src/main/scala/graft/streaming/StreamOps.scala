@@ -45,8 +45,8 @@ object StreamOps {
     * oracle mirrors with an explicit CASE that NULLs the horizon when
     * either per-type max is NULL — a NULL comparison then admits no
     * null-lane rows, matching None here. */
-  private def joinHorizonUs(s: SparkSession, d: String): Option[Long] = {
-    val r = Tables.events(s, d)
+  private def joinHorizonUs(events: DataFrame): Option[Long] = {
+    val r = events
       .agg(max(when(col("event_type") === "view", expr("ts div 1000"))).as("mv"),
            max(when(col("event_type") === "purchase", expr("ts div 1000"))).as("mp"))
       .head()
@@ -226,10 +226,9 @@ object StreamOps {
         col("n_name").as("nation"), col("n_events"), col("sum_value")), "enrich")
   }
 
-  /** The views/purchases split of two separate events sources, each
+  /** The views/purchases split of two separate sources of `src`, each
     * watermarked 1 h — the inputs of [[Streams.joinViewsPurchases]]. */
-  private def viewsPurchasesJoin(s: SparkSession, d: String, how: String): DataFrame = {
-    val src = Streams.events(s, d)
+  private def viewsPurchasesJoin(src: () => DataFrame, how: String): DataFrame = {
     val views = src().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
         col("event_time").as("v_time"))
@@ -251,7 +250,7 @@ object StreamOps {
     * join window produces no pair and state row counts shrink). */
   def streamJoin(s: SparkSession, d: String): DataFrame =
     // parquet sink: the matched-pair stream is O(table)
-    Streams.toParquet(viewsPurchasesJoin(s, d, "inner").drop("p_us", "v_us"), "sjoin")
+    Streams.toParquet(viewsPurchasesJoin(Streams.events(s, d), "inner").drop("p_us", "v_us"), "sjoin")
 
   /** LEFT-OUTER stream-stream join with an EMISSION HORIZON — the
     * "which purchases had no view?" completion of [[streamJoin]].
@@ -309,14 +308,17 @@ object StreamOps {
     * horizon — rows emit as the watermark advances). Inner pairs always;
     * a null-lane row only at or below the horizon (a left-outer join
     * has no unmatched-view rows, so its view clause never holds). A
-    * MISSING side admits no null-lane rows at all (see joinHorizonUs). */
+    * MISSING side admits no null-lane rows at all (see joinHorizonUs).
+    * The sources and the horizon share one read of the events schema
+    * (each read is a Spark job). */
   private def outerJoin(s: SparkSession, d: String, how: String, prefix: String): DataFrame = {
+    val schema = Tables.eventsRaw(s, d).schema
     val inner = col("view_id") =!= -1L && col("purchase_id") =!= -1L
-    val provable = joinHorizonUs(s, d).fold(lit(false)) { h =>
+    val provable = joinHorizonUs(Tables.events(s, d, schema)).fold(lit(false)) { h =>
       (col("view_id") === -1L && col("p_us") <= h) ||
         (col("purchase_id") === -1L && col("v_us") <= h)
     }
-    Streams.toParquet(viewsPurchasesJoin(s, d, how), prefix)
+    Streams.toParquet(viewsPurchasesJoin(Streams.events(s, d, schema), how), prefix)
       .filter(inner || provable).drop("p_us", "v_us")
   }
 

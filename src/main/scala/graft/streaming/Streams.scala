@@ -4,6 +4,7 @@ import graft.{GraftSession, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** How graft runs a stream, in one place: the events file source, the
   * AvailableNow foreachBatch drain every lane completes through, and
@@ -64,11 +65,13 @@ object Streams {
     * source's default read limit is all-available, so an AvailableNow
     * drain takes each source's files in ONE micro-batch —
     * stream_dedup's exact-distinct oracle relies on that. */
-  def events(s: SparkSession, d: String): () => DataFrame = {
-    val schema = Tables.eventsRaw(s, d).schema
+  def events(s: SparkSession, d: String): () => DataFrame =
+    events(s, d, Tables.eventsRaw(s, d).schema)
+
+  /** [[events]] over the table's raw `schema`, already read. */
+  def events(s: SparkSession, d: String, schema: StructType): () => DataFrame =
     () => Tables.normalizeEventTs(s.readStream.schema(schema).parquet(streamDir(d, "events")))
       .withColumn("event_time", timestamp_micros(expr("ts div 1000")))
-  }
 
   /** Drive `df` to completion: AvailableNow (a finite call; a continuous
     * deployment would use a processing-time trigger with the same

@@ -1,10 +1,10 @@
 package graft.operators
 
 import graft.SparkTestBase
-import graft.plans.GramStats
 import org.apache.spark.graft.BusDrain
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -53,7 +53,7 @@ class GramDomainSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     finally spark.listenerManager.unregister(listener)
     plans.synchronized(plans.toSeq).map { qe =>
       flatMap(qe.executedPlan)(_.expressions.flatMap(_.collect {
-        case g: GramStats if g.right == Literal(3) => g
+        case g: StaticInvoke if g.functionName == "gramStats" && g.arguments(1) == Literal(3) => g
       })).size
     }.sum
   }

@@ -46,10 +46,7 @@ class GraphMvBloomSpec extends SparkTestBase {
         sha2(col("text"), 256).as("h"))
     val bloom = docs.filter(!col("is_new"))
       .stat.bloomFilter("h", 1000L, 0.01)
-    val probe = org.apache.spark.sql.graft.Bridge.columnOf(
-      graft.plans.BloomMightContain(
-        org.apache.spark.sql.graft.Bridge.expressionOf(col("h")),
-        graft.plans.BloomHolder(bloom)))
+    val probe = graft.plans.Natives.bloomMightContain(col("h"), bloom)
     val newDocs = docs.filter(col("is_new"))
     val nNew = newDocs.count()
     val nCand = newDocs.filter(probe).count()

@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Static lint over `src/main`: the `Natives` table is the only place
-  * that defines or registers a native function. */
+  * that defines or registers a native function, and a scalar native has
+  * one shape — a kernel method planned as a `StaticInvoke` — so no
+  * hand-written scalar expression or second eval path comes back. */
 class NativesLintSpec extends AnyFunSuite {
 
   private def sources(dir: String): Seq[Path] = {
@@ -32,4 +34,12 @@ class NativesLintSpec extends AnyFunSuite {
     assert(!ext.contains("\"graft_") && !ext.contains("FunctionIdentifier"),
       "GraftExtensions must inject Natives.all, not build its own entries")
   }
+
+  for (needle <- Seq("doGenCode", "CodegenFallback", "extends UnaryExpression",
+      "extends BinaryExpression"))
+    test(s"no file in src/main contains `$needle`") {
+      val hits = sources("src/main/scala").filter(p => text(p).contains(needle))
+        .map(_.getFileName.toString)
+      assert(hits.isEmpty, hits.mkString(", "))
+    }
 }

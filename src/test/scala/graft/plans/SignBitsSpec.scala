@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.SparkTestBase
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 
@@ -29,8 +29,8 @@ class SignBitsSpec extends SparkTestBase {
   }
 
   test("null element or wrong length yields NULL via interpreted eval") {
-    val e = SignBits(BoundReference(0, ArrayType(FloatType, containsNull = true),
-      nullable = true), 4, 2)
+    val e = NativesEvalSpec.node("graft_sign_bits", BoundReference(0,
+      ArrayType(FloatType, containsNull = true), nullable = true), Literal(4), Literal(2)).replacement
     def ev(elems: Array[Any]): Any =
       e.eval(InternalRow(new GenericArrayData(elems)))
     val clean = ev(Array[Any](1.0f, -2.0f))
